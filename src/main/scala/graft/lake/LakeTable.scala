@@ -932,6 +932,18 @@ class LakeTable private (val spark: SparkSession, val path: String) {
   /** Keyed upsert with precombine resolution (Hudi `upsert`, reference
     * package.scala:23 + HudiConfig.scala:45-48).
     *
+    * Delete rows: a batch may carry a boolean [[LakeTable.DeletedCol]]
+    * column (Hudi's `_hoodie_is_deleted`). A row whose flag is true
+    * removes its key unconditionally, whatever the stored row's
+    * precombine value (the same contract as [[delete]]); a delete for a
+    * key that does not exist writes nothing. A CDC batch therefore
+    * lands as ONE commit: COW tags and rewrites the matched files once,
+    * MOR appends one delta whose delete rows are tombstones (in files
+    * of their own, the shape [[delete]] writes). Inside the batch a
+    * delete row resolves by precombine like any other row (a null
+    * precombine sorts lowest). A batch without the column runs the
+    * plain upsert plan.
+    *
     * @param combine dedup the batch by key first (keep max precombine) —
     *   Hudi's `combine.before.upsert`. Pass false ONLY when the batch is
     *   known key-unique (e.g. already windowed/deduped upstream): it
@@ -949,65 +961,103 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * versions by (precombine, commit time).
     */
   def upsert(data: DataFrame, extra: Map[String, String] = Map.empty,
-      combine: Boolean = true): String = {
+      combine: Boolean = true): String =
+    upsertOrSkip(data, extra, combine, commitEmpty = true).get
+
+  /** [[upsert]] that publishes nothing for a batch without rows (None) —
+    * the CDC routers' "no ops, no commit" contract, decided by the bounds
+    * pass the upsert runs anyway instead of a separate emptiness probe.
+    */
+  private[graft] def upsertNonEmpty(data: DataFrame,
+      combine: Boolean): Option[String] =
+    upsertOrSkip(data, Map.empty, combine, commitEmpty = false)
+
+  private def upsertOrSkip(data: DataFrame, extra: Map[String, String],
+      combine: Boolean, commitEmpty: Boolean): Option[String] = {
     // visibleInstants, not instants: an in-doubt txn commit's data was
     // invisible to this plan, so if it decides committed it must be a
     // conflict CANDIDATE at publish, not part of the baseline
     val visible = timeline.visibleInstants().toSet
     val instant = timeline.reserveInstant()
-    try upsertReserved(data, extra, combine, instant, visible)
+    try upsertReserved(data, extra, combine, instant, visible, commitEmpty)
     finally timeline.releaseReservation(instant)
   }
 
   private[graft] def upsertReserved(data: DataFrame, extra: Map[String, String],
-      combine: Boolean, instant: String, visible: Set[String]): String = {
-    val aligned = alignUser(data)
-    val userCols = aligned.columns.toSeq
+      combine: Boolean, instant: String, visible: Set[String],
+      commitEmpty: Boolean = true): Option[String] = {
+    // delete rows (see [[upsert]]): the flag rides through alignment as
+    // the meta column; without it the plan below is the plain upsert
+    val marked = data.columns.contains(DeletedCol)
+    val aligned = alignUser(data, keepDeleted = marked)
+    val userCols = aligned.columns.toSeq.filterNot(_ == DeletedCol)
     val fieldOrder = userCols :+ CommitTimeCol :+ DeletedCol
+    val pc = _meta.precombineField
     // within-batch precombine dedup: keep the max-precombine row per key.
     // max_by aggregates with partial (map-side) combine — cheaper at scale
-    // than the window-function formulation.
+    // than the window-function formulation. max_by skips null orderings,
+    // so a delete row without a precombine value orders by struct (null
+    // lowest) rather than vanishing.
     val keyed = withMeta(aligned, instant)
+    val order = if (marked) struct(col(pc)) else col(pc)
     val incoming = (if (!combine) keyed
       else keyed
         .groupBy(col(RecordKeyCol))
-        .agg(max_by(struct(fieldOrder.map(col): _*), col(_meta.precombineField)).as("_s"))
+        .agg(max_by(struct(fieldOrder.map(col): _*), order).as("_s"))
         .select(col(RecordKeyCol) +: fieldOrder.map(c => col(s"_s.`$c`").as(c)): _*))
       .persist(StorageLevel.MEMORY_AND_DISK) // reference Y2, package.scala:66
+    def commitNothing(): Unit = timeline.withLock() {
+      timeline.commit(CommitMeta(instant, "upsert", Seq.empty, Seq.empty, extra))
+    }
     try {
-      val (nRows, mnKey, mxKey) = batchBounds(incoming)
+      val (nRows, mnKey, mxKey, nDel) = batchBounds(incoming, marked)
       if (nRows == 0) {
-        timeline.withLock() {
-          timeline.commit(
-            CommitMeta(instant, "upsert", Seq.empty, Seq.empty, extra))
-        }
-        return instant
+        if (!commitEmpty) return None
+        commitNothing()
+        return Some(instant)
       }
+      val isDel = col(DeletedCol)
+      def live(df: DataFrame) = if (marked) df.filter(!isDel) else df
       if (_meta.tableType == "mor") {
         // merge-on-read: append the deduped batch as delta files — no
         // matched-file lookup, no rewrite; readers resolve by key. This
         // is the cheap-write path the reference selects with
         // tableType=MOR (MSK2Hudi.scala:42, HudiConfig.scala:17-26).
         // Appends never conflict (concurrent versions of a key resolve
-        // by precombine/commit-time at read).
-        val staging = writeStaging(incoming, instant)
+        // by precombine/commit-time at read). Delete rows become
+        // tombstones, staged by a write of their own: a file reporting
+        // tombstones is never a victim of replaceWhere, partition
+        // overwrite or scoped compaction, so it must hold no live rows.
+        val tombs = tombstoneRows(incoming.filter(isDel), instant)
+        val staging =
+          if (nDel == 0) writeStaging(incoming, instant)
+          else if (nDel == nRows) writeStaging(tombs, instant)
+          else writeStaging(tombs, instant,
+            into = Some(writeStaging(live(incoming), instant)))
         publishOptimistic(instant, staging, "deltacommit", "delta",
           Seq.empty, extra, visible = None, () => maybeCompactInline())
-        return instant
+        return Some(instant)
       }
       val matched = matchedFiles(
         incoming.select(
           (RecordKeyCol +: _meta.recordKeyFields).distinct.map(col): _*),
         mnKey, mxKey, nRows)
+      if (matched.isEmpty && nDel == nRows) {
+        // only deletes, and none of their keys exists: nothing to write
+        commitNothing()
+        return Some(instant)
+      }
       val out =
-        if (matched.isEmpty) incoming
+        if (matched.isEmpty) live(incoming)
         else {
-          val pc = _meta.precombineField
           val eS = readFiles(matched)
             .select(col(RecordKeyCol), struct(fieldOrder.map(col): _*).as("e"))
           val iS = incoming
             .select(col(RecordKeyCol), struct(fieldOrder.map(col): _*).as("i"))
-          val winner = when(col("i").isNull, col("e"))
+          val kept = when(col("i").isNull, col("e"))
+          // a delete row removes its key whatever the stored precombine
+          val winner = (if (marked) kept.when(col(s"i.`$DeletedCol`"), lit(null))
+              else kept)
             .when(col("e").isNull, col("i"))
             .when(col(s"e.`$pc`") > col(s"i.`$pc`"), col("e"))
             .otherwise(col("i")).as("r")
@@ -1029,19 +1079,21 @@ class LakeTable private (val spark: SparkSession, val path: String) {
                 .join(broadcast(incoming.select(col(RecordKeyCol))),
                   Seq(RecordKeyCol), "left_semi")
                 .distinct()
+              val iNew =
+                if (marked) iS.filter(!col(s"i.`$DeletedCol`")) else iS
               eS.join(broadcast(iS), Seq(RecordKeyCol), "left")
                 .select(col(RecordKeyCol), winner)
                 .unionAll(
-                  iS.join(broadcast(hitKeys), Seq(RecordKeyCol), "left_anti")
+                  iNew.join(broadcast(hitKeys), Seq(RecordKeyCol), "left_anti")
                     .select(col(RecordKeyCol), col("i").as("r")))
             }
-          mergedKeyed
+          (if (marked) mergedKeyed.filter(col("r").isNotNull) else mergedKeyed)
             .select(col(RecordKeyCol) +: fieldOrder.map(c => col(s"r.`$c`").as(c)): _*)
         }
       val staging = writeStaging(out, instant)
       publishOptimistic(instant, staging, "upsert", "base", matched, extra,
         Some(visible))
-      instant
+      Some(instant)
     } finally incoming.unpersist()
   }
 
@@ -1058,6 +1110,10 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * MOR upsert (Hudi's delete blocks in log files). Readers drop every
     * row version at or before the tombstone; a later upsert of the key
     * revives it; compaction physically removes tombstoned rows.
+    *
+    * A batch that mixes changes and deletes (a CDC micro-batch) should
+    * not call this after an [[upsert]]: upsert `_deleted` rows apply
+    * both in one commit, with one tagging pass and one rewrite.
     */
   def delete(data: DataFrame, extra: Map[String, String] = Map.empty): String = {
     val visible = timeline.visibleInstants().toSet
@@ -1069,7 +1125,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
   private def deleteReserved(data: DataFrame, extra: Map[String, String],
       instant: String, visible: Set[String]): String = {
     if (_meta.tableType == "mor") {
-      val u = userSchema.getOrElse {
+      if (userSchema.isEmpty) {
         // nothing ever written ⇒ nothing to delete (same no-op contract
         // as the COW path on an empty table)
         timeline.withLock() {
@@ -1081,10 +1137,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
       val keyed =
         if (data.columns.contains(RecordKeyCol)) data.select(col(RecordKeyCol))
         else withKeyCol(data).select(col(RecordKeyCol))
-      val tomb = keyed.distinct().select(
-        u.fields.toIndexedSeq.map(f => lit(null).cast(f.dataType).as(f.name)) ++
-          Seq(col(RecordKeyCol), lit(instant).as(CommitTimeCol),
-            lit(true).as(DeletedCol)): _*)
+      val tomb = tombstoneRows(keyed.distinct(), instant)
       // tombstone append: conflict-free like any MOR delta (a concurrent
       // upsert of the same key lands before or after the barrier — both
       // are valid serializations of concurrent ops)
@@ -1095,7 +1148,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     }
     val keys = withKeyOnly(data).persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val (nKeys, mnKey, mxKey) = batchBounds(keys)
+      val (nKeys, mnKey, mxKey, _) = batchBounds(keys)
       val matched =
         if (nKeys == 0) Seq.empty
         else matchedFiles(keys, mnKey, mxKey, nKeys)
@@ -1121,6 +1174,16 @@ class LakeTable private (val spark: SparkSession, val path: String) {
       instant
     } finally keys.unpersist()
   }
+
+  /** MOR delete markers for the keys of `keys` (a frame carrying the
+    * record key): user columns null, `_deleted = true` — the rows
+    * [[tombstoneBarrier]] reads and `FileStat.tombstones` counts.
+    */
+  private def tombstoneRows(keys: DataFrame, instant: String): DataFrame =
+    keys.select(userSchema.get.fields.toIndexedSeq
+      .map(f => lit(null).cast(f.dataType).as(f.name)) ++
+      Seq(col(RecordKeyCol), lit(instant).as(CommitTimeCol),
+        lit(true).as(DeletedCol)): _*)
 
   /** MOR table service: merge base + delta into fresh base files
     * (Hudi compaction; inline cadence per `inlineCompactMax`, reference
@@ -1196,9 +1259,9 @@ class LakeTable private (val spark: SparkSession, val path: String) {
         lastAsyncService = LakeTable.serviceExecutor.submit(new Runnable {
           def run(): Unit =
             try timeline.withLock() { compactDebtLocked() }
-            catch { case e: Throwable => System.err.println(
-              s"[graft-lake] async compaction of $tablePath failed: " +
-                e.getMessage)
+            catch { case e: Throwable =>
+              // kept for [[awaitTableServices]]: the first failure wins
+              asyncServiceFailure.compareAndSet(null, e); ()
             } finally asyncServicePending.set(false)
         })
       }
@@ -1236,13 +1299,20 @@ class LakeTable private (val spark: SparkSession, val path: String) {
   private val asyncServicePending =
     new java.util.concurrent.atomic.AtomicBoolean(false)
   @volatile private var lastAsyncService: java.util.concurrent.Future[_] = _
+  private val asyncServiceFailure =
+    new java.util.concurrent.atomic.AtomicReference[Throwable]()
 
   /** Block until the currently-pending async table service (if any) has
     * finished — tests and orderly shutdown; ingest never calls this.
+    * Rethrows the first async service failure since the last call (the
+    * failed job's commit never published; the debt stays and re-triggers
+    * on the next commit).
     */
   def awaitTableServices(): Unit = {
     val f = lastAsyncService
-    if (f != null) { try { f.get(); () } catch { case _: Exception => () } }
+    if (f != null) f.get()
+    val failed = asyncServiceFailure.getAndSet(null)
+    if (failed != null) throw failed
   }
 
   /** Table service: small-file bin-packing (the OPTIMIZE/file-sizing
@@ -1854,9 +1924,10 @@ class LakeTable private (val spark: SparkSession, val path: String) {
   }
 
   /** Merge a branch's net changes since the fork back into this table:
-    * one upsert of the branch's current versions of changed keys + one
-    * delete of branch-deleted keys, derived from the branch's OWN change
-    * feed — O(branch-changed rows), never a table diff.
+    * ONE upsert commit carrying the branch's current versions of changed
+    * keys and `_deleted` rows for branch-deleted keys, derived from the
+    * branch's OWN change feed — O(branch-changed rows), never a table
+    * diff.
     *
     * With `failOnConflict` (default), keys changed on BOTH sides since
     * the fork abort the merge (the Nessie/git contract); without it the
@@ -1865,8 +1936,8 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * table still holds the fork-time version, which the branch's write
     * already superseded under the same ordering.
     *
-    * Returns the last merge commit, or None when the branch has no
-    * changes since `forkInstant`.
+    * Returns the merge commit, or None when the branch has no changes
+    * since `forkInstant`.
     */
   def mergeFrom(branch: LakeTable, forkInstant: String,
       failOnConflict: Boolean = true): Option[String] = {
@@ -1882,8 +1953,8 @@ class LakeTable private (val spark: SparkSession, val path: String) {
       s"not a branch forked from this table at $forkInstant " +
         s"(genesis: ${gMeta.operation} ${gMeta.extra})")
     // materialize the feed ONCE: it is a multi-join job over snapshot
-    // files, and the emptiness probe, conflict semi-join, and the two
-    // writes below would otherwise each recompute it (4x). Sized
+    // files, and the emptiness probe, conflict semi-join, and the write
+    // below would otherwise each recompute it (3x). Sized
     // O(branch-changed rows) by construction, so the local materialize
     // is a sliver, not a table
     val ch = branch.changes(genesis)
@@ -1901,15 +1972,10 @@ class LakeTable private (val spark: SparkSession, val path: String) {
         s"merge conflict: keys changed on both sides since $forkInstant, " +
           s"e.g. ${conflicts.map(_.toSeq.mkString("(", ",", ")")).mkString(" ")}")
     }
-    val upserts = ch.filter(
-      col(ChangeTypeCol).isin("insert", "update_postimage"))
-      .drop(ChangeTypeCol, ChangeCommitCol)
-    val deletes = ch.filter(col(ChangeTypeCol) === "delete")
-      .drop(ChangeTypeCol, ChangeCommitCol)
-    var last: Option[String] = None
-    if (!upserts.isEmpty) last = Some(upsert(upserts, combine = false))
-    if (!deletes.isEmpty) last = Some(delete(deletes))
-    last
+    // one key per row (the net feed minus preimages): inserts and
+    // postimages upsert, branch deletes ride along as `_deleted` rows
+    Some(upsert(ch.withColumn(DeletedCol, col(ChangeTypeCol) === "delete")
+      .drop(ChangeTypeCol, ChangeCommitCol), combine = false))
   }
 
   /** Physical data-file deletion, branch-safe: externally referenced
@@ -2361,8 +2427,17 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     *  - otherwise existing columns are cast to the stored type (the table
     *    schema is authoritative; narrowing never drifts it).
     */
-  private def alignUser(data: DataFrame): DataFrame = {
-    val clean0 = data.drop(RecordKeyCol, CommitTimeCol, DeletedCol)
+  private def alignUser(data: DataFrame,
+      keepDeleted: Boolean = false): DataFrame = {
+    // `keepDeleted`: the upsert's delete flag rides along as a boolean
+    // after the user columns; it never enters the user schema
+    val clean0 =
+      if (keepDeleted) data.drop(RecordKeyCol, CommitTimeCol)
+      else data.drop(RecordKeyCol, CommitTimeCol, DeletedCol)
+    val flag =
+      if (keepDeleted) Seq(coalesce(col(DeletedCol).cast(BooleanType),
+        lit(false)).as(DeletedCol))
+      else Nil
     // a batch still carrying a column's PRE-RENAME name (e.g. a lagging
     // CDC stream) writes into the current name
     val renameLookup = _meta.renamedFrom.toSeq
@@ -2379,9 +2454,9 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     // value deterministically for the directory layout.
     val clean = _meta.partitionDerivations.keys
       .foldLeft(renamed)((d, c) => d.drop(c))
+    val incoming = StructType(clean.schema.filterNot(_.name == DeletedCol))
     userSchema match {
       case Some(s) =>
-        val incoming = clean.schema
         val (newFields, widened) = schemaDelta(s, incoming)
         val evolved =
           if (newFields.isEmpty && widened.toSeq == s.fields.toSeq) s
@@ -2395,12 +2470,12 @@ class LakeTable private (val spark: SparkSession, val path: String) {
             throw new IllegalArgumentException(
               s"batch is missing required column ${f.name}")
           else lit(null).cast(f.dataType).as(f.name)
-        } match { case cols => clean.select(cols: _*) }
+        } match { case cols => clean.select(cols ++ flag: _*) }
       case None =>
-        evolveSchemaLocked(clean.schema)
+        evolveSchemaLocked(incoming)
         // realign: a concurrent first writer may have captured first —
         // the recursion hits the Some branch with the schema now settled
-        alignUser(data)
+        alignUser(data, keepDeleted)
     }
   }
 
@@ -2477,9 +2552,12 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * null key column are dropped (reference generates the same filter,
     * genPrimaryKeyFilter package.scala:185-188).
     */
-  private def withMeta(df: DataFrame, instant: String): DataFrame =
-    withKeyCol(df).withColumn(CommitTimeCol, lit(instant))
-      .withColumn(DeletedCol, lit(false))
+  private def withMeta(df: DataFrame, instant: String): DataFrame = {
+    val stamped = withKeyCol(df).withColumn(CommitTimeCol, lit(instant))
+    // an aligned upsert batch brings its own delete flag
+    if (df.columns.contains(DeletedCol)) stamped
+    else stamped.withColumn(DeletedCol, lit(false))
+  }
 
   /** The record-key expression for a batch of the given schema —
     * shared by the DataFrame write paths ([[withKeyCol]]) and the
@@ -2570,16 +2648,21 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     base.select(keep.distinct.map(col): _*).distinct()
   }
 
-  /** One pass over the batch: (row count, min key, max key). Replaces an
-    * isEmpty probe + a separate bounds aggregation — one Spark job that
-    * also materializes the batch's cache for the writes that follow.
+  /** One pass over the batch: (row count, min key, max key, delete rows
+    * — counted only with `deletes`, else 0). Replaces an isEmpty probe +
+    * a separate bounds aggregation — one Spark job that also
+    * materializes the batch's cache for the writes that follow.
     */
-  private def batchBounds(df: DataFrame): (Long, String, String) = {
-    val r = df.agg(count(lit(1)).as("c"),
-      min(RecordKeyCol).as("mn"), max(RecordKeyCol).as("mx")).head()
+  private def batchBounds(df: DataFrame,
+      deletes: Boolean = false): (Long, String, String, Long) = {
+    val aggs = Seq(count(lit(1)).as("c"),
+      min(RecordKeyCol).as("mn"), max(RecordKeyCol).as("mx")) ++
+      (if (deletes) Seq(count(when(col(DeletedCol), 1)).as("d")) else Nil)
+    val r = df.agg(aggs.head, aggs.tail: _*).head()
     (r.getLong(0),
       if (r.isNullAt(1)) null else r.getString(1),
-      if (r.isNullAt(2)) null else r.getString(2))
+      if (r.isNullAt(2)) null else r.getString(2),
+      if (deletes) r.getLong(3) else 0L)
   }
 
   /** Files that contain at least one incoming key. Step 1 prunes by
@@ -2693,7 +2776,8 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     */
   private def writeStaging(out: DataFrame, instant: String,
       clusterBy: Seq[String] = Seq.empty,
-      clusterExprs: Seq[Column] = Seq.empty): Path = {
+      clusterExprs: Seq[Column] = Seq.empty,
+      into: Option[Path] = None): Path = {
     // hidden partitioning: derived partition columns live OUTSIDE the
     // user schema, so every staged write re-derives them here — the one
     // choke point all writers (user batches, COW rewrites, compaction,
@@ -2754,9 +2838,10 @@ class LakeTable private (val spark: SparkSession, val path: String) {
         .sortWithinPartitions(clusterCols: _*)
     try {
       // unique per attempt: even if two writers ever raced to the same
-      // instant, their staging areas cannot collide
-      val staging = new Path(tablePath,
-        s"_lake/staging/${instant}_${java.util.UUID.randomUUID().toString.take(8)}")
+      // instant, their staging areas cannot collide. `into` adds this
+      // write's files to an earlier staging of the same commit.
+      val staging = into.getOrElse(new Path(tablePath,
+        s"_lake/staging/${instant}_${java.util.UUID.randomUUID().toString.take(8)}"))
       val curveSplit =
         if (_meta.bucketCount > 0 && clusterExprs.nonEmpty)
           spark.conf.getOption(LakeTable.CurveBucketFileRowsConf)
@@ -2781,7 +2866,8 @@ class LakeTable private (val spark: SparkSession, val path: String) {
         else None
       // every data file carries a record-key bloom (Hudi BLOOM-index
       // analog) — footer-only upsert tagging via [[KeyBloom]]
-      val w0 = ordered.write.mode("overwrite").options(KeyBloom.writerOptions)
+      val w0 = ordered.write.mode(if (into.isDefined) "append" else "overwrite")
+        .options(KeyBloom.writerOptions)
       val w = curveSplit.fold(w0)(n => w0.option("maxRecordsPerFile", n))
       val w2 =
         if (_meta.partitionFields.nonEmpty) w.partitionBy(_meta.partitionFields: _*)

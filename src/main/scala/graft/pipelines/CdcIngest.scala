@@ -51,8 +51,10 @@ object CdcIngest {
 
   /** DMS-style two-level envelope `{data: struct, metadata: struct}`
     * (reference KDS2Hudi.scala:36-81, hand-declared schema; SURVEY A2):
-    * expand `data.*`, route by `metadata.operation`
-    * (insert/update → upsert, delete → delete — KDS2Hudi.scala:117-136).
+    * expand `data.*`, route by `metadata.operation` (insert/update/load
+    * → upsert, delete → delete). The reference sends the deletes as a
+    * second write (KDS2Hudi.scala:117-136); here both land in ONE upsert
+    * commit, deletes as `_deleted` rows.
     */
   def applyDmsBatch(spark: SparkSession, batch: DataFrame,
       table: LakeTable): Unit = {
@@ -96,17 +98,13 @@ object CdcIngest {
       .orderBy(col("_ts").desc_nulls_last, col("_src").desc, col("_line").desc)
     val finalOps = parsed
       .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .drop("_rn", "_ts", "_src", "_line")
-      .persist()
-    try {
-      val upserts = finalOps.filter(col("_op").isin("insert", "update", "load"))
-        .drop("_op")
-      // key-unique by construction after the window — skip combine
-      if (!upserts.isEmpty) { table.upsert(upserts, combine = false); () }
-      val deletes = finalOps.filter(col("_op") === "delete").drop("_op")
-      if (!deletes.isEmpty) { table.delete(deletes); () }
-    } finally { finalOps.unpersist(); () }
+      .filter(col("_rn") === 1 &&
+        col("_op").isin("insert", "update", "load", "delete"))
+      .withColumn(LakeTable.DeletedCol, col("_op") === "delete")
+      .drop("_rn", "_op", "_ts", "_src", "_line")
+    // key-unique by construction after the window — skip combine
+    table.upsertNonEmpty(finalOps, combine = false)
+    ()
   }
 
   /** Distributed parse of a raw inbox batch into one row per Canal
@@ -132,11 +130,12 @@ object CdcIngest {
 
   /** Resolve the FINAL operation per key within the batch (binlog ts,
     * then binlog event id, then source position, then row index in the
-    * envelope — deterministic under any partition layout) before
-    * routing — same contract as the DMS path: an insert→delete ends
-    * deleted, a delete→re-insert survives, regardless of how ops
-    * interleave inside one micro-batch. `recs` must already be scoped to
-    * ONE target table's envelopes.
+    * envelope — deterministic under any partition layout), then apply
+    * the batch as ONE upsert commit whose deletes are `_deleted` rows —
+    * same contract as the DMS path: an insert→delete ends deleted, a
+    * delete→re-insert survives, regardless of how ops interleave inside
+    * one micro-batch. A batch that resolves to no ops adds no commit.
+    * `recs` must already be scoped to ONE target table's envelopes.
     */
   private def routeFinalOps(spark: SparkSession, recs: DataFrame,
       table: LakeTable): Unit = {
@@ -147,16 +146,12 @@ object CdcIngest {
         col("_line").desc, col("_idx").desc)
     val finalOps = typedRows(spark, recs, table)
       .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .drop("_rn", "_ts", "_seq", "_src", "_line", "_idx")
-      .persist() // multi-action fan-out, reference Y2
-    try {
-      val upserts = finalOps
-        .filter(col("_op").isin(CdcOp.Insert, CdcOp.Upsert)).drop("_op")
-      if (!upserts.isEmpty) { table.upsert(upserts, combine = false); () }
-      val deletes = finalOps.filter(col("_op") === CdcOp.Delete).drop("_op")
-      if (!deletes.isEmpty) { table.delete(deletes); () }
-    } finally { finalOps.unpersist(); () }
+      .filter(col("_rn") === 1 &&
+        col("_op").isin(CdcOp.Insert, CdcOp.Upsert, CdcOp.Delete))
+      .withColumn(LakeTable.DeletedCol, col("_op") === CdcOp.Delete)
+      .drop("_rn", "_op", "_ts", "_seq", "_src", "_line", "_idx")
+    table.upsertNonEmpty(finalOps, combine = false)
+    ()
   }
 
   def applyBatch(spark: SparkSession, batch: DataFrame, cfg: PipelineConfig,

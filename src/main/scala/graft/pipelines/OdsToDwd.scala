@@ -54,7 +54,9 @@ object OdsToDwd {
         inc(cfg.joinLeftKey) === dimDf(cfg.joinRightKey), "left") // J1
       .select(inc.columns.map(inc(_)).toIndexedSeq ++ enrichCols: _*)
       .withColumn(cfg.precombineField, col(LakeTable.CommitTimeCol).cast("long"))
-      .drop(LakeTable.CommitTimeCol)
+      // ODS deletes are not propagated (reference ODS2DWD): the feed's
+      // `_deleted` flag must not reach the DWD upsert as a delete row
+      .drop(LakeTable.CommitTimeCol, LakeTable.DeletedCol)
     dwd.upsert(joined, extra = Map(WatermarkKey -> end))
     end
   }

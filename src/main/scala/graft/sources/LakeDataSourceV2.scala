@@ -221,20 +221,21 @@ class LakeV2ScanBuilder(full: StructType, params: Map[String, String])
     * positional — the same order [[graft.lake.LakeFileIndex]] decodes).
     * Empty when the table does not exist yet (DDL before first write),
     * is unpartitioned, or a partition field is missing from the read
-    * schema — then every filter stays residual, as before.
+    * schema — then every filter stays residual, as before. Any other
+    * failure (an unreadable table descriptor, a missing path) fails the
+    * planning: a broken table must not silently lose partition pruning.
     */
-  private lazy val partSchema: StructType =
-    try {
-      val spark = SparkSession.active
-      val p = LakeDataSource.path(params)
-      if (!LakeTable.exists(spark, p)) StructType(Nil)
-      else {
-        val names = LakeTable.load(spark, p).meta.partitionFields
-        val resolved = names.flatMap(n => full.fields.find(_.name == n))
-        if (resolved.length != names.length) StructType(Nil)
-        else StructType(resolved)
-      }
-    } catch { case _: Exception => StructType(Nil) }
+  private lazy val partSchema: StructType = {
+    val spark = SparkSession.active
+    val p = LakeDataSource.path(params)
+    if (!LakeTable.exists(spark, p)) StructType(Nil)
+    else {
+      val names = LakeTable.load(spark, p).meta.partitionFields
+      val resolved = names.flatMap(n => full.fields.find(_.name == n))
+      if (resolved.length != names.length) StructType(Nil)
+      else StructType(resolved)
+    }
+  }
 
   private lazy val partFields: Map[String, DataType] =
     partSchema.fields.map(f => f.name -> f.dataType).toMap

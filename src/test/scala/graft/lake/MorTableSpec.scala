@@ -177,6 +177,29 @@ class MorTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows == Seq((1, 3.0), (2, 42.0)))
   }
 
+  test("async compaction failure is rethrown by awaitTableServices") {
+    val t = LakeTable.create(spark,
+      Files.createTempDirectory("mortbl").toString + "/t",
+      TableMeta("m", Seq("id"), "ts", Seq("part"), tableType = "mor",
+        inlineCompactMax = 2, asyncCompact = true))
+    t.insert(df((1, 10L, "p1", 1.0)))
+    t.upsert(df((1, 11L, "p1", 2.0))) // delta debt 1: no compaction yet
+    t.awaitTableServices()
+    // lose the live delta on disk: the compaction the next delta
+    // triggers must read it and fail
+    val lost = t.timeline.liveFiles().filter(_.isDelta)
+    assert(lost.size == 1)
+    new java.io.File(s"${t.path}/${lost.head.path}").delete()
+    t.upsert(df((1, 12L, "p1", 3.0)))
+    val e = intercept[Throwable](t.awaitTableServices())
+    assert(Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains(lost.head.path)),
+      s"the failure names the lost file: $e")
+    assert(!t.timeline.instants().map(t.timeline.read)
+      .exists(_.operation == "compact"), "the failed compaction never published")
+    t.awaitTableServices() // reported once
+  }
+
   test("cluster rewrite resets the inline-compaction debt counter") {
     val t = mkTable(inlineMax = 2)
     t.insert(df((1, 10L, "p1", 1.0), (2, 10L, "p1", 2.0)))

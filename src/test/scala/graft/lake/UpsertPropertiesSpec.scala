@@ -115,7 +115,8 @@ class UpsertPropertiesSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("model-based: random upsert/delete sequences match a Map model (cow + mor)") {
-    // an op is an upsert batch, a delete of a key subset, or a TABLE
+    // an op is an upsert batch, a delete of a key subset, ONE upsert
+    // batch mixing changes with `_deleted` rows (a CDC batch), or a TABLE
     // SERVICE (compact / pack / cluster / clean / archive) interleaved at
     // a random point — services must be invisible to the model (the
     // content-preserving contract), under every data/service
@@ -127,19 +128,45 @@ class UpsertPropertiesSpec extends AnyFunSuite with BeforeAndAfterAll {
     sealed trait Op
     case class Up(rows: List[R]) extends Op
     case class Del(ids: List[Int]) extends Op
+    case class Mix(rows: List[R], ids: List[Int]) extends Op
     case class Svc(kind: Int) extends Op
+    val mixGen: Gen[Mix] = for {
+      rows <- batchGen
+      ids <- Gen.nonEmptyListOf(Gen.choose(0, 30))
+    } yield Mix(rows, ids.distinct.filterNot(rows.map(_.id).toSet))
     val opGen: Gen[Op] = Gen.frequency(
       3 -> batchGen.map(Up.apply),
       2 -> Gen.nonEmptyListOf(Gen.choose(0, 30)).map(Del.apply),
+      2 -> mixGen,
       2 -> Gen.choose(0, 4).map(Svc.apply))
-    forAllSeeded(Gen.listOfN(6, opGen), n = 2) { ops =>
+    def upserted(m: Map[Int, Long], rows: List[R]): Map[Int, Long] =
+      rows.foldLeft(m)((acc, r) =>
+        if (acc.get(r.id).exists(_ > r.ts)) acc else acc.updated(r.id, r.ts))
+    // every sequence ends in a mixed batch, and the run must see stale
+    // deletes of stored keys — the case a conditional delete would miss
+    var staleDeletes = 0
+    val seqGen = for (ops <- Gen.listOfN(6, opGen); last <- mixGen)
+      yield ops :+ last
+    forAllSeeded(seqGen, n = 2) { ops =>
       val results = for (tt <- Seq("cow", "mor")) yield {
         val t = mkTable(tt)
         val model = ops.foldLeft(Map.empty[Int, Long]) {
           case (m, Up(rows)) =>
             t.upsert(toDf(rows))
-            rows.foldLeft(m)((acc, r) =>
-              if (acc.get(r.id).exists(_ > r.ts)) acc else acc.updated(r.id, r.ts))
+            upserted(m, rows)
+          case (m, Mix(rows, ids)) =>
+            // delete rows carry ts = -1, older than every stored row:
+            // a `_deleted` row removes its key whatever the precombine
+            val commits = t.history().size
+            staleDeletes += ids.count(m.contains)
+            t.upsert(toDf(rows).withColumn(LakeTable.DeletedCol, lit(false))
+              .unionByName(toDf(ids.map(i => R(i, -1L, "p1", 0.0)))
+                .withColumn(LakeTable.DeletedCol, lit(true))))
+            assert(t.history().size == commits + 1, "one commit per batch")
+            // MOR tombstones keep files of their own
+            assert(t.timeline.liveFiles().filter(_.tombstones > 0)
+              .forall(f => f.tombstones == f.numRecords), "tombstone files")
+            upserted(m, rows) -- ids
           case (m, Del(ids)) =>
             t.delete(toDf(ids.map(i => R(i, 0L, "p1", 0.0))))
             m -- ids
@@ -165,6 +192,7 @@ class UpsertPropertiesSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
       assert(results.distinct.size == 1) // cow and mor agree with each other
     }
+    assert(staleDeletes > 0, "no mixed batch deleted a stored key")
   }
 
   test("incremental algebra: snapshot(t2) == snapshot(t1) ⊕ incremental(t1,t2)") {

@@ -402,11 +402,11 @@ class PipelinesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows(0).getAs[String]("name") == "alice-reborn")
   }
 
-  def mkCdcTable(path: String): LakeTable = {
+  def mkCdcTable(path: String, tableType: String = "cow"): LakeTable = {
     val s = spark
     import s.implicits._
     val t = LakeTable.create(spark, path,
-      graft.lake.TableMeta("users", Seq("id"), "ts"))
+      graft.lake.TableMeta("users", Seq("id"), "ts", tableType = tableType))
     t.insert(spark.read.json(Seq("""{"id":1,"name":"x","ts":100}""").toDS())
       .limit(0))
     t
@@ -441,6 +441,65 @@ class PipelinesSpec extends AnyFunSuite with BeforeAndAfterAll {
       val rows = t.snapshot().collect()
       assert(rows.length == 1 && rows(0).getAs[String]("name") == "reborn")
     }
+  }
+
+  test("CdcIngest: one Canal batch and one DMS batch each add ONE commit") {
+    // updates, deletes and inserts of one micro-batch land as a single
+    // upsert commit (deletes as `_deleted` rows); the change feed over
+    // that commit still shows both the updates and the deletes
+    val s = spark
+    import s.implicits._
+    def canal(typ: String, id: Long, rows: String) =
+      s"""{"data":[$rows],"database":"db1","es":$id,"id":$id,"isDdl":false,"pkNames":["id"],"table":"users","ts":$id,"type":"$typ"}"""
+    def user(id: Int, name: String, ts: Int) =
+      s"""{"id":"$id","name":"$name","ts":"$ts"}"""
+    def dms(op: String, id: Int, name: String, ts: Int) =
+      s"""{"data":{"id":$id,"name":"$name","ts":$ts},"metadata":{"operation":"$op","record-type":"data","table-name":"users","timestamp":"2026-01-01T00:00:0$ts"}}"""
+    def kinds(t: LakeTable, since: String): Set[(Long, String)] =
+      t.changes(since).select("id", LakeTable.ChangeTypeCol).collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSet
+    val expected = Set((1L, "update_preimage"), (1L, "update_postimage"),
+      (2L, "delete"), (4L, "insert"))
+    for (tableType <- Seq("cow", "mor")) {
+      val t = mkCdcTable(tmp() + "/t", tableType)
+      CdcIngest.applyBatch(spark, Seq(canal("INSERT", 1,
+        Seq(user(1, "a", 1), user(2, "b", 1), user(3, "c", 1)).mkString(",")))
+        .toDF("value"), PipelineConfig(), t)
+      val seeded = t.latestCommit.get
+      CdcIngest.applyBatch(spark, Seq(
+        canal("UPDATE", 2, user(1, "a2", 2)),
+        canal("DELETE", 3, user(2, "b", 1)),
+        canal("INSERT", 4, user(4, "d", 2))).toDF("value"),
+        PipelineConfig(), t)
+      assert(t.timeline.instants().dropWhile(_ <= seeded).size == 1,
+        s"$tableType: one commit per Canal batch")
+      assert(kinds(t, seeded) == expected, tableType)
+      assert(t.snapshot().select("id").as[Long].collect().sorted.toSeq ==
+        Seq(1L, 3L, 4L), tableType)
+      // MOR: the delete is a tombstone in a file of its own, even on this
+      // unpartitioned table where it shares a directory with the changes
+      assert(t.timeline.liveFiles().filter(_.tombstones > 0)
+        .forall(f => f.tombstones == f.numRecords), s"$tableType: tombstones")
+      // a batch that resolves to no ops adds no commit
+      val last = t.latestCommit.get
+      CdcIngest.applyBatch(spark, Seq(canal("MHEARTBEAT", 5, user(9, "x", 5)))
+        .toDF("value"), PipelineConfig(), t)
+      assert(t.latestCommit.contains(last), s"$tableType: empty batch")
+    }
+    val work = tmp()
+    Files.createDirectories(Paths.get(s"$work/seed"))
+    Files.createDirectories(Paths.get(s"$work/in"))
+    Files.write(Paths.get(s"$work/seed/f.json"), Seq(dms("insert", 1, "a", 1),
+      dms("insert", 2, "b", 1), dms("insert", 3, "c", 1)).mkString("\n").getBytes)
+    Files.write(Paths.get(s"$work/in/f.json"), Seq(dms("update", 1, "a2", 2),
+      dms("delete", 2, "b", 3), dms("insert", 4, "d", 4)).mkString("\n").getBytes)
+    val t = mkCdcTable(s"$work/t")
+    CdcIngest.applyDmsBatch(spark, spark.read.text(s"$work/seed"), t)
+    val seeded = t.latestCommit.get
+    CdcIngest.applyDmsBatch(spark, spark.read.text(s"$work/in"), t)
+    assert(t.timeline.instants().dropWhile(_ <= seeded).size == 1,
+      "one commit per DMS batch")
+    assert(kinds(t, seeded) == expected)
   }
 
   test("canal multi-row envelope: later row index wins for the same key") {

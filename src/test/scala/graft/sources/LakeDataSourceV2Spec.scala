@@ -151,4 +151,33 @@ class LakeDataSourceV2Spec extends AnyFunSuite with BeforeAndAfterAll {
     val back = spark.read.format("graft-lake-v2").load(p)
     assert(back.select("id").collect().map(_.getInt(0)).toSet == Set(1, 3))
   }
+
+  test("partition schema: missing table stays residual, a broken table fails loudly") {
+    import org.apache.spark.sql.sources.EqualTo
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("id", IntegerType),
+      StructField("ts", LongType), StructField("part", StringType),
+      StructField("v", DoubleType)))
+    val byPart: Array[org.apache.spark.sql.sources.Filter] =
+      Array(EqualTo("part", "p1"))
+    val p = tmp()
+    df((1, 10L, "p1", 1.0), (2, 10L, "p2", 2.0))
+      .write.format("graft-lake-v2")
+      .option("recordkey.field", "id")
+      .option("precombine.field", "ts")
+      .option("partition.fields", "part")
+      .mode(SaveMode.Append).save(p)
+    // no table yet (DDL before the first write): nothing to claim
+    assert(new LakeV2ScanBuilder(schema, Map("path" -> tmp()))
+      .pushFilters(byPart).toSeq == byPart.toSeq)
+    // a healthy partitioned table claims the partition-exact filter
+    assert(new LakeV2ScanBuilder(schema, Map("path" -> p))
+      .pushFilters(byPart).isEmpty)
+    // an unreadable descriptor must fail planning, not silently drop
+    // partition pruning
+    Files.writeString(java.nio.file.Paths.get(p, graft.lake.TableMeta.MetaFile),
+      "{ not json")
+    intercept[Exception](new LakeV2ScanBuilder(schema, Map("path" -> p))
+      .pushFilters(byPart))
+  }
 }
