@@ -175,11 +175,8 @@ object SparkEntry {
     "text_quality" -> (TextAnalysis.qualityScore _),
     // bigram-LM quality score in portable integer arithmetic (bit-length
     // log2), so the whole "LM" replays exactly in the oracle
-    // release=false: the harness (Bench/Verify) clears the cache between
-    // queries itself, so the timed plan skips the extra eager checkpoint
-    // pass; direct library callers get lmScore's releasing default
     "text_lm_score" -> ((s, dir) => TextAnalysis.lmScoreFor(
-      Relational.t(s, dir, "documents"), release = false)),
+      Relational.t(s, dir, "documents"))),
     "text_langid" -> (TextAnalysis.langId _),
     "text_curate" -> (TextAnalysis.curate _),
     "text_fingerprint" -> (Dedup.fingerprints _),
@@ -986,37 +983,29 @@ object SparkEntry {
     * hash-matches.
     */
   /** `sim_components` oracle: the graph replay, undirected edge dedup,
-    * both-direction edge list, then 8 unrolled rounds of min-label
-    * propagation (label ← min(own, neighbors')) from comp = vec_id —
-    * the exact frontier the Spark loop computes — plus component sizes.
-    * Every CTE is MATERIALIZED: each round references the previous one
-    * twice, so inlining would expand the graph replay 2⁸ times (DuckDB
-    * then re-opens the parquet per copy and trips the fd limit).
+    * both-direction edge list, then the reachability closure (the
+    * [[clusterLabelCtes]] fixpoint: `UNION` set semantics stop it once
+    * no new (node, label) pair appears, however long the chains), min
+    * label per node, plus component sizes. The graph CTEs are
+    * MATERIALIZED so the replay runs once.
     */
-  private def componentsOracleSql(rounds: Int = 8): String = {
-    val prop = (1 to rounds).map { r =>
-      val prev = s"l${r - 1}"
-      s"""l$r AS MATERIALIZED (SELECT t.vec_id,
-         |    LEAST(t.comp, COALESCE(m.m, t.comp)) AS comp
-         |  FROM $prev t LEFT JOIN (
-         |    SELECT e.src AS vec_id, MIN(p.comp) AS m
-         |    FROM e JOIN $prev p ON p.vec_id = e.dst GROUP BY e.src) m
-         |  ON m.vec_id = t.vec_id)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH g AS MATERIALIZED (SELECT vec_id, nbr_id FROM ($knnGraphOracleSql)),
+  private def componentsOracleSql: String =
+    s"""WITH RECURSIVE g AS MATERIALIZED (SELECT vec_id, nbr_id FROM ($knnGraphOracleSql)),
        |u AS MATERIALIZED (SELECT DISTINCT LEAST(vec_id, nbr_id) AS a,
        |    GREATEST(vec_id, nbr_id) AS b
        |  FROM g WHERE vec_id <> nbr_id),
        |e AS MATERIALIZED (SELECT a AS src, b AS dst FROM u
        |  UNION ALL SELECT b, a FROM u),
-       |l0 AS MATERIALIZED (SELECT DISTINCT src AS vec_id, src AS comp FROM e),
-       |$prop,
+       |reach(vec_id, l) AS (
+       |  SELECT DISTINCT src, src FROM e
+       |  UNION
+       |  SELECT e.dst, r.l FROM reach r JOIN e ON e.src = r.vec_id),
+       |lab AS (SELECT vec_id, MIN(l) AS comp FROM reach GROUP BY vec_id),
        |sz AS (SELECT comp, CAST(COUNT(*) AS BIGINT) AS comp_size
-       |  FROM l$rounds GROUP BY comp)
-       |SELECT l$rounds.vec_id, l$rounds.comp, sz.comp_size
-       |FROM l$rounds JOIN sz USING (comp)
+       |  FROM lab GROUP BY comp)
+       |SELECT lab.vec_id, lab.comp, sz.comp_size
+       |FROM lab JOIN sz USING (comp)
        |ORDER BY vec_id""".stripMargin
-  }
 
   private def labelAuditSql: String =
     s"""SELECT g.vec_id, l.label,
@@ -3835,7 +3824,7 @@ object SparkEntry {
       ("sim_ivf_incr" -> ivfIncrOracleSql) +
       ("sim_ivf_delete" -> ivfDeleteOracleSql) +
       ("sim_ivf_stream" -> ivfStreamOracleSql) +
-      ("sim_components" -> componentsOracleSql()) +
+      ("sim_components" -> componentsOracleSql) +
       ("sim_filtered_topk" -> filteredTopKSql) +
       ("sim_probe_sweep" -> probeSweepSql()) +
       ("lake_vacuum" -> base("lake_merge_snapshot")) +

@@ -996,14 +996,13 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     // within-batch precombine dedup: keep the max-precombine row per key.
     // max_by aggregates with partial (map-side) combine — cheaper at scale
     // than the window-function formulation. max_by skips null orderings,
-    // so a delete row without a precombine value orders by struct (null
-    // lowest) rather than vanishing.
+    // so a row without a precombine value orders by struct (null lowest)
+    // rather than leaving its key with null columns.
     val keyed = withMeta(aligned, instant)
-    val order = if (marked) struct(col(pc)) else col(pc)
     val incoming = (if (!combine) keyed
       else keyed
         .groupBy(col(RecordKeyCol))
-        .agg(max_by(struct(fieldOrder.map(col): _*), order).as("_s"))
+        .agg(max_by(struct(fieldOrder.map(col): _*), struct(col(pc))).as("_s"))
         .select(col(RecordKeyCol) +: fieldOrder.map(c => col(s"_s.`$c`").as(c)): _*))
       .persist(StorageLevel.MEMORY_AND_DISK) // reference Y2, package.scala:66
     def commitNothing(): Unit = timeline.withLock() {

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.functions.TextFunctions.shingles
+import graft.util.Materialize
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -137,7 +138,7 @@ object Curation {
       .groupBy("doc_id").agg(count(lit(1)).as("n_hits"))
       .orderBy("doc_id")
     // drop list is small — materialize it and release the shingle cache
-    Dedup.releaseAfter(hits, sh)
+    Materialize.releaseAfter(hits, sh)
   }
 
   /** Bloom-prefiltered decontamination — the shape the exact broadcast
@@ -214,7 +215,7 @@ object Curation {
       .select(col("doc_id"), col("bloom_hits"), col("exact_hits"),
         (col("bloom_hits") - col("exact_hits")).as("false_pos"))
       .orderBy("doc_id")
-    Dedup.releaseAfter(out, sh)
+    Materialize.releaseAfter(out, sh)
   }
 
   /** Top-3 TF-IDF terms per document, integer-rank form: rank by
@@ -491,9 +492,7 @@ object Curation {
         .select(col("query_id"), col("doc_id"), col("score_u"),
           col("n_terms"), col("rk").cast("int").as("rk"))
         .orderBy("query_id", "rk")
-      Bm25Plan(
-        if (release.isEmpty) res else Dedup.releaseAfter(res, release: _*),
-        cand, cand)
+      Bm25Plan(Materialize.releaseAfter(res, release: _*), cand, cand)
     }
     if (volUpper < minLow) return naive(qt)
     val qtC = qt.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -579,7 +578,7 @@ object Curation {
         .filter(col("doc_id") =!= col("query_id"))
         .select(col("query_id"), col("doc_id"),
           col("su").as("su_sum"), lit(1L).as("n"))
-      Bm25Plan(Dedup.releaseAfter(finish(cand), post, qtC), lowAll, lowAll)
+      Bm25Plan(Materialize.releaseAfter(finish(cand), post, qtC), lowAll, lowAll)
     } else {
       def litPairs(ps: Seq[(Long, String)]): DataFrame =
         s.createDataFrame(ps.map(p =>
@@ -634,7 +633,7 @@ object Curation {
       val cand = surv.unionByName(
         lowKept.select(col("query_id"), col("doc_id"),
           col("su").as("su_sum"), lit(1L).as("n")))
-      Bm25Plan(Dedup.releaseAfter(finish(cand), post, qtC, p1, surv),
+      Bm25Plan(Materialize.releaseAfter(finish(cand), post, qtC, p1, surv),
         lowAll, lowKept)
     }
   }
@@ -1090,7 +1089,7 @@ object Curation {
       .select(col("doc_id"), col("n_tok"), col("dsir_q4"),
         (col("sv") >= col("b9")).as("keep"))
       .orderBy("doc_id")
-    Dedup.releaseAfter(out, tokP, wP)
+    Materialize.releaseAfter(out, tokP, wP)
   }
 
   /** PageRank centrality over the kNN graph (`curate_centrality`) —
@@ -1137,24 +1136,18 @@ object Curation {
     // exchange materializes as its own scheduler job — profiled at 60
     // jobs / 60 tasks / 2.0-2.6 s Σ task time for a 2.2-2.5 s wall: pure
     // job-submission overhead, not compute. The loop now materializes
-    // each round eagerly (localCheckpoint) under AQE OFF with the
-    // shuffle width pinned to the MEASURED edge count (the same
+    // each round eagerly (localCheckpoint) in a scoped loop with AQE off
+    // and the shuffle width pinned to the MEASURED edge count (the same
     // size-adaptive formula as the CC loop — the count is O(1) on the
     // checkpointed edge list), so each round is ONE job over a
-    // graph-sized shuffle at any scale. Confs are restored before the
-    // leaderboard, which runs at session width with AQE. The rank table
+    // graph-sized shuffle at any scale. The leaderboard runs on the
+    // caller's session, at session width with AQE. The rank table
     // always carries exactly the node set (the left join preserves it),
     // so re-deriving `nodes` per round is unnecessary.
     val edgeCount = ge.count()
     val p = math.max(1L, math.min(edgeCount / 10000L,
       s.sessionState.conf.numShufflePartitions.toLong)).toInt
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val spKey = "spark.sql.shuffle.partitions"
-    val aqeWas = s.conf.get(aqeKey, "true")
-    val spWas = s.conf.get(spKey)
-    val rankFinal = try {
-      s.conf.set(aqeKey, "false")
-      s.conf.set(spKey, p.toString)
+    val rankFinal = Materialize.scopedLoop(ge, p) { ge =>
       var rank = ge.select("vec_id").distinct()
         .withColumn("r", lit(1000000L))
         .localCheckpoint(true)
@@ -1169,9 +1162,6 @@ object Curation {
           .localCheckpoint(true)
       }
       rank
-    } finally {
-      s.conf.set(aqeKey, aqeWas)
-      s.conf.set(spKey, spWas)
     }
     val scores = rankFinal.select(col("vec_id"), col("r").as("rank_u"))
     // leaderboard positions only for the top-K: orderBy+limit plans as

@@ -1,6 +1,8 @@
 package graft.queries
 
 import graft.functions.TextFunctions._
+import graft.util.Materialize
+import graft.util.Materialize.releaseAfter
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -49,34 +51,6 @@ object Dedup {
     * survives executor loss — cached blocks don't).
     */
   val StageDirConf = "spark.graft.dedup.stageDir"
-
-  /** Materialize `result` eagerly (localCheckpoint), then drop the backing
-    * caches. The cache manager pins persisted plans until explicitly
-    * unpersisted, so a long-lived session (correctness runner, notebook)
-    * running these queries repeatedly would otherwise accumulate cached
-    * intermediate state forever; the checkpointed result instead owns its
-    * own blocks, which the ContextCleaner reclaims when the frame is
-    * dropped. Intended for small results (pair lists, drop lists) over
-    * large cached intermediates. When nothing is actually persisted
-    * (the staged-parquet shingle path) this is a lazy pass-through.
-    */
-  /** Session conf: explain-only mode. The eager localCheckpoint both
-    * EXECUTES the query during plan construction and truncates the
-    * dumped plan to a 9-line "Scan ExistingRDD" stub; a plan-dump tool
-    * ([[graft.tools.ExplainDump]]) sets this to keep the full lazy
-    * operator tree (caches also stay pinned — the dump session is
-    * short-lived). Never set on a timed or correctness path.
-    */
-  val ExplainOnlyConf = "spark.graft.explainOnly"
-
-  private[queries] def releaseAfter(result: DataFrame, cached: DataFrame*): DataFrame = {
-    if (result.sparkSession.conf.getOption(ExplainOnlyConf).contains("true"))
-      return result
-    val live = cached.filter(_.storageLevel !=
-      org.apache.spark.storage.StorageLevel.NONE)
-    if (live.isEmpty) result
-    else try result.localCheckpoint(true) finally live.foreach(_.unpersist(false))
-  }
 
   /** Produce-once protocol for a shared stage subdirectory. A bare
     * check-then-overwrite races across SESSIONS sharing one stage dir
@@ -644,22 +618,16 @@ object Dedup {
     // frame feeds BOTH self-join branches — lazily that re-ran the
     // final signature aggregate + chunk explode per branch, and its
     // aggregate exchange is byte-tiny so AQE coalesced it narrow,
-    // serializing the candidate join. Materialize once; if it landed
-    // narrower than the corpus scan's size-derived fan width, spread it
-    // back out (the join build side broadcasts, so round-robin probe
-    // partitioning is fine). At scale the frame materializes wide and
-    // passes through unshuffled.
-    val chunked = {
-      val c0 = docs.select(col("doc_id"), col("sh64"),
+    // serializing the candidate join. Materialize once at the corpus
+    // scan's fan width (the join build side broadcasts, so round-robin
+    // probe partitioning is fine).
+    val chunked = Materialize.spread(
+      docs.select(col("doc_id"), col("sh64"),
         posexplode(expr(
           "transform(sequence(0,3), c -> (sh64 >> (15 * c)) & 32767)"))
-          .as(Seq("chunk", "cval")))
-        .localCheckpoint(true)
-      val w = graft.util.Fanout.partitionsFor(s,
-        graft.util.Fanout.pathBytes(s, s"$dir/documents.parquet"))
-      if (c0.rdd.getNumPartitions >= w) c0
-      else c0.repartition(w).localCheckpoint(true)
-    }
+          .as(Seq("chunk", "cval"))),
+      graft.util.Fanout.partitionsFor(s,
+        graft.util.Fanout.pathBytes(s, s"$dir/documents.parquet")))
     chunked.alias("a")
       .join(chunked.alias("b"),
         col("a.chunk") === col("b.chunk") && col("a.cval") === col("b.cval") &&
@@ -726,34 +694,20 @@ object Dedup {
     val edgeCount = edges0.count()
     val p = math.max(1L, math.min(edgeCount / 10000L,
       s.sessionState.conf.numShufflePartitions.toLong)).toInt
-    // AQE OFF + shuffle width pinned to `p` for the iteration loop
+    // AQE off + shuffle width pinned to `p` for the iteration loop
     // only (r17, guide §1.2): every round materializes through an
     // eager localCheckpoint, and AQE runs one scheduler JOB per
     // exchange inside each round's plan — profiled at 61 jobs / 0.6 s
     // of task time for a 2.5-3.5 s sim_components wall, pure
     // job-submission overhead. AQE has nothing to re-plan here: `p`
-    // is already derived from the MEASURED edge count, so pinning
-    // spark.sql.shuffle.partitions to it gives every implicit
-    // exchange (the per-round groupBys) the width AQE would have
-    // coalesced to, without paying a job per exchange — at any scale,
-    // since p tracks the graph size. (AQE off alone is a trap: the
-    // implicit exchanges then run at the session's corpus-scale
-    // width — measured 891 tasks/round-set vs 64.) Both confs are
-    // restored before the final labels join below, which runs at
-    // corpus width and does want AQE.
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val spKey = "spark.sql.shuffle.partitions"
-    val aqeWas = s.conf.get(aqeKey, "true")
-    val spWas = s.conf.get(spKey)
-    val labels = try {
-      s.conf.set(aqeKey, "false")
-      s.conf.set(spKey, p.toString)
-      if (edgeCount >= s.conf.get(StarEdgesConf, "1000000").toLong)
-        starLabels(s, edges0, p)
-      else propagateLabels(s, edges0, p)
-    } finally {
-      s.conf.set(aqeKey, aqeWas)
-      s.conf.set(spKey, spWas)
+    // is already derived from the MEASURED edge count, so it gives
+    // every implicit exchange (the per-round groupBys) the width AQE
+    // would have coalesced to. The final labels join below runs on the
+    // caller's session, at corpus width with AQE.
+    val starEdges = s.conf.get(StarEdgesConf, "1000000").toLong
+    val labels = Materialize.scopedLoop(edges0, p) { edges =>
+      if (edgeCount >= starEdges) starLabels(edges, p)
+      else propagateLabels(edges, p)
     }
     val sizes = labels.groupBy(col("label"))
       .agg(count(lit(1)).as("cluster_size"))
@@ -767,8 +721,8 @@ object Dedup {
     * of its own and its neighbors' labels; rounds = component diameter.
     * `edges0` is the SYMMETRIC checkpointed edge list.
     */
-  private def propagateLabels(s: SparkSession, edges0: DataFrame,
-      p: Int): DataFrame = {
+  private def propagateLabels(edges0: DataFrame, p: Int): DataFrame = {
+    val s = edges0.sparkSession
     import s.implicits._
     val edges = edges0.repartition(p, col("src")).localCheckpoint(true)
     var labels = edges.select(col("src").as("doc_id")).distinct()
@@ -817,8 +771,7 @@ object Dedup {
     * overflow-free under ANSI arithmetic; the edge set is distinct, so
     * nothing self-cancels).
     */
-  private def starLabels(s: SparkSession, edges0: DataFrame,
-      p: Int): DataFrame = {
+  private def starLabels(edges0: DataFrame, p: Int): DataFrame = {
     def fingerprint(e: DataFrame): (Long, Long) = {
       val r = e.agg(count(lit(1)),
         expr("bit_xor(xxhash64(src, dst))")).head()

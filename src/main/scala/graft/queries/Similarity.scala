@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.util.Materialize
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
@@ -352,18 +353,11 @@ object Similarity {
     // serialized the CPU-dense candidate stage downstream (per-cell pair
     // explosion + distinct + probe of the broadcast join: profiled as
     // two ~0.6-0.9 s SINGLE-TASK stages). Materialize the assignments
-    // once, and when the materialized frame landed narrower than the
-    // embedding scan's size-derived fan width, spread it back out (the
-    // build side broadcasts, so round-robin probe partitioning is fine).
-    // At scale the frame materializes wide on its own and passes through
-    // unshuffled.
-    val assigned = {
-      val a0 = multiAssignCells(e, cent, assign).localCheckpoint(true)
-      val w = graft.util.Fanout.partitionsFor(s,
-        graft.util.Fanout.pathBytes(s, s"$dir/embeddings.parquet"))
-      if (a0.rdd.getNumPartitions >= w) a0
-      else a0.repartition(w).localCheckpoint(true)
-    }
+    // once at the embedding scan's size-derived fan width (the build
+    // side broadcasts, so round-robin probe partitioning is fine).
+    val assigned = Materialize.spread(multiAssignCells(e, cent, assign),
+      graft.util.Fanout.partitionsFor(s,
+        graft.util.Fanout.pathBytes(s, s"$dir/embeddings.parquet")))
     val cand = assigned.select(col("cell"), col("vec_id").as("id_a"))
       .join(assigned.select(col("cell"), col("vec_id").as("id_b")), Seq("cell"))
       .filter(col("id_a") < col("id_b"))
@@ -374,7 +368,7 @@ object Similarity {
       .select(col("id_a"), col("id_b"), cosine(col("va"), col("vb")).as("sim"))
       .filter(col("sim") >= SemThreshold)
       .orderBy("id_a", "id_b")
-    Dedup.releaseAfter(scored, e)
+    Materialize.releaseAfter(scored, e)
   }
 
   /** Semantic-dedup cluster formation (the SemDeDup-style stage after
@@ -637,19 +631,13 @@ object Similarity {
     // 100 TB layout where each cell is a partition directory. Without
     // the conf, training runs in-plan as before. Results are identical
     // either way: training is deterministic.
-    var eMat: DataFrame = null
-    def e: DataFrame = {
-      if (eMat == null)
-        eMat = Relational.tFan(s, dir, "embeddings")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      eMat
-    }
-    val cent = ivfCentFor(s, dir, e)
-    val corpus = ivfCorpusFor(s, dir, e, cent)
+    val e = Materialize.onFirstUse(Relational.tFan(s, dir, "embeddings"))
+    val cent = ivfCentFor(s, dir, e())
+    val corpus = ivfCorpusFor(s, dir, e(), cent)
     val topk = ivfProbeTopK(cent, corpus, probe)
     // top-k is tiny — materialize it and release the embeddings cache
     // (never materialized at all when the staged index served the query)
-    if (eMat != null) Dedup.releaseAfter(topk, eMat) else topk
+    e.release(topk)
   }
 
   /** The probe phase over an assembled IVF index: `corpus` carries
@@ -711,15 +699,9 @@ object Similarity {
   def filteredTopK(s: SparkSession, dir: String,
       probe: Int = IvfProbe): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    var eMat: DataFrame = null
-    def e: DataFrame = {
-      if (eMat == null)
-        eMat = Relational.tFan(s, dir, "embeddings")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      eMat
-    }
-    val cent = ivfCentFor(s, dir, e)
-    val corpus = ivfCorpusFor(s, dir, e, cent)
+    val e = Materialize.onFirstUse(Relational.tFan(s, dir, "embeddings"))
+    val cent = ivfCentFor(s, dir, e())
+    val corpus = ivfCorpusFor(s, dir, e(), cent)
     val lab = Relational.t(s, dir, "embeddings")
       .select(col("vec_id"), col("label"))
     val q0 = corpus.filter(col("vec_id") < 3)
@@ -748,7 +730,7 @@ object Similarity {
       .filter(col("rk") <= 10)
       .select("query_id", "vec_id", "label", "sim", "rk")
       .orderBy("query_id", "rk")
-    if (eMat != null) Dedup.releaseAfter(topk, eMat) else topk
+    e.release(topk)
   }
 
   /** Probe-sweep tuning report (`sim_probe_sweep`) — the accuracy/cost
@@ -768,15 +750,9 @@ object Similarity {
   def probeSweep(s: SparkSession, dir: String,
       probes: Seq[Int] = Seq(1, 2, 4, 6, 16)): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    var eMat: DataFrame = null
-    def e: DataFrame = {
-      if (eMat == null)
-        eMat = Relational.tFan(s, dir, "embeddings")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      eMat
-    }
-    val cent = ivfCentFor(s, dir, e)
-    val corpus = ivfCorpusFor(s, dir, e, cent)
+    val e = Materialize.onFirstUse(Relational.tFan(s, dir, "embeddings"))
+    val cent = ivfCentFor(s, dir, e())
+    val corpus = ivfCorpusFor(s, dir, e(), cent)
     val q = corpus.filter(col("vec_id") < 3)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
     val wq = Window.partitionBy("query_id")
@@ -832,7 +808,7 @@ object Similarity {
       .select(col("query_id"), inline(rows))
       .select("probe", "query_id", "hits", "recall_bp", "candidates")
       .orderBy("probe", "query_id")
-    if (eMat != null) Dedup.releaseAfter(out, eMat) else out
+    e.release(out)
   }
 
   /** IVF RANGE search (the faiss `range_search` API surface): every
@@ -850,15 +826,9 @@ object Similarity {
   def ivfRangeSearch(s: SparkSession, dir: String, probe: Int = IvfProbe,
       threshold: Double = 0.25): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    var eMat: DataFrame = null
-    def e: DataFrame = {
-      if (eMat == null)
-        eMat = Relational.tFan(s, dir, "embeddings")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      eMat
-    }
-    val cent = ivfCentFor(s, dir, e)
-    val corpus = ivfCorpusFor(s, dir, e, cent)
+    val e = Materialize.onFirstUse(Relational.tFan(s, dir, "embeddings"))
+    val cent = ivfCentFor(s, dir, e())
+    val corpus = ivfCorpusFor(s, dir, e(), cent)
     val wq = Window.partitionBy("query_id")
       .orderBy(col("csim").desc, col("cell").asc)
     val qcells = corpus.filter(col("vec_id") < 3)
@@ -874,7 +844,7 @@ object Similarity {
         cosine(col("embedding"), col("qv")).as("sim"))
       .filter(col("sim") >= threshold)
       .orderBy("query_id", "vec_id")
-    if (eMat != null) Dedup.releaseAfter(res, eMat) else res
+    e.release(res)
   }
 
   /** Quantized ANN top-k: candidates ranked on INT8 codes, exact float
@@ -1158,7 +1128,7 @@ object Similarity {
       .select(col("id_a"), col("id_b"), cosine(col("va"), col("vb")).as("sim"))
       .filter(col("sim") >= SemThreshold)
       .orderBy("id_a", "id_b")
-    Dedup.releaseAfter(scored, e)
+    Materialize.releaseAfter(scored, e)
   }
 
   /** Hard-negative mining band for [[hardNegatives]]: candidates must be
@@ -1322,22 +1292,16 @@ object Similarity {
   def ivfPqTopK(s: SparkSession, dir: String, probe: Int = IvfProbe,
       rerank: Int = PqRerank): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    var eMat: DataFrame = null
-    def e: DataFrame = {
-      if (eMat == null)
-        eMat = Relational.tFan(s, dir, "embeddings")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      eMat
-    }
-    val cb = pqCodebooksFor(s, dir, e)
+    val e = Materialize.onFirstUse(Relational.tFan(s, dir, "embeddings"))
+    val cb = pqCodebooksFor(s, dir, e())
     val m = cb.length; val k = cb(0).length
-    val cent = ivfCentFor(s, dir, e)
+    val cent = ivfCentFor(s, dir, e())
     // the codes layout must encode the INDEXED corpus (base ∪ ivfAdd'd
     // batches — ivfCorpusFor, already cell-assigned), not the base
     // table: if an add landed before the codes artifact was first
     // built, encoding from `e` would silently omit the added vectors
     // from ADC candidacy, breaking the documented parity with ivfTopK
-    def codedCells = ivfCorpusFor(s, dir, e, cent)
+    def codedCells = ivfCorpusFor(s, dir, e(), cent)
       .withColumn("codes",
         graft.functions.PqEncode(unitNorm(col("embedding")), cb))
       .select("vec_id", "codes", "cell")
@@ -1355,9 +1319,9 @@ object Similarity {
     // does not), the cached corpus frame otherwise — one source, no
     // second decode of the base parquet on the fresh path
     val floats = s.conf.getOption(Dedup.StageDirConf) match {
-      case Some(_) => ivfCorpusFor(s, dir, e, cent)
+      case Some(_) => ivfCorpusFor(s, dir, e(), cent)
         .select(col("vec_id"), col("embedding"))
-      case None => e.select(col("vec_id"), col("embedding"))
+      case None => e().select(col("vec_id"), col("embedding"))
     }
     val q = pqQueryLuts(s, floats, cb)
     val wq = Window.partitionBy("query_id")
@@ -1390,7 +1354,7 @@ object Similarity {
       .filter(col("rk") <= 10)
       .select("query_id", "vec_id", "sim", "rk")
       .orderBy("query_id", "rk")
-    if (eMat != null) Dedup.releaseAfter(topk, eMat) else topk
+    e.release(topk)
   }
 
   /** Embedding-space drift (`stats_embedding_drift`) — the embedding
@@ -1591,7 +1555,7 @@ object Similarity {
       .withColumn("clust_bp",
         expr("(tri * 2 * 10000) DIV nullif(deg * (deg - 1), 0)"))
       .orderBy("vec_id")
-    Dedup.releaseAfter(out, und)
+    Materialize.releaseAfter(out, und)
   }
 
   /** Connected components over the kNN graph (`sim_components`) — the
@@ -1649,15 +1613,9 @@ object Similarity {
   def knnGraph(s: SparkSession, dir: String, k: Int = 3,
       probe: Int = IvfProbe): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    var eMat: DataFrame = null
-    def e: DataFrame = {
-      if (eMat == null)
-        eMat = Relational.tFan(s, dir, "embeddings")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      eMat
-    }
-    val cent = ivfCentFor(s, dir, e)
-    val corpus = ivfCorpusFor(s, dir, e, cent)
+    val e = Materialize.onFirstUse(Relational.tFan(s, dir, "embeddings"))
+    val cent = ivfCentFor(s, dir, e())
+    val corpus = ivfCorpusFor(s, dir, e(), cent)
     val wq = Window.partitionBy("qid")
       .orderBy(col("csim").desc, col("cell").asc)
     val qcells = corpus
@@ -1678,7 +1636,7 @@ object Similarity {
       .select(col("qid").as("vec_id"), col("vec_id").as("nbr_id"),
         col("sim"), col("rk"))
       .orderBy("vec_id", "rk")
-    if (eMat != null) Dedup.releaseAfter(g, eMat) else g
+    e.release(g)
   }
 
   /** Incremental kNN-graph maintenance (`sim_knn_incr`): a NEW batch of
@@ -1731,7 +1689,7 @@ object Similarity {
       .select(col("qid").as("vec_id"), col("vec_id").as("nbr_id"),
         col("sim"), col("rk"))
       .orderBy("vec_id", "rk")
-    Dedup.releaseAfter(g, e)
+    Materialize.releaseAfter(g, e)
   }
 
   /** Incremental IVF INDEX maintenance (`sim_ivf_incr`): the staged
@@ -1751,15 +1709,9 @@ object Similarity {
     val maxId = Relational.t(s, dir, "embeddings")
       .agg(max(col("vec_id"))).head().getLong(0)
     val split = (maxId + 1L) * 8L / 10L
-    var eMat: DataFrame = null
-    def e: DataFrame = {
-      if (eMat == null)
-        eMat = Relational.tFan(s, dir, "embeddings")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      eMat
-    }
-    def corpusE = e.filter(col("vec_id") < split)
-    def incE = e.filter(col("vec_id") >= split)
+    val e = Materialize.onFirstUse(Relational.tFan(s, dir, "embeddings"))
+    def corpusE = e().filter(col("vec_id") < split)
+    def incE = e().filter(col("vec_id") >= split)
     // shared artifact with sim_knn_incr: identical trainer input (the
     // pre-increment corpus), so whichever query runs first builds it
     val cent = s.conf.getOption(Dedup.StageDirConf) match {
@@ -1784,11 +1736,11 @@ object Similarity {
             incE.join(assignCells(incE, cent), "vec_id")
               .write.mode("append").partitionBy("cell").parquet(out)
           },
-          () => e.join(assignCells(e, cent), "vec_id"))
-      case None => e.join(assignCells(e, cent), "vec_id")
+          () => e().join(assignCells(e(), cent), "vec_id"))
+      case None => e().join(assignCells(e(), cent), "vec_id")
     }
     val topk = ivfProbeTopK(cent, corpus, probe)
-    if (eMat != null) Dedup.releaseAfter(topk, eMat) else topk
+    e.release(topk)
   }
 
   /** IVF index DELETE maintenance (`sim_ivf_delete`) — the other half
@@ -1809,18 +1761,12 @@ object Similarity {
     */
   def ivfDeleteTopK(s: SparkSession, dir: String,
       probe: Int = IvfProbe): DataFrame = {
-    var eMat: DataFrame = null
-    def e: DataFrame = {
-      if (eMat == null)
-        eMat = Relational.tFan(s, dir, "embeddings")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      eMat
-    }
-    val cent = ivfCentFor(s, dir, e)
-    val corpus = ivfCorpusFor(s, dir, e, cent)
-    val tomb = ivfTombstonesFor(s, dir, e)
+    val e = Materialize.onFirstUse(Relational.tFan(s, dir, "embeddings"))
+    val cent = ivfCentFor(s, dir, e())
+    val corpus = ivfCorpusFor(s, dir, e(), cent)
+    val tomb = ivfTombstonesFor(s, dir, e())
     val topk = ivfProbeTopK(cent, corpus, probe, Some(tomb))
-    if (eMat != null) Dedup.releaseAfter(topk, eMat) else topk
+    e.release(topk)
   }
 
   /** The delete-tombstone sidecar for `dir`'s staged IVF index: two
@@ -2030,18 +1976,12 @@ object Similarity {
     * matryoshka-recall gate already proves bit-portable.
     */
   def matryoshkaProbe(s: SparkSession, dir: String): DataFrame = {
-    var eMat: DataFrame = null
-    def e: DataFrame = {
-      if (eMat == null)
-        eMat = Relational.tFan(s, dir, "embeddings")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      eMat
-    }
-    val cent = ivfCentFor(s, dir, e)
-    val corpus = ivfCorpusFor(s, dir, e, cent)
+    val e = Materialize.onFirstUse(Relational.tFan(s, dir, "embeddings"))
+    val cent = ivfCentFor(s, dir, e())
+    val corpus = ivfCorpusFor(s, dir, e(), cent)
     val topk = matryoshkaProbeTopK(cent, corpus, IvfProbe,
       MatryoshkaProbeDims, MatryoshkaCand)
-    if (eMat != null) Dedup.releaseAfter(topk, eMat) else topk
+    e.release(topk)
   }
 
   /** The two-phase probe over an assembled IVF index: prefix-dim cell

@@ -15,10 +15,10 @@ object ExplainDump {
       else Set("q1_pricing_summary", "q4_filter_project", "q7_star_join")
     val spark = Sessions.local("explain", "4")
     spark.sparkContext.setLogLevel("ERROR")
-    // keep releaseAfter's eager localCheckpoint out of the dump: the
-    // checkpoint both runs the query here and truncates the plan to a
-    // "Scan ExistingRDD" stub (the r16 dumps' failure mode)
-    spark.conf.set(graft.queries.Dedup.ExplainOnlyConf, "true")
+    // keep Materialize.releaseAfter's eager localCheckpoint out of the
+    // dump: the checkpoint both runs the query here and truncates the
+    // plan to a "Scan ExistingRDD" stub (the r16 dumps' failure mode)
+    spark.conf.set(graft.util.Materialize.ExplainOnlyConf, "true")
     SparkEntry.queries.filter(q => names(q._1)).toSeq.sortBy(_._1)
       .foreach { case (name, fn) =>
         println(s"\n===== $name =====")

@@ -53,6 +53,22 @@ class LakeTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(t.snapshot().count() == 1)
   }
 
+  for (tableType <- Seq("cow", "mor"))
+    test(s"$tableType upsert: a row with a null precombine value keeps its columns") {
+      val s = spark
+      import s.implicits._
+      val t = LakeTable.create(spark, tmp(),
+        TableMeta("n", Seq("id"), "ts", tableType = tableType))
+      t.upsert(Seq((1, Option(5L), "a"), (2, None, "b")).toDF("id", "ts", "v"))
+      val rows = t.snapshot().select("id", "ts", "v").orderBy("id").collect()
+        .map(r => (r.getInt(0), Option(r.get(1)), r.getString(2))).toSeq
+      assert(rows == Seq((1, Some(5L), "a"), (2, None, "b")))
+      // a later version with a precombine value replaces the null one
+      t.upsert(Seq((2, Option(1L), "c")).toDF("id", "ts", "v"))
+      assert(t.snapshot().filter(col("id") === 2).select("v").head()
+        .getString(0) == "c")
+    }
+
   test("global index: upsert moves a row whose partition changed") {
     val t = mkTable(tmp())
     t.upsert(df((1, "a", 10L, "p1", 1.0), (2, "b", 10L, "p1", 2.0)))
@@ -291,7 +307,11 @@ class LakeTableSpec extends AnyFunSuite with BeforeAndAfterAll {
       val path = tmp()
       val t = LakeTable.create(spark, path,
         TableMeta("k", Seq("id"), "ts", Seq.empty, keyEncoding = encoding))
+      val spWas = spark.conf.get("spark.sql.shuffle.partitions")
       spark.conf.set("spark.sql.adaptive.enabled", "false") // stable file count
+      // the write fans out to spark.sql.shuffle.partitions files: pin it
+      // so the file count does not follow the machine's core count
+      spark.conf.set("spark.sql.shuffle.partitions", "16")
       try {
         t.upsert(df((1 to 999).map(i => (i, i.toString, 10L, "p", i * 1.0)): _*))
         // candidate set the key-range stats admit for a narrow numeric
@@ -305,7 +325,10 @@ class LakeTableSpec extends AnyFunSuite with BeforeAndAfterAll {
         val out = t.snapshot().select("id", "v").collect()
           .map(r => (r.getInt(0), r.getDouble(1))).sortBy(_._1).toSeq
         (out, candidates, live.size)
-      } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+      } finally {
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+        spark.conf.set("spark.sql.shuffle.partitions", spWas)
+      }
     }
     val (plainOut, plainCand, plainTotal) = build("plain")
     val (padOut, padCand, padTotal) = build("padded")

@@ -183,7 +183,11 @@ class ZoneMapSpec extends AnyFunSuite with BeforeAndAfterAll {
     import s2.implicits._
     val t = LakeTable.create(spark, tmp(),
       TableMeta("zo", Seq("id"), "ts", Seq.empty))
+    val spWas = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.adaptive.enabled", "false") // stable file count
+    // the write fans out to spark.sql.shuffle.partitions files: pin it
+    // so the file count does not follow the machine's core count
+    spark.conf.set("spark.sql.shuffle.partitions", "16")
     try {
       // 64×64 grid; id = row-major order, so key-ordered files are tight
       // on v1 but span ALL of v2
@@ -212,7 +216,10 @@ class ZoneMapSpec extends AnyFunSuite with BeforeAndAfterAll {
       val after = t.snapshot().orderBy("id").drop("_deleted").collect().toSeq
       assert(after == before)
       assert(t.snapshot().filter(col("v2") < 4.0).count() == 64 * 4)
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", "true")
+      spark.conf.set("spark.sql.shuffle.partitions", spWas)
+    }
   }
 
   test("z-order over a STRING column prunes via the first-8-bytes proxy") {
@@ -220,7 +227,11 @@ class ZoneMapSpec extends AnyFunSuite with BeforeAndAfterAll {
     import s2.implicits._
     val t = LakeTable.create(spark, tmp(),
       TableMeta("zs", Seq("id"), "ts", Seq.empty))
+    val spWas = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
+    // the write fans out to spark.sql.shuffle.partitions files: pin it
+    // so the file count does not follow the machine's core count
+    spark.conf.set("spark.sql.shuffle.partitions", "16")
     try {
       // 64 string values × 64 numeric values; id row-major on the
       // NUMERIC axis, so the key-ordered layout spans all strings
@@ -253,13 +264,20 @@ class ZoneMapSpec extends AnyFunSuite with BeforeAndAfterAll {
       // bucket, but exact string zone bounds keep range answers exact
       assert(t.snapshot()
         .filter(col("sv") >= "s10" && col("sv") < "s20").count() == 64 * 10)
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", "true")
+      spark.conf.set("spark.sql.shuffle.partitions", spWas)
+    }
   }
 
   test("hilbert clustering prunes on both columns and beats-or-ties z-order on box reads") {
     val s2 = spark
     import s2.implicits._
+    val spWas = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.adaptive.enabled", "false") // stable file count
+    // the write fans out to spark.sql.shuffle.partitions files: pin it
+    // so the file count does not follow the machine's core count
+    spark.conf.set("spark.sql.shuffle.partitions", "16")
     try {
       val grid = for (i <- 0 until 64; j <- 0 until 64)
         yield (i * 64 + j, 1L, i.toDouble, j.toDouble)
@@ -299,7 +317,10 @@ class ZoneMapSpec extends AnyFunSuite with BeforeAndAfterAll {
       // box answers are exact regardless of layout
       for (b <- boxes)
         assert(h.snapshot().filter(b).count() == z.snapshot().filter(b).count())
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", "true")
+      spark.conf.set("spark.sql.shuffle.partitions", spWas)
+    }
   }
 
   test("zone maps survive the JSON round trip and upsert rewrites") {

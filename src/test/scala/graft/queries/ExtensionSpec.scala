@@ -820,9 +820,11 @@ class ExtensionSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("common ngrams: df counts docs once each, descending, plan is top-k") {
-    // release=false keeps the lazy plan inspectable (the default
+    // explain-only keeps the lazy plan inspectable (the default
     // checkpoints the 20-row result when the shingle cache is live)
-    val df = TextAnalysis.commonNgrams(spark, sf, release = false)
+    spark.conf.set(graft.util.Materialize.ExplainOnlyConf, "true")
+    val df = try TextAnalysis.commonNgrams(spark, sf)
+      finally spark.conf.unset(graft.util.Materialize.ExplainOnlyConf)
     // global top-k must plan as TakeOrderedAndProject (per-partition
     // heads), not a full global sort
     assert(df.queryExecution.executedPlan.toString

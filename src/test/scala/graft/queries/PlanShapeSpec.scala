@@ -109,10 +109,7 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("lm score: count tables reduce before the scoring join (no raw-row join)") {
-    // inspect the PRE-release plan (the default materializes via
-    // localCheckpoint and releases the bigram cache, hiding the shape)
-    val p = plan(TextAnalysis.lmScoreFor(
-      Relational.t(spark, sf, "documents"), release = false))
+    val p = plan(TextAnalysis.lmScoreFor(Relational.t(spark, sf, "documents")))
     // the c2 count join input must be an aggregate, and the broadcast
     // total is a 1-row cross product, not a shuffle
     assert("HashAggregate".r.findAllIn(p).length >= 4, p)

@@ -521,9 +521,14 @@ class Round11Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("plan shapes: boilerplate broadcasts the source-count side; sliding distinct has no cartesian blowup") {
     val docs = Relational.t(spark, dir, "documents")
       .select("doc_id", "source", "text")
-    val bp = TextAnalysis.boilerplateFor(docs, 3, 12, 3, release = false)
-    assert(bp.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"),
-      "source-doc-count join should broadcast")
+    // explain-only keeps the lazy plan inspectable (the default
+    // checkpoints the result and releases the token cache)
+    spark.conf.set(graft.util.Materialize.ExplainOnlyConf, "true")
+    try {
+      val bp = TextAnalysis.boilerplateFor(docs, 3, 12, 3)
+      assert(bp.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"),
+        "source-doc-count join should broadcast")
+    } finally spark.conf.unset(graft.util.Materialize.ExplainOnlyConf)
     val sd = Relational.q41SlidingDistinct(spark, dir)
     val plan = sd.queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"),
