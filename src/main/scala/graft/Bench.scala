@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.queries.{LakeQueries, Similarity}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import scala.util.control.NonFatal
 
 /** Benchmark main — runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line with per-query seconds.
@@ -8,6 +11,46 @@ import org.apache.spark.sql.SparkSession
   * whole plan incl. projections that a bare count() would prune away).
   */
 object Bench {
+
+  /** The one-time builds the timed queries share, run before the first
+    * timed query so that no query's number pays for them:
+    *  - JVM/codegen warm-up on the smallest SF;
+    *  - the lake fixtures (shared batch1 input staged with the oracle
+    *    CTE, documented not-under-test); their build seconds are
+    *    returned for the JSON artifact, so one-time fixture cost is
+    *    reported apart from query time;
+    *  - with a stage dir: the kNN-graph index (graph, label audit and
+    *    centrality consume it), the LSH buckets (sim_lsh_topk,
+    *    sim_recall_eval), the IVF index (five sim_* queries) and the
+    *    incremental IVF artifacts (sim_knn_incr, sim_ivf_incr);
+    *  - the streaming-maintained IVF fixture (lake table + CDC stream +
+    *    mid-stream rebuild), so sim_ivf_stream times the probe.
+    * A failing step stops the run with the step's name: a broken
+    * fixture would otherwise bill its build to the first timed query.
+    */
+  def warmUp(spark: SparkSession, sfDir: String,
+      staged: Boolean): Seq[(String, Double)] = {
+    def step[T](name: String)(body: => T): T =
+      try body catch { case NonFatal(e) =>
+        throw new IllegalStateException(s"warm-up step '$name' failed", e)
+      }
+    def drain(df: DataFrame): Unit =
+      df.write.format("noop").mode("overwrite").save()
+    step("codegen")(drain(SparkEntry.entry(spark)))
+    val fixtureSecs =
+      step("lake_fixtures")(LakeQueries.warmFixtures(spark, sfDir))
+    if (staged) {
+      step("knn_graph")(drain(Similarity.stagedKnnGraph(spark, sfDir)))
+      step("lsh_buckets")(drain(Similarity.stagedLshBuckets(spark, sfDir)))
+      step("ivf_index")(Similarity.warmIvfIndex(spark, sfDir))
+    }
+    step("ivf_stream")(Similarity.warmIvfStream(spark, sfDir))
+    if (staged)
+      step("ivf_incremental")(
+        drain(Similarity.ivfIncrementalTopK(spark, sfDir)))
+    fixtureSecs
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -34,47 +77,7 @@ object Bench {
     if (stageDir.nonEmpty)
       spark.conf.set(graft.queries.Dedup.StageDirConf, stageDir)
 
-    // warm the JVM/codegen once on the smallest SF so per-query numbers
-    // measure the plan, not first-call class loading.
-    try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
-    // pre-stage the lake queries' shared batch1 input (input prep shared
-    // with the oracle CTE, documented not-under-test) so the first lake
-    // query's number measures ITS work, not the shared staging. Build
-    // seconds are kept and published in the JSON artifact so one-time
-    // fixture cost attributes honestly, separate from query time.
-    val fixtureSecs =
-      try graft.queries.LakeQueries.warmFixtures(spark, sfDir)
-      catch { case _: Throwable => Seq.empty[(String, Double)] }
-    // likewise the shared kNN-graph index artifact: three queries
-    // (graph, label audit, centrality) consume it; whichever ran first
-    // was paying the one-time stage build instead of its own plan
-    if (stageDir.nonEmpty)
-      try graft.queries.Similarity.stagedKnnGraph(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    // and the LSH bucket index: sim_lsh_topk and sim_recall_eval share it
-    if (stageDir.nonEmpty)
-      try graft.queries.Similarity.stagedLshBuckets(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    // and the IVF index (centroids + cell-partitioned corpus): five
-    // sim_* queries consume it; whichever ran first was paying the
-    // one-time k-means + staged write instead of its own probe
-    if (stageDir.nonEmpty)
-      try graft.queries.Similarity.warmIvfIndex(spark, sfDir)
-      catch { case _: Throwable => () }
-    // the streaming-maintained IVF fixture (lake table + CDC stream +
-    // mid-stream rebuild) — sim_ivf_stream should time the probe, not
-    // the one-time stream drive
-    try graft.queries.Similarity.warmIvfStream(spark, sfDir)
-    catch { case _: Throwable => () }
-    // and the INCREMENTAL index artifacts (split centroids + appended
-    // cell layout, shared by sim_knn_incr and sim_ivf_incr)
-    if (stageDir.nonEmpty)
-      try graft.queries.Similarity.ivfIncrementalTopK(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
+    val fixtureSecs = warmUp(spark, sfDir, staged = stageDir.nonEmpty)
 
     // `--only name1,name2` (or SPARK_GRAFT_ONLY=...) restricts the run —
     // the isolated re-run mode for queries flagged in a full bench:

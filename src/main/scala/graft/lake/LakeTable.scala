@@ -1,5 +1,6 @@
 package graft.lake
 
+import graft.util.Generations
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, DataType, DecimalType, DoubleType, FloatType, StringType, StructField, StructType}
@@ -1704,8 +1705,8 @@ class LakeTable private (val spark: SparkSession, val path: String) {
   // ------------------------------------------------------ secondary index
 
   /** Secondary (non-key column) point-lookup index: per-column POSTING
-    * LISTS `(value, data file)` in a `_SUCCESS`-marked sidecar
-    * generation under `_lake/secidx/<column>/asof_<instant>/`. Where
+    * LISTS `(value, data file)` in a sidecar [[Generations]] generation
+    * under `_lake/secidx/<column>/asof_<instant>/`. Where
     * the per-file zone maps ([[FileStat.cols]]) prune by [min, max]
     * range — useless once a probed value falls inside every file's
     * range — the posting list names EXACTLY the files holding the
@@ -1732,7 +1733,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * containing v + files since the index), not O(table).
     */
   private def secIdxDir(column: String) =
-    new Path(tablePath, s"_lake/secidx/$column")
+    new Path(tablePath, s"_lake/secidx/$column").toString
 
   private def fileBase(rel: String): String =
     rel.substring(rel.lastIndexOf('/') + 1)
@@ -1755,16 +1756,8 @@ class LakeTable private (val spark: SparkSession, val path: String) {
       .select(col(column).as("v"),
         element_at(split(input_file_name(), "/"), -1).as("file"))
       .distinct()
-    posting.write.mode("overwrite")
-      .parquet(new Path(secIdxDir(column), s"asof_$asOf").toString)
-    // sweep every OTHER generation: anything else is either superseded
-    // (older) or orphaned by a restore (a HIGHER instant no longer on
-    // the timeline — it must not shadow this rebuild)
-    secIdxGenerations(column).filter(_ != asOf).foreach { old =>
-      fs.delete(new Path(secIdxDir(column), s"asof_$old"), true)
-      ()
-    }
-    Some(asOf)
+    Some(Generations.publish(spark, secIdxDir(column), SecIdxPrefix, asOf,
+      Some(posting)))
   }
 
   /** Columns that currently have a posting-list index sidecar — the
@@ -1777,18 +1770,9 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     if (!fs.exists(root)) Seq.empty
     else fs.listStatus(root).toIndexedSeq
       .filter(_.isDirectory).map(_.getPath.getName)
-      .filter(c => secIdxGenerations(c).nonEmpty)
+      .filter(c =>
+        Generations.list(spark, secIdxDir(c), SecIdxPrefix).nonEmpty)
       .sorted
-  }
-
-  private def secIdxGenerations(column: String): Seq[String] = {
-    val d = secIdxDir(column)
-    if (!fs.exists(d)) Seq.empty
-    else fs.listStatus(d).toIndexedSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("asof_") &&
-        fs.exists(new Path(st.getPath, "_SUCCESS")))
-      .map(_.getPath.getName.stripPrefix("asof_"))
-      .sorted.reverse
   }
 
   /** Incrementally refresh the posting-list index for `column`: scan
@@ -1805,46 +1789,35 @@ class LakeTable private (val spark: SparkSession, val path: String) {
       case None => buildSecondaryIndex(column)
       case Some(asOf) =>
         val latest = latestCommit.getOrElse(return None)
-        if (latest <= asOf) return Some(asOf)
+        if (latest <= asOf)
+          return Some(Generations.publish(spark, secIdxDir(column),
+            SecIdxPrefix, asOf, None))
         val newBase = timeline.addedBetween(asOf, MaxInstant)
           .filterNot(_.isDelta)
         val goneBases = timeline.between(asOf, latest)
           .flatMap(_.removed).map(fileBase).toSet
-        val old = spark.read.parquet(
-          new Path(secIdxDir(column), s"asof_$asOf").toString)
-          .filter(!col("file").isin(goneBases.toSeq: _*))
+        val old = Generations.read(spark, secIdxDir(column), SecIdxPrefix,
+          asOf).filter(!col("file").isin(goneBases.toSeq: _*))
         val fresh =
           if (newBase.isEmpty) old
           else old.unionByName(readStats(newBase)
             .select(col(column).as("v"),
               element_at(split(input_file_name(), "/"), -1).as("file"))
             .distinct())
-        fresh.write.mode("overwrite")
-          .parquet(new Path(secIdxDir(column), s"asof_$latest").toString)
-        secIdxGenerations(column).filter(_ != latest).foreach { g =>
-          fs.delete(new Path(secIdxDir(column), s"asof_$g"), true)
-          ()
-        }
-        Some(latest)
+        Some(Generations.publish(spark, secIdxDir(column), SecIdxPrefix,
+          latest, Some(fresh)))
     }
 
   /** The newest VALID index generation for `column`: its as-of instant
-    * must still be on the committed timeline (a [[restore]] below it
-    * invalidates the index — see the section doc).
+    * must still be on the active timeline ([[Generations]]). After a
+    * [[restore]] below the build, files the dropped rewrite had removed
+    * are live again and absent from its postings; archival that
+    * collapses the as-of commit also invalidates (spuriously but safely
+    * — lookups fall back to the full scan; rebuild to re-enable).
     */
-  def secondaryIndexAsOf(column: String): Option[String] = {
-    // VALID = the as-of instant is still a commit on the active
-    // timeline. A mere `asOf <= latest` check is not enough: after a
-    // restore below the build, NEW commits take higher wall-clock
-    // instants and would make an orphaned generation look current
-    // again — while files the dropped rewrite had removed are live
-    // again and absent from its postings. Archival that collapses the
-    // as-of commit into a checkpoint also invalidates (spuriously but
-    // safely — lookups fall back to the full scan; rebuild to
-    // re-enable).
-    val inst = timeline.instants().toSet
-    secIdxGenerations(column).find(inst.contains)
-  }
+  def secondaryIndexAsOf(column: String): Option[String] =
+    Generations.current(spark, secIdxDir(column), SecIdxPrefix)(
+      timeline.instants().toSet)
 
   /** The pruned live-file set for a probe of `values` on `column`, or
     * None when no valid index exists. The posting read is a filter-
@@ -1854,8 +1827,8 @@ class LakeTable private (val spark: SparkSession, val path: String) {
   private[lake] def secondaryPrunedFiles(column: String,
       values: Seq[Any]): Option[Seq[FileStat]] =
     secondaryIndexAsOf(column).map { asOf =>
-      val idx = spark.read.parquet(
-        new Path(secIdxDir(column), s"asof_$asOf").toString)
+      val idx = Generations.read(spark, secIdxDir(column), SecIdxPrefix,
+        asOf)
       val matched = idx
         .filter(col("v").isin(values: _*))
         .select("file").distinct()
@@ -3322,6 +3295,9 @@ class LakeTable private (val spark: SparkSession, val path: String) {
 object LakeTable {
   val RecordKeyCol = "_record_key"
   val CommitTimeCol = "_commit_time"
+
+  /** Posting-list generations of the secondary index: `asof_<instant>`. */
+  private val SecIdxPrefix = "asof_"
 
   /** Shared daemon pool for async table services: a single thread —
     * services serialize on each table's writer lock anyway, and one

@@ -1,7 +1,6 @@
 package graft.pipelines
 
 import graft.lake.LakeTable
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -82,77 +81,24 @@ object DistinctMaintain {
 
   // ---------------------------------------------- persisted generations
 
-  private def fs(s: SparkSession, dir: String) =
-    new Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
-
-  /** Published generations, newest first — the [[RollupMaintain]]
-    * single-watermark contract: `gen_<instant>` names are zero-padded
-    * instants, the lexicographic max is the newest state.
+  /** The persisted aux state and the instant it is current as of — the
+    * [[RollupMaintain]] single-watermark generations (`gen_<instant>`).
     */
-  private def generations(s: SparkSession, stateDir: String): Seq[String] = {
-    val p = new Path(stateDir)
-    val f = fs(s, stateDir)
-    if (!f.exists(p)) Seq.empty
-    else f.listStatus(p).toIndexedSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("gen_") &&
-        f.exists(new Path(st.getPath, "_SUCCESS")))
-      .map(_.getPath.getName.stripPrefix("gen_"))
-      .sorted.reverse
-  }
-
-  /** The persisted aux state and the instant it is current as of. */
   def current(s: SparkSession, stateDir: String): Option[(DataFrame, String)] =
-    generations(s, stateDir).headOption.map { inst =>
-      (s.read.parquet(s"$stateDir/gen_$inst"), inst)
-    }
+    RollupMaintain.current(s, stateDir)
 
   /** Fold everything committed since the last advance into a new aux
-    * generation; bootstrap from the snapshot when no state exists.
-    * Idempotent: re-invocation with no new commits — including a
-    * crash-replay that already wrote the newest generation — only
-    * re-sweeps. Returns the instant the state is now current as of.
+    * generation; bootstrap from the snapshot when no valid state exists
+    * ([[RollupMaintain.advanceWith]]). Idempotent: re-invocation with no
+    * new commits only re-sweeps. Returns the instant the state is now
+    * current as of.
     */
   def advance(s: SparkSession, table: LakeTable, stateDir: String,
-      groupCols: Seq[String], value: Column): Option[String] = {
-    val latest = table.latestCommit.getOrElse(return None)
-    // VALIDITY (the secondaryIndexAsOf contract): the stored watermark
-    // must still be a commit on the active timeline. A restore below it
-    // leaves rolled-back rows folded into the aux state (and new commits
-    // take HIGHER wall-clock instants, so `inst >= latest` would keep
-    // serving the orphan); an archival past it collapses the commits the
-    // delta feed needs into a net checkpoint (double-count). Either way:
-    // discard the orphaned generations and re-bootstrap from the current
-    // snapshot, which is always correct.
-    val cur = current(s, stateDir).filter { case (_, inst) =>
-      val valid = table.timeline.instants().contains(inst)
-      if (!valid) {
-        val f = fs(s, stateDir)
-        generations(s, stateDir).foreach { old =>
-          f.delete(new Path(s"$stateDir/gen_$old"), true)
-        }
-      }
-      valid
-    }
-    val next = cur match {
-      case Some((_, inst)) if inst >= latest => None // nothing new
-      case Some((aux, inst)) =>
-        // bound the feed to the watermark this generation is named for:
-        // a concurrent OCC writer can commit between the latestCommit
-        // read and the delta job, and an open-ended feed would fold that
-        // commit into state WITHOUT covering it by the watermark — the
-        // next advance re-applies it and silently double-counts
-        Some(applyDelta(aux, delta(table.changes(inst, latest), groupCols,
-          value), groupCols))
-      case None =>
-        Some(fullAux(table.snapshotAsOf(latest), groupCols, value))
-    }
-    next.foreach(_.write.mode("overwrite").parquet(s"$stateDir/gen_$latest"))
-    val f = fs(s, stateDir)
-    generations(s, stateDir).drop(1).foreach { old =>
-      f.delete(new Path(s"$stateDir/gen_$old"), true)
-    }
-    Some(generations(s, stateDir).headOption.getOrElse(latest))
-  }
+      groupCols: Seq[String], value: Column): Option[String] =
+    RollupMaintain.advanceWith(s, table, stateDir)(
+      fullAux(_, groupCols, value),
+      (aux, changes) =>
+        applyDelta(aux, delta(changes, groupCols, value), groupCols))
 
   /** One CDC micro-batch folded into the persisted aux state, keyed by
     * the STREAM's batch id (the [[RollupMaintain.applyBatch]] contract:
@@ -162,20 +108,13 @@ object DistinctMaintain {
     */
   def applyBatch(s: SparkSession, batch: DataFrame, stateDir: String,
       groupCols: Seq[String], value: Column, batchId: Long): Unit = {
-    val gen = f"gen_$batchId%020d"
-    if (fs(s, stateDir).exists(new Path(s"$stateDir/$gen/_SUCCESS"))) return
     val d = delta(batch, groupCols, value)
-    val next = current(s, stateDir) match {
-      case Some((aux, _)) => applyDelta(aux, d, groupCols)
+    RollupMaintain.applyBatchWith(s, stateDir, batchId) {
+      case Some(aux) => applyDelta(aux, d, groupCols)
       // no state yet: from-earliest CDC classifies everything as an
       // insert, so the first delta IS the aux state
       case None => d.select(((groupCols :+ "v").map(col) :+
         col("dcnt").as("cnt")): _*).filter(col("cnt") =!= 0)
-    }
-    next.write.mode("overwrite").parquet(s"$stateDir/$gen")
-    val f = fs(s, stateDir)
-    generations(s, stateDir).drop(1).foreach { old =>
-      f.delete(new Path(s"$stateDir/gen_$old"), true)
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.pipelines
 
 import graft.lake.LakeTable
+import graft.util.Generations
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -142,25 +143,16 @@ object JoinMaintain {
 
   // ---------------------------------------------- persisted generations
 
-  private def fs(s: SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-
-  /** Published generations, newest first. A generation name carries BOTH
-    * watermarks — `gen_<aInstant>_<bInstant>` — and both are zero-padded
-    * fixed-width instants advancing monotonically, so the lexicographic
-    * max is the newest state (the [[RollupMaintain]] contract, two-table
-    * form).
+  /** A generation name carries BOTH watermarks —
+    * `gen_<aInstant>_<bInstant>`, each a zero-padded fixed-width instant
+    * advancing monotonically, so the lexicographic max is the newest
+    * state (the [[Generations]] contract, two-table form).
     */
-  private def generations(s: SparkSession, stateDir: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(stateDir)
-    val f = fs(s, stateDir)
-    if (!f.exists(p)) Seq.empty
-    else f.listStatus(p).toIndexedSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("gen_") &&
-        f.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-      .map(_.getPath.getName.stripPrefix("gen_"))
-      .sorted.reverse
+  private val Prefix = "gen_"
+
+  private def marks(g: String): (String, String) = {
+    val Array(ai, bi) = g.split("_", 2)
+    (ai, bi)
   }
 
   /** The persisted state and the (aInstant, bInstant) it is current as
@@ -168,53 +160,39 @@ object JoinMaintain {
     */
   def current(s: SparkSession, stateDir: String)
       : Option[(DataFrame, (String, String))] =
-    generations(s, stateDir).headOption.map { g =>
-      val Array(ai, bi) = g.split("_", 2)
-      (s.read.parquet(s"$stateDir/gen_$g"), (ai, bi))
+    Generations.list(s, stateDir, Prefix).headOption.map { g =>
+      (Generations.read(s, stateDir, Prefix, g), marks(g))
     }
 
   /** Fold everything committed on EITHER table since the last advance
     * into a new state generation; bootstrap from a fresh join when no
-    * state exists. Idempotent: re-invocation with no new commits —
-    * including a crash-replay that already wrote the newest generation —
-    * only re-sweeps. Returns the new (aInstant, bInstant) watermarks.
+    * generation has BOTH watermarks on their table's active timeline.
+    * Idempotent: re-invocation with no new commits — including a
+    * crash-replay that already wrote the newest generation — only
+    * re-sweeps. Returns the new (aInstant, bInstant) watermarks.
     */
   def advancePersisted(s: SparkSession, a: LakeTable, b: LakeTable,
       stateDir: String, aKey: String, bKey: String,
       outCols: Seq[String]): Option[(String, String)] = {
     val aLatest = a.latestCommit.getOrElse(return None)
     val bLatest = b.latestCommit.getOrElse(return None)
-    // VALIDITY (the secondaryIndexAsOf contract): BOTH stored watermarks
-    // must still be commits on their table's active timeline — a restore
-    // below either leaves rolled-back joined rows in the state (served
-    // forever, since post-restore commits take higher instants), an
-    // archival past either collapses the commits its delta feed needs.
-    // Discard the orphaned generations and re-bootstrap from a full join.
-    val cur = current(s, stateDir).filter { case (_, (ai, bi)) =>
-      val valid = a.timeline.instants().contains(ai) &&
-        b.timeline.instants().contains(bi)
-      if (!valid) generations(s, stateDir).foreach { old =>
-        fs(s, stateDir).delete(
-          new org.apache.hadoop.fs.Path(s"$stateDir/gen_$old"), true)
-      }
-      valid
+    val aOn = a.timeline.instants().toSet
+    val bOn = b.timeline.instants().toSet
+    val cur = Generations.current(s, stateDir, Prefix) { g =>
+      val (ai, bi) = marks(g)
+      aOn(ai) && bOn(bi)
     }
-    val next = cur match {
-      case Some((_, (ai, bi))) if ai >= aLatest && bi >= bLatest => None
-      case Some((state, (ai, bi))) =>
-        Some(advance(state, a, b, ai, aLatest, bi, bLatest,
-          aKey, bKey, outCols))
+    val latest = s"${aLatest}_$bLatest"
+    val (name, next) = cur.map(g => (g, marks(g))) match {
+      case Some((g, (ai, bi))) if ai >= aLatest && bi >= bLatest => (g, None)
+      case Some((g, (ai, bi))) =>
+        (latest, Some(advance(Generations.read(s, stateDir, Prefix, g),
+          a, b, ai, aLatest, bi, bLatest, aKey, bKey, outCols)))
       case None =>
-        Some(fullState(a.snapshotAsOf(aLatest), b.snapshotAsOf(bLatest),
-          aKey, bKey, outCols))
+        (latest, Some(fullState(a.snapshotAsOf(aLatest),
+          b.snapshotAsOf(bLatest), aKey, bKey, outCols)))
     }
-    next.foreach(_.write.mode("overwrite")
-      .parquet(s"$stateDir/gen_${aLatest}_$bLatest"))
-    val f = fs(s, stateDir)
-    generations(s, stateDir).drop(1).foreach { old =>
-      f.delete(new org.apache.hadoop.fs.Path(s"$stateDir/gen_$old"), true)
-    }
-    current(s, stateDir).map(_._2)
+    Some(marks(Generations.publish(s, stateDir, Prefix, name, next)))
   }
 
   /** Continuous maintenance of the joined view: EITHER table's CDC

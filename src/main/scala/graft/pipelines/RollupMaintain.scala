@@ -1,7 +1,7 @@
 package graft.pipelines
 
 import graft.lake.LakeTable
-import org.apache.hadoop.fs.Path
+import graft.util.Generations
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -23,11 +23,10 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * Sums use DECIMAL so maintained state is EXACTLY equal to a fresh
   * recompute (float addition order would differ between the two paths).
   *
-  * Persisted form ([[advance]]): state generations under
-  * `stateDir/gen_<instant>/` (the instant the state is current AS OF,
-  * `_SUCCESS`-marked); readers take the max published generation, a new
+  * Persisted form ([[advance]]): [[Generations]] named
+  * `gen_<instant>` (the instant the state is current AS OF); a new
   * advance folds `changes(cur, latest)` into the next generation and
-  * sweeps older ones after. Calling advance twice (or replaying after a
+  * sweeps the others after. Calling advance twice (or replaying after a
   * crash between write and sweep) is a no-op — the generation name IS
   * the watermark.
   */
@@ -67,25 +66,12 @@ object RollupMaintain {
           .as("sum_v")): _*)
       .filter(col("cnt") =!= 0)
 
-  private def fs(s: SparkSession, dir: String) =
-    new Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
-
-  /** Published generations, newest first. */
-  private def generations(s: SparkSession, stateDir: String): Seq[String] = {
-    val p = new Path(stateDir)
-    val f = fs(s, stateDir)
-    if (!f.exists(p)) Seq.empty
-    else f.listStatus(p).toIndexedSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("gen_") &&
-        f.exists(new Path(st.getPath, "_SUCCESS")))
-      .map(_.getPath.getName.stripPrefix("gen_"))
-      .sorted.reverse
-  }
+  private val Prefix = "gen_"
 
   /** The persisted state and the instant it is current as of. */
   def current(s: SparkSession, stateDir: String): Option[(DataFrame, String)] =
-    generations(s, stateDir).headOption.map { inst =>
-      (s.read.parquet(s"$stateDir/gen_$inst"), inst)
+    Generations.list(s, stateDir, Prefix).headOption.map { inst =>
+      (Generations.read(s, stateDir, Prefix, inst), inst)
     }
 
   /** Fold everything committed since the last advance into a new state
@@ -95,43 +81,35 @@ object RollupMaintain {
     * the newest generation — only re-sweeps.
     */
   def advance(s: SparkSession, table: LakeTable, stateDir: String,
-      groupCols: Seq[String], value: Column): Option[String] = {
+      groupCols: Seq[String], value: Column): Option[String] =
+    advanceWith(s, table, stateDir)(fullState(_, groupCols, value),
+      (state, changes) =>
+        applyDelta(state, delta(changes, groupCols, value), groupCols))
+
+  /** The single-watermark advance, shared with [[DistinctMaintain]]:
+    * `bootstrap` builds the state from a snapshot, `fold` applies a
+    * change feed to a state. The current generation is the newest whose
+    * instant is still on the active timeline ([[Generations]]); with
+    * none, the state re-bootstraps from the snapshot at `latestCommit`.
+    */
+  private[pipelines] def advanceWith(s: SparkSession, table: LakeTable,
+      stateDir: String)(bootstrap: DataFrame => DataFrame,
+      fold: (DataFrame, DataFrame) => DataFrame): Option[String] = {
     val latest = table.latestCommit.getOrElse(return None)
-    // VALIDITY (the secondaryIndexAsOf contract): a stored watermark no
-    // longer on the active timeline means the generation is orphaned — a
-    // restore below it rolled back commits the state already folded (and
-    // `inst >= latest` would keep serving it, since post-restore commits
-    // take higher wall-clock instants), an archival past it collapsed
-    // the commits the delta feed needs into a net checkpoint. Discard
-    // and re-bootstrap from the current snapshot.
-    val cur = current(s, stateDir).filter { case (_, inst) =>
-      val valid = table.timeline.instants().contains(inst)
-      if (!valid) generations(s, stateDir).foreach { old =>
-        fs(s, stateDir).delete(new Path(s"$stateDir/gen_$old"), true)
+    val onTimeline = table.timeline.instants().toSet
+    val (name, next) =
+      Generations.current(s, stateDir, Prefix)(onTimeline) match {
+        case Some(inst) if inst >= latest => (inst, None) // nothing new
+        case Some(inst) =>
+          // bound the feed to the watermark this generation is named for
+          // (a concurrent OCC writer between latestCommit and the delta
+          // job would otherwise be folded but not covered → double-counted
+          // on the next advance)
+          (latest, Some(fold(Generations.read(s, stateDir, Prefix, inst),
+            table.changes(inst, latest))))
+        case None => (latest, Some(bootstrap(table.snapshotAsOf(latest))))
       }
-      valid
-    }
-    val next = cur match {
-      case Some((_, inst)) if inst >= latest => None // nothing new
-      case Some((state, inst)) =>
-        // bound the feed to the watermark this generation is named for
-        // (concurrent OCC writer between latestCommit and the delta job
-        // would otherwise be folded but not covered → double-counted on
-        // the next advance)
-        Some(applyDelta(state, delta(table.changes(inst, latest), groupCols,
-          value), groupCols))
-      case None =>
-        Some(fullState(table.snapshotAsOf(latest), groupCols, value))
-    }
-    next.foreach { st =>
-      st.write.mode("overwrite").parquet(s"$stateDir/gen_$latest")
-    }
-    // sweep superseded generations (readers already pick the max)
-    val f = fs(s, stateDir)
-    generations(s, stateDir).drop(1).foreach { old =>
-      f.delete(new Path(s"$stateDir/gen_$old"), true)
-    }
-    Some(generations(s, stateDir).headOption.getOrElse(latest))
+    Some(Generations.publish(s, stateDir, Prefix, name, next))
   }
 
   /** One CDC micro-batch folded into the persisted state, keyed by the
@@ -143,22 +121,31 @@ object RollupMaintain {
     */
   def applyBatch(s: SparkSession, batch: DataFrame, stateDir: String,
       groupCols: Seq[String], value: Column, batchId: Long): Unit = {
-    val gen = f"gen_$batchId%020d"
-    if (fs(s, stateDir).exists(new Path(s"$stateDir/$gen/_SUCCESS"))) return
     val d = delta(batch, groupCols, value)
-    val next = current(s, stateDir) match {
-      case Some((state, _)) => applyDelta(state, d, groupCols)
-      // no state yet: from-earliest CDC classifies everything as an
-      // insert, so the first delta IS the rollup
-      case None => applyDelta(d.limit(0)
-        .select(groupCols.map(col) ++ Seq(col("dcnt").as("cnt"),
-          col("dsum").as("sum_v")): _*), d, groupCols)
+    // no state yet: from-earliest CDC classifies everything as an insert,
+    // so the first delta IS the rollup
+    applyBatchWith(s, stateDir, batchId)(cur => applyDelta(
+      cur.getOrElse(d.limit(0).select(groupCols.map(col) ++ Seq(
+        col("dcnt").as("cnt"), col("dsum").as("sum_v")): _*)),
+      d, groupCols))
+  }
+
+  /** The batch-id apply, shared with [[DistinctMaintain]]: `next` maps
+    * the current state (None before the first batch) to the new one. A
+    * replayed batch writes nothing; when it is still the newest it
+    * finishes the sweep its crash interrupted.
+    */
+  private[pipelines] def applyBatchWith(s: SparkSession, stateDir: String,
+      batchId: Long)(next: Option[DataFrame] => DataFrame): Unit = {
+    val name = f"$batchId%020d"
+    val gens = Generations.list(s, stateDir, Prefix)
+    if (gens.headOption.contains(name))
+      Generations.publish(s, stateDir, Prefix, name, None)
+    else if (!gens.contains(name)) {
+      val cur = gens.headOption.map(Generations.read(s, stateDir, Prefix, _))
+      Generations.publish(s, stateDir, Prefix, name, Some(next(cur)))
     }
-    next.write.mode("overwrite").parquet(s"$stateDir/$gen")
-    val f = fs(s, stateDir)
-    generations(s, stateDir).drop(1).foreach { old =>
-      f.delete(new Path(s"$stateDir/gen_$old"), true)
-    }
+    ()
   }
 
   /** Continuous IVM: the lake CDC streaming source feeds [[applyBatch]]

@@ -1,6 +1,7 @@
 package graft.pipelines
 
 import graft.lake.{LakeTable, Timeline}
+import graft.util.Generations
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.DataFrame
@@ -48,8 +49,12 @@ object Scd2 {
     * user columns as of that version, `valid_from`/`valid_to` commit
     * ordinals (`valid_to` null = open) and `is_current`.
     */
-  def history(t: LakeTable, keyCols: Seq[String]): DataFrame = {
-    val ords = commitOrdinals(t)
+  def history(t: LakeTable, keyCols: Seq[String]): DataFrame =
+    historyOf(t, keyCols, commitOrdinals(t))
+
+  /** [[history]] over the commits `ords` — a prefix of the timeline. */
+  private def historyOf(t: LakeTable, keyCols: Seq[String],
+      ords: Seq[(Long, String)]): DataFrame = {
     require(ords.nonEmpty, "empty table has no history")
     // an archive checkpoint is the NET effect of the commits it
     // collapsed — the per-commit change feeds a from-genesis history
@@ -119,27 +124,17 @@ object Scd2 {
 
   // ---------------------------------------------- persisted generations
 
-  private def fs(s: org.apache.spark.sql.SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-
-  /** Published generations, newest first. A generation name carries the
-    * instant watermark AND its ordinal — `gen_<instant>_<ord>` — so an
-    * advance never re-derives ordinals for commits it already folded
-    * (and the dimension survives timeline archival of its own past:
-    * ordinals of already-folded commits live in the state, not the
-    * timeline).
+  /** A generation name carries the instant watermark AND its ordinal —
+    * `gen_<instant>_<ord>` ([[Generations]]) — so an advance never
+    * re-derives ordinals for commits it already folded (and the
+    * dimension survives timeline archival of its own past: ordinals of
+    * already-folded commits live in the state, not the timeline).
     */
-  private def generations(s: org.apache.spark.sql.SparkSession,
-      stateDir: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(stateDir)
-    val f = fs(s, stateDir)
-    if (!f.exists(p)) Seq.empty
-    else f.listStatus(p).toIndexedSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("gen_") &&
-        f.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-      .map(_.getPath.getName.stripPrefix("gen_"))
-      .sorted.reverse
+  private val Prefix = "gen_"
+
+  private def mark(g: String): (String, Long) = {
+    val Array(inst, ord) = g.split("_", 2)
+    (inst, ord.toLong)
   }
 
   /** The persisted dimension and the (instant, ordinal) watermark it is
@@ -147,9 +142,8 @@ object Scd2 {
     */
   def current(s: org.apache.spark.sql.SparkSession, stateDir: String)
       : Option[(DataFrame, (String, Long))] =
-    generations(s, stateDir).headOption.map { g =>
-      val Array(inst, ord) = g.split("_", 2)
-      (s.read.parquet(s"$stateDir/gen_$g"), (inst, ord.toLong))
+    Generations.list(s, stateDir, Prefix).headOption.map { g =>
+      (Generations.read(s, stateDir, Prefix, g), mark(g))
     }
 
   /** Fold every commit since the last advance into the persisted SCD2
@@ -157,65 +151,50 @@ object Scd2 {
     * touched keys close at the key's FIRST new event, new asserts chain
     * among themselves, untouched keys never move. O(changed rows +
     * touched-key versions) per advance, the same contract as the other
-    * IVM families. Bootstrap = [[history]]. Idempotent: re-invocation
-    * with no new commits — including a crash-replay that already wrote
-    * the newest generation — only re-sweeps.
+    * IVM families. Bootstrap = [[history]], when no generation's instant
+    * is still on the active timeline; it refuses loudly when genesis was
+    * archived (no per-commit feeds to replay). Both the fold and the
+    * bootstrap stop at `latestCommit`, below any pending writer, so a
+    * commit that publishes out of instant order is folded by a later
+    * advance instead of skipped. Idempotent: re-invocation with no new
+    * commits — including a crash-replay that already wrote the newest
+    * generation — only re-sweeps.
     */
   def advance(s: org.apache.spark.sql.SparkSession, t: LakeTable,
       stateDir: String, keyCols: Seq[String]): Option[(String, Long)] = {
-    val instants = t.timeline.instants()
-    if (instants.isEmpty) return None
-    val latest = instants.last
-    // VALIDITY (the secondaryIndexAsOf contract): a stored watermark no
-    // longer on the active timeline means the dimension is orphaned — a
-    // restore below it leaves version chains for rolled-back commits in
-    // the history (and post-restore commits take higher wall-clock
-    // instants, so `inst >= latest` would keep serving them), an
-    // archival past it destroyed the per-commit feeds of the gap.
-    // Discard and re-bootstrap from genesis; [[history]] itself refuses
-    // loudly when genesis was archived (no per-commit feeds to replay).
-    val cur = current(s, stateDir).filter { case (_, (inst, _)) =>
-      val valid = instants.contains(inst)
-      if (!valid) generations(s, stateDir).foreach { old =>
-        fs(s, stateDir).delete(
-          new org.apache.hadoop.fs.Path(s"$stateDir/gen_$old"), true)
-        ()
-      }
-      valid
-    }
-    // the new watermark ordinal: continue from the stored one on an
-    // advance (archival-stable — already-folded ordinals never re-derive
-    // from the timeline), count the timeline only on bootstrap
-    var newOrd = instants.size.toLong
-    val next = cur match {
-      case Some((_, (inst, _))) if inst >= latest => None // nothing new
-      case Some((state, (inst, ord))) =>
-        val newOrds = instants.filter(_ > inst).zipWithIndex
+    val latest = t.latestCommit.getOrElse(return None)
+    val all = t.timeline.instants()
+    val onTimeline = all.toSet
+    val cur = Generations.current(s, stateDir, Prefix)(g =>
+      onTimeline(mark(g)._1))
+    val (name, next) = cur.map(g => (g, mark(g))) match {
+      case Some((g, (inst, _))) if inst >= latest => (g, None) // nothing new
+      case Some((g, (inst, ord))) =>
+        // the new ordinals continue from the stored one (archival-stable
+        // — already-folded ordinals never re-derive from the timeline)
+        val newOrds = all.filter(i => i > inst && i <= latest).zipWithIndex
           .map { case (ni, i) => (ord + i + 1, ni) }
-        newOrd = newOrds.last._1
         val events = ordinalEvents(t, newOrds, prevInstant = Some(inst))
         // first new event per key closes that key's open version
         // (assert ⇒ superseded, delete ⇒ ended)
         val firstNew = events
           .groupBy(keyCols.map(col): _*)
           .agg(min(col("_ord")).as("_first_ord"))
-        val closed = state.join(firstNew, keyCols, "left")
+        val closed = Generations.read(s, stateDir, Prefix, g)
+          .join(firstNew, keyCols, "left")
           .withColumn("valid_to",
             when(col("is_current") && col("_first_ord").isNotNull,
               col("_first_ord")).otherwise(col("valid_to")))
           .withColumn("is_current", col("valid_to").isNull)
           .drop("_first_ord")
-        Some(closed.unionByName(chains(events, keyCols)))
-      case None => Some(history(t, keyCols))
+        (f"${latest}_${newOrds.last._1}%020d",
+          Some(closed.unionByName(chains(events, keyCols))))
+      case None =>
+        // ordinals are timeline positions, counted up to `latest`
+        val ords = commitOrdinals(t).filter(_._2 <= latest)
+        (f"${latest}_${ords.size}%020d", Some(historyOf(t, keyCols, ords)))
     }
-    next.foreach(_.write.mode("overwrite")
-      .parquet(f"$stateDir/gen_${latest}_$newOrd%020d"))
-    val f = fs(s, stateDir)
-    generations(s, stateDir).drop(1).foreach { old =>
-      f.delete(new org.apache.hadoop.fs.Path(s"$stateDir/gen_$old"), true)
-      ()
-    }
-    current(s, stateDir).map(_._2)
+    Some(mark(Generations.publish(s, stateDir, Prefix, name, next)))
   }
 
   /** Continuous dimension maintenance: the lake CDC streaming source

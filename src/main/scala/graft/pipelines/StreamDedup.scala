@@ -1,7 +1,7 @@
 package graft.pipelines
 
 import graft.queries.Dedup
-import graft.util.Sessions
+import graft.util.{Generations, Sessions}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -80,17 +80,9 @@ object StreamDedup {
     */
   private def readState(s: SparkSession, dir: String,
       template: DataFrame): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val done =
-      if (!fs.exists(p)) Array.empty[String]
-      else fs.listStatus(p).collect {
-        case st if st.isDirectory &&
-          fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")) =>
-          st.getPath.toString
-      }
+    val done = Generations.complete(s, dir).map(_.toString)
     if (done.isEmpty) template.limit(0)
-    else s.read.schema(template.schema).parquet(done.toIndexedSeq: _*)
+    else s.read.schema(template.schema).parquet(done: _*)
   }
 
   /** Process one micro-batch idempotently: dedup against the accepted

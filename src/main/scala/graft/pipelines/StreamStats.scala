@@ -1,7 +1,7 @@
 package graft.pipelines
 
 import graft.queries.Sketches
-import graft.util.Sessions
+import graft.util.{Generations, Sessions}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -75,20 +75,12 @@ object StreamStats {
     * every instant of the compact sequence (write c → commit manifest →
     * sweep), so readers never double-count and never miss.
     */
-  private def publishedDirs(s: SparkSession, dir: String, mark: Long): Seq[Path] = {
-    val p = new Path(dir)
-    val f = fs(s, dir)
-    if (!f.exists(p)) Seq.empty
-    else f.listStatus(p).toIndexedSeq.collect {
-      case st if st.isDirectory &&
-        f.exists(new Path(st.getPath, "_SUCCESS")) &&
-        (st.getPath.getName match {
-          case n if n.startsWith("b") => n.drop(1).toLong > mark
-          case n if n.startsWith("c") => n.drop(1).toLong == mark
-          case _ => false
-        }) => st.getPath
-    }
-  }
+  private def publishedDirs(s: SparkSession, dir: String, mark: Long): Seq[Path] =
+    Generations.complete(s, dir).filter(_.getName match {
+      case n if n.startsWith("b") => n.drop(1).toLong > mark
+      case n if n.startsWith("c") => n.drop(1).toLong == mark
+      case _ => false
+    })
 
   /** Process one micro-batch idempotently: skip if this batch already
     * published OR was absorbed by a compaction (manifest high-water

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.util.Generations
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -234,13 +235,8 @@ final case class IvfStreamIndex(s: SparkSession, root: String) {
     * resolving the pointer per accessor would let a rebuild landing
     * mid-probe mix two generations in one result.
     */
-  private def batchDirsAt(g: Long, kind: String): Seq[String] = {
-    val d = new Path(s"${genDir(g)}/$kind")
-    if (!fs.exists(d)) return Seq.empty
-    fs.listStatus(d).filter(_.isDirectory).map(_.getPath)
-      .filter(p => fs.exists(new Path(p, "_SUCCESS")))
-      .map(_.toString).sorted.toSeq
-  }
+  private def batchDirsAt(g: Long, kind: String): Seq[String] =
+    Generations.complete(s, s"${genDir(g)}/$kind").map(_.toString)
 
   private def batchIdOf(dir: String): Long =
     new Path(dir).getName.drop(1).toLong

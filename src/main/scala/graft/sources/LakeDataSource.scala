@@ -491,7 +491,7 @@ case class LakeRelation(spark: SparkSession, mkDf: () => DataFrame,
       if (requiredColumns.isEmpty) df
       else df.select(requiredColumns.toIndexedSeq.map(col): _*)
     // best-effort pushdown; untranslated filters are re-applied by Spark
-    val filtered = filters.flatMap(translate).foldLeft(pruned)(_.filter(_))
+    val filtered = filters.flatMap(LakeV2Scan.translate).foldLeft(pruned)(_.filter(_))
     filtered.queryExecution.toRdd.asInstanceOf[RDD[Row]]
   }
 
@@ -505,23 +505,4 @@ case class LakeRelation(spark: SparkSession, mkDf: () => DataFrame,
       params + ("operation" -> op), data)
     ()
   }
-
-  private def translate(f: Filter): Option[org.apache.spark.sql.Column] =
-    f match {
-      case EqualTo(a, v)            => Some(col(a) === v)
-      case GreaterThan(a, v)        => Some(col(a) > v)
-      case GreaterThanOrEqual(a, v) => Some(col(a) >= v)
-      case LessThan(a, v)           => Some(col(a) < v)
-      case LessThanOrEqual(a, v)    => Some(col(a) <= v)
-      case In(a, vs)                => Some(col(a).isInCollection(vs.toSeq))
-      case IsNull(a)                => Some(col(a).isNull)
-      case IsNotNull(a)             => Some(col(a).isNotNull)
-      case StringStartsWith(a, v)   => Some(col(a).startsWith(v))
-      case And(l, r) =>
-        for (lc <- translate(l); rc <- translate(r)) yield lc && rc
-      case Or(l, r) =>
-        for (lc <- translate(l); rc <- translate(r)) yield lc || rc
-      case Not(c) => translate(c).map(!_)
-      case _      => None
-    }
 }

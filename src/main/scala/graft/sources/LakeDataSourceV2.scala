@@ -623,8 +623,9 @@ object LakeV2Scan {
     else Some((parsed.flatten.map(_._1).min, parsed.flatten.map(_._2).max))
   }
 
-  /** Best-effort v1-Filter → Column translation (same table as the v1
-    * relation; kept separate so each file reads standalone).
+  /** Best-effort v1-Filter → Column translation, shared by the v1
+    * relation's `buildScan` and the v2 scan; untranslated filters are
+    * re-applied by Spark.
     */
   def translate(f: Filter): Option[org.apache.spark.sql.Column] = f match {
     case EqualTo(a, v)            => Some(col(a) === v)

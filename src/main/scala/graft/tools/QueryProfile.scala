@@ -62,24 +62,8 @@ object QueryProfile {
       java.nio.file.Files.createTempDirectory("graft-prof-stage").toString)
     if (stageDir.nonEmpty)
       spark.conf.set(graft.queries.Dedup.StageDirConf, stageDir)
-    // same pre-warm as Bench so staged artifacts don't bill to the query
-    try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
-    try graft.queries.LakeQueries.warmFixtures(spark, dir)
-    catch { case _: Throwable => () }
-    try graft.queries.Similarity.stagedKnnGraph(spark, dir)
-      .write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
-    try graft.queries.Similarity.stagedLshBuckets(spark, dir)
-      .write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
-    try graft.queries.Similarity.warmIvfIndex(spark, dir)
-    catch { case _: Throwable => () }
-    try graft.queries.Similarity.warmIvfStream(spark, dir)
-    catch { case _: Throwable => () }
-    try graft.queries.Similarity.ivfIncrementalTopK(spark, dir)
-      .write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
+    // the same warm-up as Bench, so staged artifacts don't bill to the query
+    graft.Bench.warmUp(spark, dir, staged = stageDir.nonEmpty)
 
     SparkEntry.queries.filter(q => names(q._1)).toSeq.sortBy(_._1)
       .foreach { case (name, fn) =>

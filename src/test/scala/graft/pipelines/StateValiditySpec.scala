@@ -19,12 +19,14 @@ import java.nio.file.Files
   *  - [[LakeTable.archiveTimeline]] PAST the watermark collapses the
   *    commits a delta feed would need into one net checkpoint.
   *
-  * Contract under test (the [[LakeTable.secondaryIndexAsOf]] shape): an
-  * advance whose stored watermark is no longer on the active timeline
-  * discards the state and re-bootstraps — or, for SCD2 after archival
-  * (whose bootstrap NEEDS per-commit feeds from genesis), refuses
-  * loudly. Archival that keeps the watermark on the timeline must not
-  * disturb any family.
+  * Contract under test (the [[graft.util.Generations]] validity
+  * policy): an advance serves the newest generation whose stored
+  * watermark is still on the active timeline; with none it
+  * re-bootstraps — or, for SCD2 after archival (whose bootstrap NEEDS
+  * per-commit feeds from genesis), refuses loudly. Archival that keeps
+  * the watermark on the timeline must not disturb any family. No
+  * family advances past a pending writer: a commit that publishes below
+  * an already-folded instant is folded by the next advance.
   */
 class StateValiditySpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -197,6 +199,46 @@ class StateValiditySpec extends AnyFunSuite with BeforeAndAfterAll {
       Scd2.advance(spark, t, sd, Seq("id"))
     }
     assert(e.getMessage.contains("archived"))
+  }
+
+  test("no family advances past a pending writer's reserved instant") {
+    val t = mkTable("svs_pending")
+    val j = mkTable("svs_pending_b", key = "pk")
+    def row(id: Long, g: String, v: Long) =
+      Seq((id, g, v, id)).toDF("id", "g", "v", "ts")
+    t.upsert(Seq((1L, "x", 10L, 1L), (2L, "y", 20L, 1L))
+      .toDF("id", "g", "v", "ts"), combine = false)
+    j.upsert(Seq(("x", "px", 1L), ("y", "py", 1L), ("z", "pz", 1L))
+      .toDF("pk", "name", "ts"), combine = false)
+    val (rd, dd, jd, sd) = (stateDir(), stateDir(), stateDir(), stateDir())
+    val out = Seq("id", "g", "name")
+    def advanceAll(): Unit = {
+      RollupMaintain.advance(spark, t, rd, Seq("g"), col("v"))
+      DistinctMaintain.advance(spark, t, dd, Seq("g"), col("v"))
+      JoinMaintain.advancePersisted(spark, t, j, jd, "g", "pk", out)
+      Scd2.advance(spark, t, sd, Seq("id"))
+      ()
+    }
+    // writer A reserves r; writer B commits c > r on a disjoint key
+    val visible = t.timeline.visibleInstants().toSet
+    val r = t.timeline.reserveInstant()
+    try {
+      t.upsert(row(3L, "z", 30L), combine = false)
+      assert(t.timeline.instants().last > r)
+      advanceAll()
+      // A publishes BELOW the commit the advance saw
+      t.upsertReserved(row(4L, "x", 40L), Map.empty, combine = false, r,
+        visible)
+    } finally t.timeline.releaseReservation(r)
+    advanceAll()
+    assert(rows(RollupMaintain.current(spark, rd).get._1) ==
+      rows(RollupMaintain.fullState(t.snapshot(), Seq("g"), col("v"))))
+    assert(rows(DistinctMaintain.current(spark, dd).get._1) ==
+      rows(DistinctMaintain.fullAux(t.snapshot(), Seq("g"), col("v"))))
+    assert(rows(JoinMaintain.current(spark, jd).get._1) == rows(
+      JoinMaintain.fullState(t.snapshot(), j.snapshot(), "g", "pk", out)))
+    assert(rows(Scd2.current(spark, sd).get._1) ==
+      rows(Scd2.history(t, Seq("id"))))
   }
 
   test("Scd2 still advances across archival of its own past") {
