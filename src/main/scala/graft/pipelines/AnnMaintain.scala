@@ -2,10 +2,11 @@ package graft.pipelines
 
 import graft.lake.LakeTable
 import graft.queries.IvfStreamIndex
+import graft.streaming.LakeFollow
 import graft.util.Sessions
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming ANN index maintenance: an embeddings LAKE table's CDC feed
   * keeps an [[IvfStreamIndex]] current — inserts fold in as cell
@@ -83,15 +84,9 @@ object AnnMaintain {
         idx.build(t.snapshotAsOf(at).select("vec_id", "embedding"), cells)
         at
       }
-    spark.readStream.format("graft-lake")
-      .option("query.type", "changes")
-      .option("start.at", startAt)
-      .load(tablePath)
-      .writeStream
-      .queryName("ann-maintain")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(s"$triggerSeconds seconds"))
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
+    LakeFollow.start(spark, "ann-maintain", Seq(tablePath), checkpointDir,
+        triggerSeconds, Map("query.type" -> "changes", "start.at" -> startAt)) {
+      (b, batchId) =>
         if (!b.isEmpty) {
           val batch = org.apache.spark.sql.graft.ColumnBridge.asBatch(b)
             .persist()
@@ -113,8 +108,7 @@ object AnnMaintain {
             ()
           } finally { batch.unpersist(); () }
         }
-      }
-      .start()
+    }
   }
 
   /** CLI: `--source-table-path <embeddings lake table> --output-dir

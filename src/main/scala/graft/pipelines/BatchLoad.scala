@@ -1,6 +1,5 @@
 package graft.pipelines
 
-import graft.lake.{LakeTable, TableMeta}
 import graft.util.Sessions
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -19,9 +18,7 @@ object BatchLoad {
       df = df.withColumn(cfg.precombineField,
         lit(System.currentTimeMillis())) // Hive2Hudi.scala:29 epoch-millis lit
     df = df.repartition(cfg.repartitionNum) // Hive2Hudi.scala:30, Y1
-    val table = LakeTable.create(spark, cfg.tablePath,
-      TableMeta(cfg.tableName, cfg.recordKeyFields, cfg.precombineField,
-        cfg.partitionFields, cfg.tableType))
+    val table = cfg.target(spark)
     cfg.writeOperation match {
       case "insert" => table.insert(df)
       case "upsert" => table.upsert(df)

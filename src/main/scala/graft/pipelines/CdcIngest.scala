@@ -1,7 +1,7 @@
 package graft.pipelines
 
 import graft.cdc.{CanalParser, CdcOp, CdcRecord}
-import graft.lake.{LakeTable, TableMeta}
+import graft.lake.LakeTable
 import graft.util.Sessions
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{MapType, StringType}
@@ -205,9 +205,7 @@ object CdcIngest {
             "basePath/database/<table>)")
         None
       } else Some {
-        val t = LakeTable.create(spark, cfg.tablePath,
-          TableMeta(cfg.tableName, cfg.recordKeyFields, cfg.precombineField,
-            cfg.partitionFields, cfg.tableType))
+        val t = cfg.target(spark)
         require(t.userSchema.isDefined || cfg.sampleJson.nonEmpty,
           "CDC target needs an existing schema or --sample-json")
         if (t.userSchema.isEmpty) {

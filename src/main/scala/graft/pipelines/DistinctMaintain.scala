@@ -1,8 +1,9 @@
 package graft.pipelines
 
 import graft.lake.LakeTable
+import graft.streaming.LakeFollow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Incremental view maintenance for the NON-self-maintainable aggregates
@@ -100,43 +101,18 @@ object DistinctMaintain {
       (aux, changes) =>
         applyDelta(aux, delta(changes, groupCols, value), groupCols))
 
-  /** One CDC micro-batch folded into the persisted aux state, keyed by
-    * the STREAM's batch id (the [[RollupMaintain.applyBatch]] contract:
-    * zero-padded generation names, idempotent per batch id — a replay
-    * after a crash between the state write and the stream's checkpoint
-    * commit sees its own generation and skips).
-    */
-  def applyBatch(s: SparkSession, batch: DataFrame, stateDir: String,
-      groupCols: Seq[String], value: Column, batchId: Long): Unit = {
-    val d = delta(batch, groupCols, value)
-    RollupMaintain.applyBatchWith(s, stateDir, batchId) {
-      case Some(aux) => applyDelta(aux, d, groupCols)
-      // no state yet: from-earliest CDC classifies everything as an
-      // insert, so the first delta IS the aux state
-      case None => d.select(((groupCols :+ "v").map(col) :+
-        col("dcnt").as("cnt")): _*).filter(col("cnt") =!= 0)
-    }
-  }
-
-  /** Continuous maintenance: the lake CDC streaming source feeds
-    * [[applyBatch]] — distinct/min/max stay current with every commit,
-    * end to end O(changed rows), crash-replay safe through the stream
-    * checkpoint + per-batch generations.
+  /** Continuous maintenance: every new commit on the table runs
+    * [[advance]], so distinct/min/max stay current with every commit,
+    * end to end O(changed rows); a batch Spark replays only re-sweeps
+    * (the [[RollupMaintain.runStream]] contract).
     */
   def runStream(spark: SparkSession, tablePath: String, stateDir: String,
       groupCols: Seq[String], value: Column, checkpointDir: String,
-      triggerSeconds: Int = 1): StreamingQuery =
-    spark.readStream.format("graft-lake")
-      .option("query.type", "changes")
-      .load(tablePath)
-      .writeStream
-      .queryName("distinct-maintain")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(s"$triggerSeconds seconds"))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          applyBatch(batch.sparkSession, batch, stateDir, groupCols, value,
-            batchId)
-      }
-      .start()
+      triggerSeconds: Int = 1): StreamingQuery = {
+    val t = LakeTable.load(spark, tablePath)
+    LakeFollow.start(spark, "distinct-maintain", Seq(tablePath),
+        checkpointDir, triggerSeconds) {
+      (_, _) => advance(spark, t, stateDir, groupCols, value); ()
+    }
+  }
 }

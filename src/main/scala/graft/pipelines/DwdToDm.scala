@@ -1,7 +1,9 @@
 package graft.pipelines
 
-import graft.lake.{LakeTable, TableMeta}
+import graft.lake.{LakeTable, TxnGroup}
+import graft.streaming.LakeFollow
 import graft.util.Sessions
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -13,7 +15,9 @@ import org.apache.spark.sql.types.DecimalType
   * Replay safety (SURVEY §7 hard part 5): the reference double-counts if
   * a delta batch is re-applied after a crash. Here the begin-watermark is
   * committed atomically with the DM upsert (`extra`), and resume reads it
-  * back from the timeline.
+  * back from the timeline. The poll loop ([[run]]), the streaming mode
+  * ([[runStreaming]]) and [[MultiMartHop]] all run the one [[step]];
+  * they differ in pacing and in how the mart upserts commit.
   *
   * Scale: the delta aggregation is a partial (map-side combined) hash agg
   * over only the incremental files; the merge join touches the DM table
@@ -32,12 +36,7 @@ object DwdToDm {
       .agg(sum(col(cfg.aggCol).cast(dec)).as(sumName(cfg))) // A1
 
   def resumeWatermark(dm: LakeTable): Option[String] =
-    // visibleInstants, not instants: an in-doubt multi-table prepare's
-    // watermark must not be resumed from until its txn commits
-    dm.timeline.visibleInstants().reverse.iterator
-      .map(dm.timeline.read)
-      .flatMap(_.extra.get(WatermarkKey))
-      .nextOption()
+    OdsToDwd.committedWatermark(dm, WatermarkKey)
 
   /** Delta agg ⟕ current DM, additive merge (DWD2DM.scala:75-79). */
   def merge(delta: DataFrame, current: DataFrame, cfg: PipelineConfig): DataFrame = {
@@ -51,91 +50,84 @@ object DwdToDm {
   }
 
   def iteration(spark: SparkSession, cfg: PipelineConfig, dwd: LakeTable,
-      dm: LakeTable, begin: String): String = {
+      dm: LakeTable, begin: String): String =
+    step(dwd, Seq(cfg -> dm), begin)(upsertEach)
+
+  /** The hop's step over one or more marts: each mart's additive merge of
+    * the DWD increment `(begin, latest]`, handed to `commit` with the
+    * watermark in every upsert's extra. Returns the next begin.
+    */
+  private[pipelines] def step(dwd: LakeTable,
+      marts: Seq[(PipelineConfig, LakeTable)], begin: String)(
+      commit: Seq[TxnGroup.TxnUpsert] => Unit): String = {
     val end = dwd.latestCommit.getOrElse(return begin)
     if (begin == end) return begin
     val inc = dwd.incremental(begin, end).drop("_record_key", "_commit_time")
     if (inc.isEmpty) return end
-    val delta = aggregate(inc, cfg)
     // precombine = the source watermark instant: monotone across
     // iterations and identical on replay of the same delta, so a crashed
     // and re-run iteration converges instead of racing wall-clock.
-    val merged = merge(delta, dm.snapshotUser(), cfg)
-      .withColumn(cfg.precombineField, lit(end.toLong))
-    dm.upsert(merged, extra = Map(WatermarkKey -> end))
+    commit(marts.map { case (cfg, dm) =>
+      val merged = merge(aggregate(inc, cfg), dm.snapshotUser(), cfg)
+        .withColumn(cfg.precombineField, lit(end.toLong))
+      TxnGroup.TxnUpsert(dm, merged, extra = Map(WatermarkKey -> end))
+    })
     end
   }
 
-  /** The same hop driven by the graft-lake streaming source: each
-    * micro-batch is an exact commit range `(begin, end]` (the first one
-    * replays the whole timeline — the init aggregation falls out for
-    * free), foreachBatch applies the SAME additive merge, and the
-    * commit-extra watermark keeps a checkpoint-replayed batch from
-    * double-counting — end-to-end exactly-once on top of at-least-once
-    * delivery.
+  /** Where the hop resumes: the marts' committed watermark (they commit
+    * together, so the head's speaks for all), or on first start the init
+    * aggregation (DWD2DM.scala:28-41) handed to `commit`. The init is
+    * pinned to the recorded watermark: aggregating the LIVE snapshot
+    * would include a DWD commit landing between latestCommit and the
+    * scan, which the next incremental(begin = end) re-reads — double
+    * count.
     */
-  def runStreaming(spark: SparkSession,
-      cfg: PipelineConfig): org.apache.spark.sql.streaming.StreamingQuery = {
-    val dm = LakeTable.create(spark, cfg.tablePath,
-      TableMeta(cfg.tableName, cfg.recordKeyFields, cfg.precombineField,
-        cfg.partitionFields, cfg.tableType))
-    graft.streaming.ProgressListener.attach(spark, s"dwd2dm-${cfg.tableName}")
-    spark.readStream.format("graft-lake").load(cfg.sourceTablePath)
-      .writeStream
-      .queryName(s"dwd2dm-${cfg.tableName}")
-      .option("checkpointLocation", cfg.checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger
-        .ProcessingTime(s"${cfg.triggerSeconds} seconds"))
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        if (!b.isEmpty) {
-          val batch = org.apache.spark.sql.graft.ColumnBridge.asBatch(b)
-            .persist() // feeds the watermark probe AND the delta agg
-          try {
-            val end = batch.agg(max(col(LakeTable.CommitTimeCol)))
-              .head().getString(0)
-            val wm = resumeWatermark(dm).getOrElse("")
-            if (end > wm) { // replayed batch: already merged, skip
-              val inc = batch.drop(LakeTable.RecordKeyCol,
-                LakeTable.CommitTimeCol, LakeTable.DeletedCol)
-              val delta = aggregate(inc, cfg)
-              // very first batch: no DM schema yet — merge against empty
-              val current =
-                if (dm.userSchema.isDefined) dm.snapshotUser()
-                else spark.createDataFrame(
-                  spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                  delta.schema)
-              val merged = merge(delta, current, cfg)
-                .withColumn(cfg.precombineField, lit(end.toLong))
-              dm.upsert(merged, extra = Map(WatermarkKey -> end))
-              ()
-            }
-          } finally { batch.unpersist(); () }
-        }
+  private[pipelines] def resume(dwd: LakeTable,
+      marts: Seq[(PipelineConfig, LakeTable)])(
+      commit: Seq[TxnGroup.TxnUpsert] => Unit): String =
+    resumeWatermark(marts.head._2).getOrElse {
+      val end = dwd.latestCommit.getOrElse("earliest")
+      if (end != "earliest") {
+        val snap = dwd.snapshotAsOf(end)
+          .drop(LakeTable.RecordKeyCol, LakeTable.CommitTimeCol)
+        commit(marts.map { case (cfg, dm) =>
+          TxnGroup.TxnUpsert(dm, aggregate(snap, cfg)
+            .withColumn(cfg.precombineField, lit(end.toLong)),
+            extra = Map(WatermarkKey -> end))
+        })
       }
-      .start()
+      end
+    }
+
+  /** A single mart's commit: its own upsert, no transaction. */
+  private val upsertEach: Seq[TxnGroup.TxnUpsert] => Unit =
+    _.foreach(u => u.table.upsert(u.data, extra = u.extra))
+
+  /** The hop as a stream: every new DWD commit resumes the marts from
+    * their committed watermark and steps them to the head — the same
+    * [[step]] as the poll loop, so a batch Spark replays finds nothing
+    * past the watermark. `head` names the source, checkpoint and trigger.
+    */
+  private[pipelines] def follow(spark: SparkSession, name: String,
+      head: PipelineConfig, marts: Seq[(PipelineConfig, LakeTable)])(
+      commit: Seq[TxnGroup.TxnUpsert] => Unit): StreamingQuery = {
+    val dwd = LakeTable.load(spark, head.sourceTablePath)
+    LakeFollow.start(spark, name, Seq(head.sourceTablePath),
+        head.checkpointDir, head.triggerSeconds) {
+      (_, _) => step(dwd, marts, resume(dwd, marts)(commit))(commit); ()
+    }
   }
+
+  /** [[run]] driven by new DWD commits instead of a timer ([[follow]]). */
+  def runStreaming(spark: SparkSession, cfg: PipelineConfig): StreamingQuery =
+    follow(spark, s"dwd2dm-${cfg.tableName}", cfg,
+      Seq(cfg -> cfg.target(spark)))(upsertEach)
 
   def run(spark: SparkSession, cfg: PipelineConfig): Unit = {
     val dwd = LakeTable.load(spark, cfg.sourceTablePath)
-    val dm = LakeTable.create(spark, cfg.tablePath,
-      TableMeta(cfg.tableName, cfg.recordKeyFields, cfg.precombineField,
-        cfg.partitionFields, cfg.tableType))
-    var begin = resumeWatermark(dm) match {
-      case Some(w) => w
-      case None =>
-        // init: full snapshot aggregation (DWD2DM.scala:28-41), pinned to
-        // the recorded watermark: aggregating the LIVE snapshot would
-        // include a DWD commit landing between latestCommit and the scan,
-        // which the next incremental(begin = end) re-reads — double count.
-        val end = dwd.latestCommit.getOrElse("earliest")
-        if (end != "earliest") {
-          val init = aggregate(dwd.snapshotAsOf(end)
-            .drop(LakeTable.RecordKeyCol, LakeTable.CommitTimeCol), cfg)
-            .withColumn(cfg.precombineField, lit(end.toLong))
-          dm.upsert(init, extra = Map(WatermarkKey -> end))
-        }
-        end
-    }
+    val dm = cfg.target(spark)
+    var begin = resume(dwd, Seq(cfg -> dm))(upsertEach)
     var iter = 0
     while (cfg.maxIterations < 0 || iter < cfg.maxIterations) { // T6
       if (iter > 0) Thread.sleep(cfg.pollIntervalMs)

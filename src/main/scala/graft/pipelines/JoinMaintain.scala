@@ -1,6 +1,7 @@
 package graft.pipelines
 
 import graft.lake.LakeTable
+import graft.streaming.LakeFollow
 import graft.util.Generations
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -195,39 +196,23 @@ object JoinMaintain {
     Some(marks(Generations.publish(s, stateDir, Prefix, name, next)))
   }
 
-  /** Continuous maintenance of the joined view: EITHER table's CDC
-    * stream triggers one [[advancePersisted]], which folds everything
+  /** Continuous maintenance of the joined view: a new commit on EITHER
+    * table triggers one [[advancePersisted]], which folds everything
     * committed on BOTH sides since the stored two-table watermark — the
     * bilateral analog of [[RollupMaintain]]/[[DistinctMaintain]]/
-    * [[Scd2]]'s runStream. One stream (the union of both change feeds,
-    * reduced to ticks) drives one sequential foreachBatch, so two
-    * advances never race on the state dir; idempotence + watermark
-    * bounding make crash replay a re-sweep.
+    * [[Scd2]]'s runStream. One query follows both tables and runs one
+    * sequential foreachBatch, so two advances never race on the state
+    * dir; idempotence + watermark bounding make crash replay a re-sweep.
     */
   def runStream(spark: org.apache.spark.sql.SparkSession, aPath: String,
       bPath: String, stateDir: String, aKey: String, bKey: String,
       outCols: Seq[String], checkpointDir: String, triggerSeconds: Int = 1)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    def ticks(path: String) =
-      spark.readStream.format("graft-lake")
-        .option("query.type", "changes")
-        .load(path)
-        .select(org.apache.spark.sql.functions.lit(1).as("_tick"))
-    ticks(aPath).unionByName(ticks(bPath))
-      .writeStream
-      .queryName("join-maintain")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger
-        .ProcessingTime(s"$triggerSeconds seconds"))
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          advancePersisted(s, graft.lake.LakeTable.load(s, aPath),
-            graft.lake.LakeTable.load(s, bPath), stateDir,
-            aKey, bKey, outCols)
-          ()
-        }
-      }
-      .start()
+    val (a, b) = (LakeTable.load(spark, aPath), LakeTable.load(spark, bPath))
+    LakeFollow.start(spark, "join-maintain", Seq(aPath, bPath),
+        checkpointDir, triggerSeconds) {
+      (_, _) =>
+        advancePersisted(spark, a, b, stateDir, aKey, bKey, outCols); ()
+    }
   }
 }

@@ -1,27 +1,27 @@
 package graft.pipelines
 
-import graft.lake.{LakeTable, TableMeta, TxnGroup}
+import graft.lake.TxnGroup
 import graft.util.Sessions
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming DWD → N marts under ONE transaction per micro-batch — the
   * reference's DWD2DM loop (reference DWD2DM.scala:54-85) at streaming
   * cadence, made atomic across marts.
   *
-  * Every micro-batch from the graft-lake streaming source (an exact
-  * commit range of the DWD table) fans out into one additive merge per
-  * mart ([[DwdToDm.aggregate]]/[[DwdToDm.merge]] — each mart has its own
-  * grouping keys), and ALL mart upserts commit through
-  * [[TxnGroup.commit]] with the shared source watermark riding every
-  * prepare's extra. Consequences:
+  * Every new DWD commit runs the [[DwdToDm]] hop's own step over all
+  * marts ([[DwdToDm.follow]]): one additive merge per mart (each mart
+  * has its own grouping keys) of the increment past the marts' shared
+  * watermark, or the init aggregation on first start. The only
+  * difference from [[DwdToDm.runStreaming]] is the commit: ALL mart
+  * upserts commit through [[TxnGroup.commit]] with the shared source
+  * watermark riding every prepare's extra. Consequences:
   *
   *  - a crash anywhere inside the batch — including BETWEEN two marts'
   *    prepares, the reference's torn-write window (SURVEY hard part #5)
   *    — leaves every mart's visible state and watermark at the previous
-  *    batch: the checkpoint replays the range, the watermark guard sees
-  *    it is still unapplied, and the rerun converges with no double
-  *    count on ANY mart;
+  *    batch: the restarted step resumes from that watermark and
+  *    converges with no double count on ANY mart;
   *  - after the decision, all marts advance together — a consumer
   *    joining two marts never observes one post-batch and one pre-batch.
   *
@@ -47,76 +47,38 @@ object MultiMartHop {
     * (`targetTablePath`/`tableName`) and aggregation shape
     * (`aggKeys`/`aggCol`); the source, checkpoint, trigger, and
     * maintenance cadence (`maintainEvery` — run each mart's one-call
-    * `maintain()` after every N non-empty batches, 0 disables; the
+    * `maintain()` after every N committed steps, 0 disables; the
     * StreamIngest auto-optimize knob) come from the head config.
     */
   def runStreaming(spark: SparkSession, marts: Seq[PipelineConfig])
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     require(marts.nonEmpty, "need at least one mart")
     require(marts.map(_.tablePath).distinct.size == marts.size,
       "each mart needs its own table path")
     val maintainEvery = marts.head.maintainEvery
     val batchesSinceMaintain = new java.util.concurrent.atomic.AtomicInteger(0)
-    val src = marts.head.sourceTablePath
-    val tables = marts.map(c => LakeTable.create(spark, c.tablePath,
-      TableMeta(c.tableName, c.recordKeyFields, c.precombineField,
-        c.partitionFields, c.tableType)))
+    val tables = marts.map(_.target(spark))
     tables.foreach(_.recoverTxns())
-    graft.streaming.ProgressListener.attach(spark, "multimart-hop")
-    spark.readStream.format("graft-lake").load(src)
-      .writeStream
-      .queryName("multimart-hop")
-      .option("checkpointLocation", marts.head.checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger
-        .ProcessingTime(s"${marts.head.triggerSeconds} seconds"))
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        if (!b.isEmpty) {
-          val batch = org.apache.spark.sql.graft.ColumnBridge.asBatch(b)
-            .persist() // feeds the watermark probe AND every mart's delta
-          try {
-            val end = batch.agg(max(col(LakeTable.CommitTimeCol)))
-              .head().getString(0)
-            // all marts share one watermark (they advance atomically or
-            // not at all), so the head's committed value speaks for all
-            val wm = DwdToDm.resumeWatermark(tables.head).getOrElse("")
-            if (end > wm) { // replayed batch: already merged everywhere
-              val inc = batch.drop(LakeTable.RecordKeyCol,
-                LakeTable.CommitTimeCol, LakeTable.DeletedCol)
-              val ops = marts.lazyZip(tables).map { (cfg, dm) =>
-                val delta = DwdToDm.aggregate(inc, cfg)
-                val current =
-                  if (dm.userSchema.isDefined) dm.snapshotUser()
-                  else spark.createDataFrame(
-                    spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                    delta.schema)
-                val merged = DwdToDm.merge(delta, current, cfg)
-                  .withColumn(cfg.precombineField, lit(end.toLong))
-                TxnGroup.TxnUpsert(dm, merged,
-                  extra = Map(DwdToDm.WatermarkKey -> end))
-              }
-              TxnGroup.commit(ops)
-              // auto-maintenance OUTSIDE the transaction (services are
-              // per-table housekeeping commits, never txn participants)
-              // and BEST-EFFORT: the batch is already committed, so a
-              // housekeeping failure must not abort the stream
-              if (maintainEvery > 0 &&
-                  batchesSinceMaintain.incrementAndGet() >= maintainEvery) {
-                batchesSinceMaintain.set(0)
-                tables.foreach { dm =>
-                  try { dm.maintain(); () }
-                  catch {
-                    case scala.util.control.NonFatal(e) => log.warn(
-                      s"maintain() failed on ${dm.path} (batch already " +
-                        s"committed; will retry next cadence)", e)
-                  }
-                }
-              }
-              ()
+    DwdToDm.follow(spark, "multimart-hop", marts.head, marts.zip(tables)) {
+      ops =>
+        TxnGroup.commit(ops)
+        // auto-maintenance OUTSIDE the transaction (services are
+        // per-table housekeeping commits, never txn participants) and
+        // BEST-EFFORT: the batch is already committed, so a housekeeping
+        // failure must not abort the stream
+        if (maintainEvery > 0 &&
+            batchesSinceMaintain.incrementAndGet() >= maintainEvery) {
+          batchesSinceMaintain.set(0)
+          tables.foreach { dm =>
+            try { dm.maintain(); () }
+            catch {
+              case scala.util.control.NonFatal(e) => log.warn(
+                s"maintain() failed on ${dm.path} (batch already " +
+                  s"committed; will retry next cadence)", e)
             }
-          } finally { batch.unpersist(); () }
+          }
         }
-      }
-      .start()
+    }
   }
 
   /** Parse the `name:aggKey[+aggKey...]:aggCol[,name:...]` marts spec

@@ -1,8 +1,10 @@
 package graft.pipelines
 
-import graft.lake.{LakeTable, TableMeta}
+import graft.lake.LakeTable
+import graft.streaming.LakeFollow
 import graft.util.Sessions
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.functions._
 
 /** ODS → DWD: poll-loop incremental read + dim enrichment join + keyed
@@ -13,7 +15,9 @@ import org.apache.spark.sql.functions._
   *    stale temp view for the life of the loop — SURVEY §3.2 footgun);
   *  - the incremental begin-watermark is persisted in the DWD commit
   *    (`extra`), so a crash between read and write cannot double-apply;
-  *  - the loop is bounded by `--max-iterations` for testability (T6).
+  *  - the loop is bounded by `--max-iterations` for testability (T6);
+  *  - `--streaming true` runs the same [[iteration]] on every new ODS
+  *    commit instead of on a timer ([[runStreaming]]).
   *
   * Scale: the dim side is broadcast (small dimension table, reference
   * relies on CBO for the same plan, SparkHelper.scala:18); the incremental
@@ -24,13 +28,19 @@ object OdsToDwd {
   val WatermarkKey = "ods.watermark"
 
   def resumeWatermark(dwd: LakeTable): String =
-    // visibleInstants, not instants: an in-doubt multi-table prepare's
-    // watermark must not be resumed from until its txn commits
-    dwd.timeline.visibleInstants().reverse.iterator
-      .map(dwd.timeline.read)
-      .flatMap(_.extra.get(WatermarkKey))
+    committedWatermark(dwd, WatermarkKey).getOrElse("earliest")
+
+  /** The newest watermark a hop committed under `key` on `t` (shared
+    * with [[DwdToDm.resumeWatermark]]). Visible instants only: an
+    * in-doubt multi-table prepare's watermark must not be resumed from
+    * until its txn commits.
+    */
+  private[pipelines] def committedWatermark(t: LakeTable,
+      key: String): Option[String] =
+    t.timeline.visibleInstants().reverse.iterator
+      .map(t.timeline.read)
+      .flatMap(_.extra.get(key))
       .nextOption()
-      .getOrElse("earliest")
 
   def iteration(spark: SparkSession, cfg: PipelineConfig, ods: LakeTable,
       dwd: LakeTable, begin: String): String = {
@@ -61,57 +71,25 @@ object OdsToDwd {
     end
   }
 
-  /** The same hop as ONE Structured Streaming query: lake change-feed
-    * source → stream-static broadcast dim join → keyed lake sink.
-    * Replaces the hand-rolled poll loop with checkpointed exactly-once
-    * progress (offsets = ODS commits; the sink's per-query batch-id
-    * watermark absorbs replays). Trade-off vs [[run]]: the dim SNAPSHOT
-    * is pinned at stream start (stream-static joins re-execute a fixed
-    * static plan per micro-batch) — restart the query to refresh the
-    * dim; the poll loop re-reads it every iteration instead.
+  /** The same hop as one Structured Streaming query: every new ODS
+    * commit triggers [[iteration]] from the last committed
+    * `ods.watermark`, so the streaming and poll-loop modes share one
+    * step (the per-iteration dim re-read, the watermark committed with
+    * the DWD upsert). The checkpoint only paces the triggers: a batch
+    * Spark replays finds nothing past the watermark.
     */
-  def runStreaming(spark: SparkSession,
-      cfg: PipelineConfig): org.apache.spark.sql.streaming.StreamingQuery = {
-    val dimDf =
-      if (LakeTable.exists(spark, cfg.dimTablePath))
-        LakeTable.load(spark, cfg.dimTablePath).snapshotUser()
-      else spark.read.parquet(cfg.dimTablePath)
-    val dimSel =
-      dimDf.select((cfg.joinRightKey +: cfg.dimSelect).distinct.map(col): _*)
-    val enrichCols = cfg.dimSelect.map(c =>
-      coalesce(col(c), lit(cfg.dimDefault)).as(c)) // nvl defaults, P13
-    val src = spark.readStream.format("graft-lake")
-      .load(cfg.sourceTablePath)
-      .drop(LakeTable.RecordKeyCol)
-    val userCols = src.columns.filterNot(c =>
-      c == LakeTable.CommitTimeCol || c == LakeTable.DeletedCol)
-    val joined = src
-      .join(broadcast(dimSel),
-        src(cfg.joinLeftKey) === dimSel(cfg.joinRightKey), "left") // J1
-      .select(userCols.map(src(_)).toIndexedSeq ++ enrichCols :+
-        src(LakeTable.CommitTimeCol): _*)
-      // source-commit-time precombine, same rationale as [[iteration]]
-      .withColumn(cfg.precombineField, col(LakeTable.CommitTimeCol).cast("long"))
-      .drop(LakeTable.CommitTimeCol)
-    graft.streaming.ProgressListener.attach(spark, s"ods2dwd-${cfg.tableName}")
-    joined.writeStream.format("graft-lake")
-      .queryName(s"ods2dwd-${cfg.tableName}")
-      .option("checkpointLocation", cfg.checkpointDir)
-      .option("path", cfg.tablePath)
-      .option("recordkey.field", cfg.recordKeyFields.mkString(","))
-      .option("precombine.field", cfg.precombineField)
-      .option("partition.fields", cfg.partitionFields.mkString(","))
-      .option("table.type", cfg.tableType)
-      .trigger(org.apache.spark.sql.streaming.Trigger
-        .ProcessingTime(s"${cfg.triggerSeconds} seconds"))
-      .start()
+  def runStreaming(spark: SparkSession, cfg: PipelineConfig): StreamingQuery = {
+    val ods = LakeTable.load(spark, cfg.sourceTablePath)
+    val dwd = cfg.target(spark)
+    LakeFollow.start(spark, s"ods2dwd-${cfg.tableName}",
+        Seq(cfg.sourceTablePath), cfg.checkpointDir, cfg.triggerSeconds) {
+      (_, _) => iteration(spark, cfg, ods, dwd, resumeWatermark(dwd)); ()
+    }
   }
 
   def run(spark: SparkSession, cfg: PipelineConfig): Unit = {
     val ods = LakeTable.load(spark, cfg.sourceTablePath)
-    val dwd = LakeTable.create(spark, cfg.tablePath,
-      TableMeta(cfg.tableName, cfg.recordKeyFields, cfg.precombineField,
-        cfg.partitionFields, cfg.tableType))
+    val dwd = cfg.target(spark)
     var begin = resumeWatermark(dwd) // reference: max(_hoodie_commit_time)
     var iter = 0
     while (cfg.maxIterations < 0 || iter < cfg.maxIterations) { // T6

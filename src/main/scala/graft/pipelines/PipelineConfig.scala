@@ -1,5 +1,8 @@
 package graft.pipelines
 
+import graft.lake.{LakeTable, TableMeta}
+import org.apache.spark.sql.SparkSession
+
 /** Shared CLI configuration for all pipeline programs — the engine's "API"
   * (reference conf/Config.scala:3-39: one ~30-field case class shared by
   * every main). Flags here are long-form only; the reference's duplicated
@@ -38,8 +41,11 @@ case class PipelineConfig(
     targetTablePath: String = "",
     pollIntervalMs: Long = 30000L, // reference Config.scala:38
     maxIterations: Int = -1, // bounded loops for tests (SURVEY §7.4)
-    /** OdsToDwd: use the graft-lake streaming source instead of the
-      * reference's poll loop (T6 upgraded to Structured Streaming).
+    /** OdsToDwd / DwdToDm: drive the hop's step from a Structured
+      * Streaming query over the source table instead of the reference's
+      * poll loop (T6). Each new source commit triggers the same
+      * watermark-committed step the poll loop runs; only the pacing
+      * differs.
       */
     streamingMode: Boolean = false,
     outputDir: String = "",
@@ -70,6 +76,13 @@ case class PipelineConfig(
   def tablePath: String =
     if (targetTablePath.nonEmpty) targetTablePath
     else s"$basePath/$database/$tableName"
+
+  /** The target lake table at [[tablePath]], created from this config's
+    * key, precombine, partition and type settings when absent.
+    */
+  def target(spark: SparkSession): LakeTable =
+    LakeTable.create(spark, tablePath, TableMeta(tableName, recordKeyFields,
+      precombineField, partitionFields, tableType))
 }
 
 object PipelineConfig {

@@ -1,9 +1,10 @@
 package graft.pipelines
 
 import graft.lake.LakeTable
+import graft.streaming.LakeFollow
 import graft.util.Generations
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Incremental view maintenance (IVM) over the lake CDC feed: a
@@ -112,61 +113,19 @@ object RollupMaintain {
     Some(Generations.publish(s, stateDir, Prefix, name, next))
   }
 
-  /** One CDC micro-batch folded into the persisted state, keyed by the
-    * STREAM's batch id (zero-padded so generation names stay ordered).
-    * Idempotent per batch id — a replay after a crash between the state
-    * write and the stream's checkpoint commit sees its own generation
-    * and skips. Use a state dir per maintenance mode: batch-id
-    * generations (this) and instant generations ([[advance]]) don't mix.
-    */
-  def applyBatch(s: SparkSession, batch: DataFrame, stateDir: String,
-      groupCols: Seq[String], value: Column, batchId: Long): Unit = {
-    val d = delta(batch, groupCols, value)
-    // no state yet: from-earliest CDC classifies everything as an insert,
-    // so the first delta IS the rollup
-    applyBatchWith(s, stateDir, batchId)(cur => applyDelta(
-      cur.getOrElse(d.limit(0).select(groupCols.map(col) ++ Seq(
-        col("dcnt").as("cnt"), col("dsum").as("sum_v")): _*)),
-      d, groupCols))
-  }
-
-  /** The batch-id apply, shared with [[DistinctMaintain]]: `next` maps
-    * the current state (None before the first batch) to the new one. A
-    * replayed batch writes nothing; when it is still the newest it
-    * finishes the sweep its crash interrupted.
-    */
-  private[pipelines] def applyBatchWith(s: SparkSession, stateDir: String,
-      batchId: Long)(next: Option[DataFrame] => DataFrame): Unit = {
-    val name = f"$batchId%020d"
-    val gens = Generations.list(s, stateDir, Prefix)
-    if (gens.headOption.contains(name))
-      Generations.publish(s, stateDir, Prefix, name, None)
-    else if (!gens.contains(name)) {
-      val cur = gens.headOption.map(Generations.read(s, stateDir, Prefix, _))
-      Generations.publish(s, stateDir, Prefix, name, Some(next(cur)))
-    }
-    ()
-  }
-
-  /** Continuous IVM: the lake CDC streaming source feeds [[applyBatch]]
-    * — the rollup stays current with every commit, end to end O(changed
-    * rows), with the stream checkpoint + per-batch generations making
-    * the whole loop crash-replay safe.
+  /** Continuous IVM: every new commit on the table runs [[advance]], so
+    * the rollup stays current with every commit, end to end O(changed
+    * rows). The stream checkpoint only paces the triggers: the state's
+    * generation name is its watermark, so a batch Spark replays only
+    * re-sweeps.
     */
   def runStream(spark: SparkSession, tablePath: String, stateDir: String,
       groupCols: Seq[String], value: Column, checkpointDir: String,
-      triggerSeconds: Int = 1): StreamingQuery =
-    spark.readStream.format("graft-lake")
-      .option("query.type", "changes")
-      .load(tablePath)
-      .writeStream
-      .queryName("rollup-maintain")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(s"$triggerSeconds seconds"))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          applyBatch(batch.sparkSession, batch, stateDir, groupCols, value,
-            batchId)
-      }
-      .start()
+      triggerSeconds: Int = 1): StreamingQuery = {
+    val t = LakeTable.load(spark, tablePath)
+    LakeFollow.start(spark, "rollup-maintain", Seq(tablePath), checkpointDir,
+        triggerSeconds) {
+      (_, _) => advance(spark, t, stateDir, groupCols, value); ()
+    }
+  }
 }

@@ -1,6 +1,7 @@
 package graft.pipelines
 
 import graft.lake.{LakeTable, Timeline}
+import graft.streaming.LakeFollow
 import graft.util.Generations
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -197,36 +198,24 @@ object Scd2 {
     Some(mark(Generations.publish(s, stateDir, Prefix, name, next)))
   }
 
-  /** Continuous dimension maintenance: the lake CDC streaming source
-    * triggers one [[advance]] per non-empty micro-batch, so the SCD2
-    * history stays current with every commit — the same always-on
-    * contract as [[DistinctMaintain.runStream]]/[[RollupMaintain]].
-    *
-    * The batch CONTENT is only the trigger: a micro-batch may span
-    * several commits, and version chaining needs per-commit order, so
-    * the advance re-derives its events from the timeline's per-commit
-    * feeds (bounded by the commits since the stored watermark).
-    * Crash-replay safe for free: advance is idempotent and
-    * watermark-bounded, so a replayed batch only re-sweeps.
+  /** Continuous dimension maintenance: every new commit on the table
+    * runs one [[advance]], so the SCD2 history stays current with every
+    * commit — the same always-on contract as
+    * [[DistinctMaintain.runStream]]/[[RollupMaintain]]. The advance
+    * derives its events from the timeline's per-commit feeds (a
+    * micro-batch may span several commits, and version chaining needs
+    * per-commit order), so the batch is only the trigger. Crash-replay
+    * safe for free: advance is idempotent and watermark-bounded, so a
+    * replayed batch only re-sweeps.
     */
   def runStream(spark: org.apache.spark.sql.SparkSession, tablePath: String,
       stateDir: String, keyCols: Seq[String], checkpointDir: String,
       triggerSeconds: Int = 1)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream.format("graft-lake")
-      .option("query.type", "changes")
-      .load(tablePath)
-      .writeStream
-      .queryName("scd2-maintain")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger
-        .ProcessingTime(s"$triggerSeconds seconds"))
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          advance(batch.sparkSession,
-            LakeTable.load(batch.sparkSession, tablePath), stateDir, keyCols)
-          ()
-        }
-      }
-      .start()
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    val t = LakeTable.load(spark, tablePath)
+    LakeFollow.start(spark, "scd2-maintain", Seq(tablePath),
+        checkpointDir, triggerSeconds) {
+      (_, _) => advance(spark, t, stateDir, keyCols); ()
+    }
+  }
 }

@@ -1,6 +1,7 @@
 package graft.pipelines
 
-import graft.lake.{LakeTable, TableMeta}
+import graft.lake.LakeTable
+import graft.sources.LakeSink
 import graft.util.Sessions
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -61,9 +62,7 @@ object StreamIngest {
     val schema = resolveSchema(spark, cfg)
     val batchesSinceMaintain = new java.util.concurrent.atomic.AtomicInteger(0)
     val bc = spark.sparkContext.broadcast(schema) // Y3, Log2Hudi.scala:52
-    val table = LakeTable.create(spark, cfg.tablePath,
-      TableMeta(cfg.tableName, cfg.recordKeyFields, cfg.precombineField,
-        cfg.partitionFields, cfg.tableType))
+    val table = cfg.target(spark)
     // T4: per-batch progress logging (reference Log2Hudi.scala:40-48)
     graft.streaming.ProgressListener.attach(spark, s"ingest-${cfg.tableName}")
     // T5: per-batch offset commit to a consumer-visible sidecar (the
@@ -79,12 +78,16 @@ object StreamIngest {
       .queryName(s"ingest-${cfg.tableName}") // T4
       .option("checkpointLocation", cfg.checkpointDir) // T3
       .trigger(Trigger.ProcessingTime(s"${cfg.triggerSeconds} seconds")) // T2
-      .foreachBatch { (batch: DataFrame, _: Long) => // T1
-        if (!batch.isEmpty) {
+      .foreachBatch { (batch: DataFrame, batchId: Long) => // T1
+        // a batch re-run after a lost checkpoint commit is already in
+        // the table: an insert would append its rows twice
+        val key = LakeSink.batchKey(spark)
+        if (!LakeSink.applied(table, key, batchId) && !batch.isEmpty) {
           val df = transform(batch, bc.value, cfg)
+          val extra = Map(key -> batchId.toString)
           cfg.writeOperation match {
-            case "insert" => table.insert(df)
-            case _        => table.upsert(df)
+            case "insert" => table.insert(df, extra)
+            case _        => table.upsert(df, extra = extra)
           }
           // auto-optimize: every N non-empty batches, run exactly the
           // services the table needs (compact/pack/cluster-incr/clean) —

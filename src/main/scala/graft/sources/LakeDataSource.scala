@@ -92,12 +92,13 @@ class LakeDataSource extends RelationProvider with SchemaRelationProvider
       parameters, this)
   }
 
-  /** `readStream.format("graft-lake")` — a streaming SOURCE over the
+  /** The streaming SOURCE (`spark.readStream` on this format) over the
     * commit timeline: offsets are commit instants and every micro-batch
     * is an incremental read `(begin, end]`, so consumers get a real
-    * change feed with checkpointed exactly-once progress. This replaces
-    * the reference's driver poll-loop incremental batching (T6,
-    * ODS2DWD.scala:64-71) with Structured Streaming's own machinery.
+    * change feed with checkpointed exactly-once progress. graft's own
+    * consumers start it through [[graft.streaming.LakeFollow]], which
+    * paces the reference's poll loop (T6, ODS2DWD.scala:64-71)
+    * with Structured Streaming's triggers and checkpoint.
     *
     * Options: `start.at` = `earliest` (default — replay the whole
     * timeline) | `latest` (only commits after stream start) | an instant;
@@ -140,8 +141,8 @@ class LakeDataSource extends RelationProvider with SchemaRelationProvider
     new LakeStreamSource(spark, p, startAt, streamMode(parameters))
   }
 
-  /** `writeStream.format("graft-lake")` — a first-class streaming sink
-    * replacing the reference's hand-rolled foreachBatch → Hudi write
+  /** The streaming sink (`df.writeStream` on this format): a first-class
+    * sink replacing the reference's hand-rolled foreachBatch → Hudi write
     * (Log2Hudi.scala:62-83, T1). Each micro-batch is one keyed commit;
     * the batch id is recorded in the commit's extra metadata, so a
     * checkpoint-replayed batch is detected and skipped — exactly-once on
@@ -368,51 +369,53 @@ object LakeDataSource {
 
 class LakeSink(spark: SparkSession, parameters: Map[String, String],
     provider: LakeDataSource) extends Sink {
-  import LakeSink.BatchKeyPrefix
-
-  /** Stable id of the owning streaming query, found by sink identity in
-    * the session's active queries (a v1 `Sink` IS the `StreamExecution`'s
-    * sink table, and `createSink` makes a fresh instance per query
-    * start). The id comes from the checkpoint's metadata file, so it is
-    * the right replay namespace: same across restarts of one checkpoint,
-    * fresh after a checkpoint wipe.
-    */
-  private lazy val queryId: Option[String] =
-    spark.streams.active.collectFirst {
-      case w: org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
-          if w.streamingQuery.sink eq this =>
-        w.id.toString
-    }
-
-  /** Per-query watermark key. Namespacing by query id keeps two streams
-    * into one table from eating each other's batch ids, and keeps a
-    * checkpoint reset (batch ids restart at 0) from silently dropping
-    * live batches against a stale global watermark.
-    */
-  private lazy val batchKey: String =
-    queryId.map(q => s"$BatchKeyPrefix.$q").getOrElse(BatchKeyPrefix)
 
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
     val p = parameters.getOrElse("path", throw new IllegalArgumentException(
       "graft-lake sink requires option(\"path\", ...)"))
-    val exists = LakeTable.exists(spark, p)
-    if (exists) {
-      val t = LakeTable.load(spark, p)
-      val applied = t.timeline.instants().reverseIterator
-        .map(t.timeline.read).flatMap(_.extra.get(batchKey)).nextOption()
-      if (applied.exists(_.toLong >= batchId)) return // replayed batch
-    }
+    val key = LakeSink.batchKey(spark)
+    if (LakeTable.exists(spark, p) &&
+        LakeSink.applied(LakeTable.load(spark, p), key, batchId))
+      return // replayed batch
     // the micro-batch frame is streaming-tagged — re-plan it as batch
     // rows, then reuse the batch write path (table creation + operation)
     val batchDf = org.apache.spark.sql.graft.ColumnBridge.asBatch(data)
     provider.createRelation(spark.sqlContext, SaveMode.Append,
-      parameters + ("stream.extra" -> s"$batchKey=$batchId"), batchDf)
+      parameters + ("stream.extra" -> s"$key=$batchId"), batchDf)
     ()
   }
 }
 
+/** The exactly-once rule of a streaming write into a lake table, shared
+  * by [[LakeSink]] and the foreachBatch writers (StreamIngest): each
+  * micro-batch commit records its batch id in `extra`, and a batch whose
+  * id is already recorded is a replay and writes nothing.
+  */
 object LakeSink {
   val BatchKeyPrefix = "stream.batch.id"
+
+  /** The commit-extra key the running query records its batch ids under,
+    * `stream.batch.id.<query id>`. Namespacing by query id keeps two
+    * streams into one table from eating each other's batch ids, and
+    * keeps a checkpoint reset (batch ids restart at 0) from silently
+    * dropping live batches against a stale global watermark. The id
+    * comes from the checkpoint's metadata file: the same across restarts
+    * of one checkpoint, fresh after a checkpoint wipe. Spark sets it on
+    * the query's batch thread, so call this from there.
+    */
+  def batchKey(spark: SparkSession): String =
+    Option(spark.sparkContext.getLocalProperty(
+      org.apache.spark.sql.execution.streaming.runtime.StreamExecution
+        .QUERY_ID_KEY))
+      .fold(BatchKeyPrefix)(q => s"$BatchKeyPrefix.$q")
+
+  /** Has `t` already committed stream batch `batchId` under `key`? True
+    * for a batch Spark re-runs because its checkpoint commit was lost.
+    */
+  def applied(t: LakeTable, key: String, batchId: Long): Boolean =
+    t.timeline.instants().reverseIterator
+      .map(t.timeline.read).flatMap(_.extra.get(key)).nextOption()
+      .exists(_.toLong >= batchId)
 }
 
 /** Streaming-source offset: a committed instant (zero-padded epoch

@@ -201,13 +201,13 @@ class ChangeFeedSpec extends AnyFunSuite with BeforeAndAfterAll {
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(s"$stateDir/gen_99999999999999999999"))
     assert(persisted() == before)
-    // replaying the newest batch id is a no-op even with different input
-    val lastGen = new java.io.File(stateDir).listFiles()
-      .filter(f => f.isDirectory &&
-        new java.io.File(f, "_SUCCESS").exists())
-      .map(_.getName.stripPrefix("gen_").toLong).max
-    RollupMaintain.applyBatch(spark, t.changes(Timeline.Earliest), stateDir,
-      grp, value, lastGen)
+    // a batch re-run after its checkpoint commit was lost is a no-op
+    val replayed = graft.streaming.StreamReplay.loseLastCommit(
+      s"$base/ivm2_ckpt")
+    val q2 = RollupMaintain.runStream(spark, t.path, stateDir, grp, value,
+      s"$base/ivm2_ckpt")
+    try q2.processAllAvailable() finally q2.stop()
+    assert(q2.recentProgress.exists(_.batchId == replayed))
     assert(persisted() == before)
   }
 

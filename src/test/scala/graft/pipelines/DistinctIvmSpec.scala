@@ -139,15 +139,13 @@ class DistinctIvmSpec extends AnyFunSuite with BeforeAndAfterAll {
     q.stop()
     assert(persisted() == recompute())
     assert(persisted()("x") == ((1L, 9L, 9L)))
-    // replaying the newest batch id is a no-op even with different input
+    // a batch re-run after its checkpoint commit was lost is a no-op
     val before = persisted()
-    val lastGen = new java.io.File(stateDir).listFiles()
-      .filter(f => f.isDirectory &&
-        new java.io.File(f, "_SUCCESS").exists())
-      .map(_.getName.stripPrefix("gen_").toLong).max
-    DistinctMaintain.applyBatch(spark,
-      t.changes(graft.lake.Timeline.Earliest), stateDir, grp, col("v"),
-      lastGen)
+    val replayed = graft.streaming.StreamReplay.loseLastCommit(s"$base/ckpt")
+    val q2 = DistinctMaintain.runStream(spark, t.path, stateDir, grp,
+      col("v"), s"$base/ckpt")
+    try q2.processAllAvailable() finally q2.stop()
+    assert(q2.recentProgress.exists(_.batchId == replayed))
     assert(persisted() == before)
   }
 

@@ -186,6 +186,68 @@ class PipelinesSpec extends AnyFunSuite with BeforeAndAfterAll {
       .filter(col("p_brand").isNull).count() == 0)
   }
 
+  private def odsFixture(work: String): LakeTable = {
+    BatchLoad.run(spark, PipelineConfig(
+      sourcePath = s"$sf/lineitem.parquet",
+      targetTablePath = s"$work/ods",
+      tableName = "ods_w",
+      recordKeyFields = Seq("l_orderkey", "l_linenumber"),
+      partitionFields = Seq("l_returnflag"),
+      repartitionNum = 4))
+    LakeTable.load(spark, s"$work/ods")
+  }
+
+  private def dwdCfg(work: String, dim: String) = PipelineConfig(
+    sourceTablePath = s"$work/ods",
+    dimTablePath = dim,
+    targetTablePath = s"$work/dwd",
+    checkpointDir = s"$work/ckpt",
+    tableName = "dwd_w",
+    recordKeyFields = Seq("l_orderkey", "l_linenumber"),
+    partitionFields = Seq("l_returnflag"),
+    joinLeftKey = "l_partkey", joinRightKey = "p_partkey",
+    dimSelect = Seq("p_brand"),
+    triggerSeconds = 1)
+
+  test("OdsToDwd streaming commits ods.watermark; a following poll iteration commits nothing") {
+    val work = tmp()
+    val ods = odsFixture(work)
+    val cfg = dwdCfg(work, s"$sf/part.parquet")
+    val q = OdsToDwd.runStreaming(spark, cfg)
+    try q.processAllAvailable() finally q.stop()
+    val dwd = LakeTable.load(spark, s"$work/dwd")
+    assert(OdsToDwd.resumeWatermark(dwd) == ods.latestCommit.get)
+    val commits = dwd.timeline.instants()
+    OdsToDwd.iteration(spark, cfg, ods, dwd, OdsToDwd.resumeWatermark(dwd))
+    assert(dwd.timeline.instants() == commits)
+  }
+
+  test("OdsToDwd streaming re-reads a lake dim: a dim upsert reaches later ODS rows") {
+    val work = tmp()
+    val ods = odsFixture(work)
+    val part = spark.read.parquet(s"$sf/part.parquet")
+      .withColumn("created_ts", lit(1L))
+    val dim = LakeTable.create(spark, s"$work/dim", graft.lake.TableMeta(
+      "part_dim", Seq("p_partkey"), "created_ts", Nil, "cow"))
+    dim.upsert(part)
+    val q = OdsToDwd.runStreaming(spark, dwdCfg(work, s"$work/dim"))
+    try {
+      q.processAllAvailable()
+      val row = spark.read.parquet(s"$sf/lineitem.parquet").limit(1)
+      val pk = row.head().getAs[Any]("l_partkey")
+      dim.upsert(part.filter(col("p_partkey") === pk)
+        .withColumn("p_brand", lit("Brand#new"))
+        .withColumn("created_ts", lit(2L)))
+      ods.upsert(row.withColumn("l_orderkey", col("l_orderkey") + 40000000L)
+        .withColumn("created_ts", lit(System.currentTimeMillis())))
+      q.processAllAvailable()
+    } finally q.stop()
+    val brands = LakeTable.load(spark, s"$work/dwd").snapshot()
+      .filter(col("l_orderkey") >= 40000000L)
+      .select("p_brand").collect().map(_.getString(0)).toSeq
+    assert(brands == Seq("Brand#new"))
+  }
+
   test("DwdToDm streaming mode: additive merge over the change feed") {
     val work = tmp()
     BatchLoad.run(spark, PipelineConfig(
@@ -255,6 +317,33 @@ class PipelinesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(t.snapshot().filter(col("event_id") === 3).select("value")
       .head().getDouble(0) == 99.0)
     assert(t.history().exists(_.operation == "compact"))
+  }
+
+  test("StreamIngest insert: a batch re-run after a lost checkpoint commit is not appended twice") {
+    val work = tmp()
+    Files.createDirectories(Paths.get(s"$work/inbox"))
+    Files.write(Paths.get(s"$work/inbox/b1.json"),
+      (1 to 10).map(i => s"""{"event_id":$i,"value":$i.5,"ts":${100 + i}}""")
+        .mkString("\n").getBytes)
+    def start() = StreamIngest.run(spark, PipelineConfig(
+      inboxDir = s"$work/inbox",
+      checkpointDir = s"$work/ckpt",
+      triggerSeconds = 1,
+      sampleJson = """{"event_id":1,"value":1.5,"ts":100}""",
+      targetTablePath = s"$work/ins_lake",
+      tableName = "ins_lake",
+      recordKeyFields = Seq("event_id"),
+      precombineField = "ts",
+      writeOperation = "insert"))
+    val q = start()
+    try q.processAllAvailable() finally q.stop()
+    def rows() = LakeTable.load(spark, s"$work/ins_lake").snapshot().count()
+    assert(rows() == 10)
+    val replayed = graft.streaming.StreamReplay.loseLastCommit(s"$work/ckpt")
+    val q2 = start()
+    try q2.processAllAvailable() finally q2.stop()
+    assert(q2.recentProgress.exists(_.batchId == replayed))
+    assert(rows() == 10)
   }
 
   test("StreamIngest: inbox JSON lines → lake table with logday/hm") {
