@@ -22,7 +22,7 @@ import java.nio.charset.StandardCharsets
   * WIDENED bounds (binary stats may be truncated to a lower-bound min /
   * incremented upper-bound max, or omitted entirely for very long
   * values). Widened key/commit bounds only ever ENLARGE the candidate
-  * set of the consumers (`matchedFiles` re-verifies by semi-join;
+  * set of the consumers (`tagFiles` re-verifies by an exact scan;
   * incremental's maxCommit skip fires only when the upper bound proves
   * no row qualifies) — never drop data. Whenever a needed statistic is
   * absent or ambiguous, [[read]] returns None and the caller falls back

@@ -31,7 +31,7 @@ import org.apache.parquet.io.api.Binary
   * Safety: strictly a may-contain test. A missing bloom (files written
   * before this feature, or a column chunk without one), an unreadable
   * footer, or any surprise keeps the file — pruning degrades to the
-  * existing range-prune + semi-join, never drops a matching file.
+  * existing range prune + exact scan, never drops a matching file.
   */
 object KeyBloom {
 

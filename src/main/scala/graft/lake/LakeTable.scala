@@ -30,11 +30,11 @@ import org.apache.spark.storage.StorageLevel
   *    (reference ODS2DWD.scala:51-56) plus time travel `snapshotAsOf`.
   *
   * Scale design (100 TB target): writes touch only matched files, found by
-  * a two-step prune — (1) driver-side key-range overlap against per-file
-  * min/max key stats from commit metadata (no data read), then (2) one
-  * distributed left-semi join over just the `_record_key` column of the
-  * candidate files. Shuffles are limited to the incoming batch + matched
-  * files, never the whole table. Reads hand Catalyst a plain Parquet
+  * tagging ([[tagFiles]]) — driver-side bucket and key-range prunes
+  * against commit-metadata stats (no data read), a record-key bloom probe
+  * for point batches, then one exact scan of just the `_record_key`
+  * column of the candidate files. Shuffles are limited to the incoming
+  * batch + matched files, never the whole table. Reads hand Catalyst a plain Parquet
   * relation (explicit schema + basePath) so filter pushdown, column
   * pruning, and hive-style partition pruning all stay active.
   */
@@ -945,6 +945,21 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * precombine sorts lowest). A batch without the column runs the
     * plain upsert plan.
     *
+    * COW tagging and merge take one of two plans, split by ONE
+    * threshold, [[LakeTable.BloomProbeMaxKeys]]:
+    *  - point batch (at most that many rows, the streaming-CDC steady
+    *    state): the batch's keys are collected to the driver once. Files
+    *    are tagged bucket → key range → bloom (probed with those keys) →
+    *    one exact scan of the survivors that returns the (file, key)
+    *    hits. The merge splits the batch on that hit set — hits join
+    *    their stored rows map-side (broadcast), the rest append as new —
+    *    and the write runs one task per touched partition dir when the
+    *    range-clustered write would be a single coalesced task anyway
+    *    ([[writeStaging]]);
+    *  - bulk batch: tagging semi-joins the batch against the range
+    *    survivors, the merge is a sort-merge full outer join, and the
+    *    write range-clusters.
+    *
     * @param combine dedup the batch by key first (keep max precombine) —
     *   Hudi's `combine.before.upsert`. Pass false ONLY when the batch is
     *   known key-unique (e.g. already windowed/deduped upstream): it
@@ -966,12 +981,13 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     upsertOrSkip(data, extra, combine, commitEmpty = true).get
 
   /** [[upsert]] that publishes nothing for a batch without rows (None) —
-    * the CDC routers' "no ops, no commit" contract, decided by the bounds
-    * pass the upsert runs anyway instead of a separate emptiness probe.
+    * the "no rows, no commit" contract of the CDC routers and the hops,
+    * decided by the bounds pass the upsert runs anyway instead of a
+    * separate emptiness probe (which would plan and run the batch again).
     */
-  private[graft] def upsertNonEmpty(data: DataFrame,
-      combine: Boolean): Option[String] =
-    upsertOrSkip(data, Map.empty, combine, commitEmpty = false)
+  private[graft] def upsertNonEmpty(data: DataFrame, combine: Boolean,
+      extra: Map[String, String] = Map.empty): Option[String] =
+    upsertOrSkip(data, extra, combine, commitEmpty = false)
 
   private def upsertOrSkip(data: DataFrame, extra: Map[String, String],
       combine: Boolean, commitEmpty: Boolean): Option[String] = {
@@ -1038,10 +1054,15 @@ class LakeTable private (val spark: SparkSession, val path: String) {
           Seq.empty, extra, visible = None, () => maybeCompactInline())
         return Some(instant)
       }
-      val matched = matchedFiles(
+      // point batch: its keys (and the partition values its rows carry)
+      // come to the driver ONCE; tagging, the merge and the write all use
+      // that copy. A bulk batch stays distributed end to end.
+      val held = hold(incoming, nRows, dirs = true)
+      val tagged = tagFiles(
         incoming.select(
           (RecordKeyCol +: _meta.recordKeyFields).distinct.map(col): _*),
-        mnKey, mxKey, nRows)
+        mnKey, mxKey, held)
+      val matched = tagged.files
       if (matched.isEmpty && nDel == nRows) {
         // only deletes, and none of their keys exists: nothing to write
         commitNothing()
@@ -1061,36 +1082,31 @@ class LakeTable private (val spark: SparkSession, val path: String) {
             .when(col("e").isNull, col("i"))
             .when(col(s"e.`$pc`") > col(s"i.`$pc`"), col("e"))
             .otherwise(col("i")).as("r")
-          val mergedKeyed =
-            if (nRows > BroadcastMergeMaxRows)
-              // big batch: sort-merge full outer on the key — both sides
+          val mergedKeyed = tagged.hits match {
+            case Some(hits) =>
+              // point batch: the exact scan already returned the keys that
+              // exist, so the batch splits on the driver-held hit set —
+              // stored ⟕ broadcast(incoming) resolves updates map-side,
+              // and incoming rows whose key is no hit append as new. The
+              // matched files are scanned once, by this join.
+              val iNew = iS.filter(!keyIn(hits))
+              eS.join(broadcast(iS), Seq(RecordKeyCol), "left")
+                .select(col(RecordKeyCol), winner)
+                .unionAll(
+                  (if (marked) iNew.filter(!col(s"i.`$DeletedCol`")) else iNew)
+                    .select(col(RecordKeyCol), col("i").as("r")))
+            case None =>
+              // bulk batch: sort-merge full outer on the key — both sides
               // shuffle, the right plan when the update set is a large
               // fraction of the matched files
               eS.join(iS, Seq(RecordKeyCol), "full_outer")
                 .select(col(RecordKeyCol), winner)
-            else {
-              // small batch (the streaming-CDC steady state): two
-              // broadcast map-side joins instead of shuffling every row
-              // of the matched files — existing ⟕ incoming resolves
-              // updates, and incoming rows whose key is nowhere in the
-              // candidates' key column are appended as new
-              val hitKeys = readFiles(matched)
-                .select(col(RecordKeyCol))
-                .join(broadcast(incoming.select(col(RecordKeyCol))),
-                  Seq(RecordKeyCol), "left_semi")
-                .distinct()
-              val iNew =
-                if (marked) iS.filter(!col(s"i.`$DeletedCol`")) else iS
-              eS.join(broadcast(iS), Seq(RecordKeyCol), "left")
-                .select(col(RecordKeyCol), winner)
-                .unionAll(
-                  iNew.join(broadcast(hitKeys), Seq(RecordKeyCol), "left_anti")
-                    .select(col(RecordKeyCol), col("i").as("r")))
-            }
+          }
           (if (marked) mergedKeyed.filter(col("r").isNotNull) else mergedKeyed)
             .select(col(RecordKeyCol) +: fieldOrder.map(c => col(s"r.`$c`").as(c)): _*)
         }
-      val staging = writeStaging(out, instant)
+      val staging = writeStaging(out, instant,
+        dirs = held.fold(Seq.empty[Seq[String]])(h => pointDirs(matched, nRows, h.dirs)))
       publishOptimistic(instant, staging, "upsert", "base", matched, extra,
         Some(visible))
       Some(instant)
@@ -1103,7 +1119,12 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * record's identity there (missing columns fail analysis loudly).
     *
     * COW: only files containing matched keys are rewritten; survivors
-    * keep their original `_commit_time`.
+    * keep their original `_commit_time`. Tagging and the plan split are
+    * [[upsert]]'s: a point key set (at most
+    * [[LakeTable.BloomProbeMaxKeys]]) is held on the driver — bloom
+    * probe, one exact scan, survivors filtered by the held keys, the
+    * per-dir write ([[writeStaging]]) — a bulk one stays distributed
+    * (semi-join tagging, shuffled anti-join, range write).
     *
     * MOR: appends a small tombstone delta file (`_deleted = true` rows) —
     * no file lookup, no rewrite, the same cheap-append write path as a
@@ -1149,9 +1170,10 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     val keys = withKeyOnly(data).persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val (nKeys, mnKey, mxKey, _) = batchBounds(keys)
+      val held = hold(keys, nKeys)
       val matched =
         if (nKeys == 0) Seq.empty
-        else matchedFiles(keys, mnKey, mxKey, nKeys)
+        else tagFiles(keys, mnKey, mxKey, held).files
       if (matched.isEmpty) {
         timeline.withLock() {
           timeline.commit(
@@ -1159,16 +1181,17 @@ class LakeTable private (val spark: SparkSession, val path: String) {
         }
         return instant
       }
-      // rewrite matched files without the deleted keys. Typical deletes
-      // carry few keys → broadcast the anti join (map-side, no shuffle of
-      // the survivors); a bulk purge (GDPR sweep) can exceed the broadcast
-      // limit, so big key sets fall back to a shuffled left_anti — same
-      // size gate as the upsert merge plan.
-      val delKeys =
-        if (nKeys <= BroadcastMergeMaxRows) broadcast(keys) else keys
-      val survivors = readFiles(matched)
-        .join(delKeys, Seq(RecordKeyCol), "left_anti")
-      val staging = writeStaging(survivors, instant)
+      // rewrite matched files without the deleted keys. A point delete
+      // filters by the driver-held key set (map-side, no shuffle of the
+      // survivors) and writes one task per touched dir; a bulk purge
+      // (GDPR sweep) is past the point threshold, so its keys stay
+      // distributed in a shuffled left_anti — the upsert's plan split.
+      val survivors = held match {
+        case Some(h) => readFiles(matched).filter(!keyIn(h.keys.toSet))
+        case None    => readFiles(matched).join(keys, Seq(RecordKeyCol), "left_anti")
+      }
+      val staging = writeStaging(survivors, instant,
+        dirs = if (held.isEmpty) Nil else pointDirs(matched, 0L, Nil))
       publishOptimistic(instant, staging, "delete", "base", matched, extra,
         Some(visible))
       instant
@@ -2637,16 +2660,6 @@ class LakeTable private (val spark: SparkSession, val path: String) {
       if (deletes) r.getLong(3) else 0L)
   }
 
-  /** Files that contain at least one incoming key. Step 1 prunes by
-    * key-range overlap using commit-metadata stats only (no I/O); step 2
-    * drops range survivors whose record-key BLOOM rules every incoming
-    * key out (footer-only reads — the prune that still works when files
-    * are not key-clustered and ranges stop being selective); step 3
-    * confirms by a left-semi join over the remaining candidates' key
-    * column. Returns relative paths. `mn`/`mx` are the incoming batch's
-    * key bounds from [[batchBounds]]; `keyCount` its row count (an upper
-    * bound on distinct keys) gating the bloom probe.
-    */
   /** Map a scan-reported absolute file URI back to a stored path —
     * relative to the table root, or absolute for branch-referenced
     * external files ([[shallowCloneTo]]), where prepending "/" would
@@ -2656,30 +2669,99 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     if (stored.startsWith("/")) hit.endsWith(stored)
     else hit.endsWith("/" + stored)
 
-  private def matchedFiles(incomingKeys: DataFrame, mn: String,
-      mx: String, keyCount: Long): Seq[String] = {
+  /** A point batch held on the driver ([[hold]]): its distinct record
+    * keys and, when asked for, the distinct partition dirs its rows
+    * write to — each a tuple of the partition fields' values (derived
+    * ones included) cast to string, the form the dir names carry.
+    */
+  private case class Held(keys: Array[String], dirs: Seq[Seq[String]])
+
+  /** Collect a batch of `rows` rows to the driver when it is a point
+    * batch (at most [[LakeTable.BloomProbeMaxKeys]] rows) — one job over
+    * `df` (cached by the caller), whose result every later phase of the
+    * write reuses. None for a bulk or empty batch, and for any batch
+    * while the table has no live file (nothing to tag, no stats to size
+    * a write).
+    */
+  private def hold(df: DataFrame, rows: Long,
+      dirs: Boolean = false): Option[Held] =
+    if (rows <= 0 || rows > BloomProbeMaxKeys || timeline.liveFiles().isEmpty)
+      None
+    else {
+      val parts = if (dirs) _meta.partitionFields else Nil
+      val got = (if (dirs) withDerivedPartitions(df) else df)
+        .select(col(RecordKeyCol) +: parts.map(col(_).cast(StringType)): _*)
+        .collect()
+      Some(Held(got.map(_.getString(0)).distinct,
+        if (dirs) got.map(r => parts.indices.map(i => r.getString(i + 1))).distinct.toSeq
+        else Nil))
+    }
+
+  /** `_record_key ∈ keys` for a driver-held key set, shipped to the
+    * tasks once as a broadcast variable (no broadcast-exchange job, and
+    * plan strings stay free of the key list).
+    */
+  private def keyIn(keys: Set[String]): Column =
+    if (keys.isEmpty) lit(false)
+    else {
+      val b = spark.sparkContext.broadcast(keys)
+      udf((k: String) => b.value.contains(k)).apply(col(RecordKeyCol))
+    }
+
+  /** Tagging's result: the live files holding at least one batch key
+    * (stored paths) and, on the point path, the batch keys found there.
+    */
+  private case class Tagged(files: Seq[String], hits: Option[Set[String]])
+
+  /** Tag the live files a keyed write must rewrite. `batchKeys` carries
+    * the record key (plus the user key columns, when present, for the
+    * bucket step); `mn`/`mx` are its bounds from [[batchBounds]]. The
+    * prune runs bucket → key range → bloom → exact scan:
+    *  1. [[bucketPrune]] and the key-range overlap use commit-metadata
+    *     stats only (no data read);
+    *  2. a point batch (`held`, its keys on the driver) probes each
+    *     survivor's record-key bloom with those keys (footer-only reads —
+    *     the prune that still works when files are not key-clustered),
+    *     then ONE exact scan of the remaining candidates' key column
+    *     returns the (file, key) hits: the files to rewrite AND the keys
+    *     that exist, so the merge needs no second look;
+    *  3. a bulk batch skips the bloom (probing millions of keys per file
+    *     costs more than the scan it saves) and left-semi joins the batch
+    *     against the candidates, returning files only.
+    */
+  private def tagFiles(batchKeys: DataFrame, mn: String, mx: String,
+      held: Option[Held]): Tagged = {
     val live = timeline.liveFiles()
-    if (live.isEmpty || mn == null) return Seq.empty
+    val none = Tagged(Seq.empty, held.map(_ => Set.empty[String]))
+    if (live.isEmpty || mn == null) return none
     // bucket prune first: under the bucket index files are hash-
     // scattered, so every file's key RANGE spans the key space and the
     // range step below keeps everything — the batch's bucket set is the
     // prune that works (Hudi BUCKET-index tagging). Untagged files
     // (deltas, pre-bucket commits) are conservatively kept.
-    val bucketed = bucketPrune(live, incomingKeys)
+    val bucketed = bucketPrune(live, batchKeys)
     val ranged = bucketed.filter(f => !(f.maxKey < mn || f.minKey > mx))
-    if (ranged.isEmpty) return Seq.empty
-    val candidates = bloomPrune(ranged, incomingKeys, keyCount)
-    if (candidates.isEmpty) return Seq.empty
+    val candidates = held.fold(ranged)(h => bloomPrune(ranged, h.keys))
+    if (candidates.isEmpty) return none
     import spark.implicits._
-    val hit = readFiles(candidates.map(_.path))
+    val scan = readFiles(candidates.map(_.path))
       .select(col(RecordKeyCol), input_file_name().as("_f"))
-      .join(incomingKeys.select(col(RecordKeyCol)), Seq(RecordKeyCol), "left_semi")
-      .select(col("_f")).distinct().as[String].collect()
+    val (hitFiles, hits) = held match {
+      case Some(h) =>
+        val pairs = scan.filter(keyIn(h.keys.toSet))
+          .as[(String, String)].collect()
+        (pairs.map(_._2).distinct, Some(pairs.map(_._1).toSet))
+      case None =>
+        (scan.join(batchKeys.select(col(RecordKeyCol)), Seq(RecordKeyCol),
+          "left_semi").select(col("_f")).distinct().as[String].collect(),
+          None)
+    }
     // map absolute URIs back to stored paths by unique suffix
-    candidates.map(_.path).filter(rel => hit.exists(uriMatches(_, rel))).toSeq
+    Tagged(candidates.map(_.path)
+      .filter(rel => hitFiles.exists(uriMatches(_, rel))), hits)
   }
 
-  /** Bucket step of [[matchedFiles]]: when the table is bucketed and
+  /** Bucket step of [[tagFiles]]: when the table is bucketed and
     * the batch carries its user key columns, keep only files whose
     * recorded bucket id is in the batch's bucket set (one tiny distinct
     * job — at most `bucketCount` values, map-side combined). Files
@@ -2698,21 +2780,22 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     candidates.filter(f => f.bucket.forall(hit.contains))
   }
 
-  /** Bloom step of [[matchedFiles]]: keep only candidates whose
-    * record-key bloom could contain some incoming key. Engages for
-    * point-ish batches (≤ [[LakeTable.BloomProbeMaxKeys]] keys — the
-    * streaming-CDC steady state where tagging cost is pure overhead);
-    * bulk batches skip it (probing millions of keys per file costs more
-    * than the scan it saves, and a bulk upsert rewrites most files
-    * anyway). Small candidate sets probe on the driver; large ones fan
-    * out one task per file slice, shipping the keys by broadcast.
+  /** Bloom step of [[tagFiles]] for a batch given as a frame of record
+    * keys: at most [[LakeTable.BloomProbeMaxKeys]] keys (`keyCount`)
+    * collect and probe; a bulk batch keeps every candidate.
     */
   private[lake] def bloomPrune(candidates: Seq[FileStat],
-      incomingKeys: DataFrame, keyCount: Long): Seq[FileStat] = {
-    if (keyCount <= 0 || keyCount > BloomProbeMaxKeys) return candidates
-    import spark.implicits._
-    val keys = incomingKeys.select(col(RecordKeyCol)).as[String]
-      .collect().distinct
+      incomingKeys: DataFrame, keyCount: Long): Seq[FileStat] =
+    hold(incomingKeys, keyCount)
+      .fold(candidates)(h => bloomPrune(candidates, h.keys))
+
+  /** Keep only candidates whose record-key bloom could contain one of
+    * the driver-held `keys` — the point-batch bloom step of
+    * [[tagFiles]]. Small candidate sets probe on the driver; large ones
+    * fan out one task per file slice, shipping the keys by broadcast.
+    */
+  private def bloomPrune(candidates: Seq[FileStat],
+      keys: Array[String]): Seq[FileStat] =
     if (candidates.size <= FooterReadFanoutThreshold) {
       val conf = spark.sessionState.newHadoopConf()
       candidates.filter(f =>
@@ -2730,6 +2813,70 @@ class LakeTable private (val spark: SparkSession, val path: String) {
         .map(_._1).collect().toSet
       candidates.filter(f => kept.contains(f.path))
     }
+
+  /** The partition dirs a point rewrite writes to (as [[Held]] tuples,
+    * a stored dir read back from its path) — the dirs of the `rewritten`
+    * files plus `batchDirs`, those of the batch's `batchRows` rows — when
+    * its range-clustered write would run as ONE coalesced task anyway
+    * and the dirs fit one task per core; else Nil (keep the range plan).
+    *
+    * The range write shuffles the rewrite and lets AQE coalesce it. AQE
+    * merges partitions up to `max(minPartitionSize, min(advisory size,
+    * total / defaultParallelism))` (`parallelismFirst`, Spark's default)
+    * or up to the advisory size, so the coalesced shuffle is one task
+    * while the total stays within `minPartitionSize` (resp. the
+    * advisory size). The total is estimated from commit-recorded file
+    * stats: the rewritten files' bytes plus `batchRows` at the table's
+    * mean bytes per row (an upper bound: updated rows count twice). No
+    * stats yet, AQE or its coalescing off, or a bucketed layout: the
+    * range plan (or bucket routing) stays.
+    */
+  private def pointDirs(rewritten: Seq[String], batchRows: Long,
+      batchDirs: Seq[Seq[String]]): Seq[Seq[String]] = {
+    import org.apache.spark.sql.internal.SQLConf
+    val c = spark.sessionState.conf
+    val sized = timeline.liveFiles().filter(f => f.sizeBytes > 0 && f.numRecords > 0)
+    if (_meta.bucketCount > 0 || sized.isEmpty ||
+        !c.adaptiveExecutionEnabled || !c.coalesceShufflePartitionsEnabled)
+      return Nil
+    val minSize = c.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+    val target =
+      if (c.getConf(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST)) minSize
+      else math.max(minSize, c.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+    val rw = rewritten.toSet
+    val bytesPerRow = sized.map(_.sizeBytes).sum / sized.map(_.numRecords).sum
+    val estimate = sized.filter(f => rw(f.path)).map(_.sizeBytes).sum +
+      batchRows * bytesPerRow
+    if (estimate > target) return Nil
+    val stored = rewritten.map(partitionOf).distinct.map(p =>
+      p.split("/").toSeq.filter(_.nonEmpty).map { kv =>
+        val v = LakeFileIndex.unescapePathName(kv.substring(kv.indexOf('=') + 1))
+        if (v == "__HIVE_DEFAULT_PARTITION__") null else v
+      })
+    val dirs = (stored ++ batchDirs).distinct
+    if (dirs.size > spark.sparkContext.defaultParallelism) Nil else dirs
+  }
+
+  /** Spread a point rewrite one task per partition dir ([[pointDirs]]):
+    * one dir is a single task with no shuffle; more each get their own
+    * shuffle partition by id. Every dir lands in exactly one task, so it
+    * gets one file. A row whose values match no listed tuple (none
+    * should) still goes to one fixed task.
+    */
+  private def spreadByDir(df: DataFrame, dirs: Seq[Seq[String]]): DataFrame = {
+    val parts = _meta.partitionFields.map(col(_).cast(StringType))
+    if (dirs.size <= 1) df.coalesce(1)
+    else {
+      def is(t: Seq[String]): Column = parts.zip(t).map {
+        case (c, null) => c.isNull
+        case (c, v)    => c === lit(v)
+      }.reduce(_ && _)
+      val id = dirs.zipWithIndex.tail
+        .foldLeft(when(is(dirs.head), 0)) { case (acc, (t, i)) =>
+          acc.when(is(t), i) }
+        .otherwise(0)
+      df.repartitionById(dirs.size, id)
+    }
   }
 
   /** Write `out` (user cols + meta cols) into hive-style partition dirs,
@@ -2745,11 +2892,18 @@ class LakeTable private (val spark: SparkSession, val path: String) {
   /** The heavy half of [[stageWrite]]: cluster + write the batch into a
     * fresh staging dir, NO lock required — optimistic writers run this
     * before taking the lock for the (cheap) publish.
+    *
+    * `dirs` non-empty marks a point rewrite that [[pointDirs]] admitted
+    * (its range-clustered write would coalesce into one task): it skips
+    * the cache and the range sample and writes one task per partition
+    * dir ([[spreadByDir]]), rows sorted by (partition dirs, key) — the
+    * same one key-sorted file per touched dir, written in parallel.
     */
   private def writeStaging(out: DataFrame, instant: String,
       clusterBy: Seq[String] = Seq.empty,
       clusterExprs: Seq[Column] = Seq.empty,
-      into: Option[Path] = None): Path = {
+      into: Option[Path] = None,
+      dirs: Seq[Seq[String]] = Nil): Path = {
     // hidden partitioning: derived partition columns live OUTSIDE the
     // user schema, so every staged write re-derives them here — the one
     // choke point all writers (user batches, COW rewrites, compaction,
@@ -2758,18 +2912,20 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     val derivedNames = _meta.partitionDerivations.keys.toSeq.sorted
       .filterNot(fullSchema.fieldNames.contains)
     val withDerived = withDerivedPartitions(out)
-    val ordered0 = withDerived.select(
+    val perDir = dirs.nonEmpty
+    val selected = withDerived.select(
       (fullSchema.fieldNames.toIndexedSeq ++ derivedNames).map(col): _*)
-      // range partitioning SAMPLES its input before shuffling — without a
-      // cache that re-executes the (expensive) merge/anti-join plan twice
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // range partitioning SAMPLES its input before shuffling — without a
+    // cache that re-executes the (expensive) merge/anti-join plan twice
+    val ordered0 =
+      if (perDir) selected else selected.persist(StorageLevel.MEMORY_AND_DISK)
     // File clustering: range-partition by (partition dirs, record key) and
     // sort within tasks, so (a) a small batch lands in few well-filled
     // files (AQE coalesces the sampled shuffle — without this every write
     // task emits a sliver file per partition value: tasks × partitions
     // small files, a 100 TB metadata problem), and (b) each data file
     // covers a NARROW, sorted key range. Tight per-file min/max key stats
-    // make the driver-side candidate prune in matchedFiles effective — a
+    // make the driver-side candidate prune in tagFiles effective — a
     // keyed update/delete touching few keys rewrites few files instead of
     // every hash-scattered file — and sorted keys give parquet row-group
     // stats that skip at scan (Hudi's sort-mode/clustering analog).
@@ -2805,7 +2961,9 @@ class LakeTable private (val spark: SparkSession, val path: String) {
         ordered0
           .repartition(_meta.bucketCount, _meta.recordKeyFields.map(col): _*)
           .sortWithinPartitions(intra: _*)
-      } else ordered0
+      } else if (perDir)
+        spreadByDir(ordered0, dirs).sortWithinPartitions(clusterCols: _*)
+      else ordered0
         .repartitionByRange(clusterCols: _*)
         .sortWithinPartitions(clusterCols: _*)
     try {
@@ -2846,7 +3004,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
         else w
       w2.parquet(staging.toString)
       staging
-    } finally { ordered0.unpersist(); () }
+    } finally { if (!perDir) ordered0.unpersist(); () }
   }
 
   /** Publish a driver-staged optimistic write under the lock: stats,
@@ -3236,8 +3394,8 @@ class LakeTable private (val spark: SparkSession, val path: String) {
         // the global index an update may have moved a key's partition
         // value, and once the delta is compacted away nothing would
         // resolve the stale version still sitting in the old partition's
-        // base file. matchedFiles' two-step prune (commit-metadata key
-        // ranges, then one semi-join over candidates) keeps this
+        // base file. tagFiles' prune (commit-metadata key ranges and
+        // blooms, then one exact scan of the candidates) keeps this
         // O(affected files), not O(table).
         if (stats.exists(_.tombstones > 0)) { compactLocked(); () }
         else {
@@ -3245,8 +3403,8 @@ class LakeTable private (val spark: SparkSession, val path: String) {
             (RecordKeyCol +: _meta.recordKeyFields).distinct.map(col): _*)
           val mn = stats.map(_.minKey).min
           val mx = stats.map(_.maxKey).max
-          val hit = matchedFiles(deltaKeys, mn, mx,
-            stats.map(_.numRecords).sum)
+          val hit = tagFiles(deltaKeys, mn, mx,
+            hold(deltaKeys, stats.map(_.numRecords).sum)).files
             .filterNot(stats.map(_.path).contains(_))
           val parts = (stats.map(_.partition) ++ hit.map(partitionOf)).toSet
           compactPartitionsLocked(parts); ()
@@ -3322,24 +3480,20 @@ object LakeTable {
   val ChangeTypeCol = "_change_type"
   val ChangeCommitCol = "_change_commit"
 
-  /** Row-count ceiling for the broadcast upsert-merge plan: batches at or
-    * below it merge via two broadcast map-side joins (no shuffle of the
-    * matched files' rows); larger batches use the sort-merge full outer.
-    * Sized so the broadcast side stays tens of MB for typical row widths.
-    * A mutable knob so tests can force either plan; production leaves the
-    * default.
-    */
-  private[graft] var BroadcastMergeMaxRows = 250_000L
-
   /** Commits publishing more files than this read their footers via a
     * distributed job instead of a sequential driver loop.
     */
   private[graft] var FooterReadFanoutThreshold = 64
 
-  /** Key-count ceiling for the bloom tagging probe ([[KeyBloom]]): batches
-    * at or below it prune upsert/delete candidates by per-file record-key
-    * blooms before the confirming scan; larger (bulk) batches go straight
-    * to the scan. Mutable so tests can force either path.
+  /** Row-count ceiling of a POINT batch — the one threshold between the
+    * two keyed-write plans of [[LakeTable.upsert]] and
+    * [[LakeTable.delete]]. A batch at or below it is held on the driver:
+    * bloom-probed tagging, one exact scan returning the hit keys, a
+    * broadcast merge split by that hit set, the per-dir write. A larger
+    * (bulk) batch stays distributed: semi-join tagging, sort-merge (or
+    * shuffled anti-join) merge, range-clustered write. Sized so the
+    * driver copy stays tens of MB at typical key widths. Mutable so tests
+    * can force either plan; production leaves the default.
     */
   private[graft] var BloomProbeMaxKeys = 200_000L
 

@@ -67,20 +67,9 @@ object CdcIngest {
         StructField("record-type", StringType),
         StructField("table-name", StringType),
         StructField("timestamp", StringType))))))
-    // Per-record order within a file: _line = row_number by read order
-    // inside each source file. Within a file split Spark reads lines in
-    // offset order and `monotonically_increasing_id` is ascending within
-    // a partition, with split/partition indexes following file offsets —
-    // so (_src, _line) is a DETERMINISTIC per-record position, unlike a
-    // bare monotonically_increasing_id whose cross-partition order is
-    // arbitrary. (A real Kinesis source would use the shard sequence
-    // number here; the file stand-in uses file name + line.)
-    val wLine = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("_src")).orderBy(monotonically_increasing_id())
-    val parsed = batch
+    val parsed = sourced(spark, batch)
       .select(from_json(col("value").cast("string"), envelope).as("e"), // P1+P2
-        input_file_name().as("_src"))
-      .withColumn("_line", row_number().over(wLine))
+        col("_src"), col("_line"))
       .where(col("e.data").isNotNull) // P9
       .select(col("e.metadata.operation").as("_op"),
         col("e.metadata.timestamp").as("_ts"), col("_src"), col("_line"),
@@ -107,22 +96,37 @@ object CdcIngest {
     ()
   }
 
+  /** A raw inbox batch with each line's source position, spread over
+    * the cores for the parse. `_src` is the file, `_line` the
+    * `monotonically_increasing_id` taken AT THE SCAN: within a file
+    * split Spark reads lines in offset order and the id ascends within a
+    * partition, and a file's splits take partition indexes in offset
+    * order — so `_line` ascends with the line's offset inside its file.
+    * Only that per-file order is ever compared (`_src` first), so
+    * (_src, _line) is a DETERMINISTIC per-record position, whatever the
+    * layout after the spread. (A real Kinesis source would use the shard
+    * sequence number here; the file stand-in uses file name + line.)
+    * The spread is a round-robin shuffle to `defaultParallelism`
+    * partitions: one inbox file is one scan task, and the parse and
+    * typed-row casts are what cost.
+    */
+  private def sourced(spark: SparkSession, batch: DataFrame): DataFrame =
+    batch
+      .select(col("value"), input_file_name().as("_src"),
+        monotonically_increasing_id().as("_line"))
+      .repartition(spark.sparkContext.defaultParallelism)
+
   /** Distributed parse of a raw inbox batch into one row per Canal
-    * envelope, tagged with its deterministic source position (see
-    * [[applyDmsBatch]] for the (_src, _line) ordering argument).
+    * envelope, tagged with its deterministic source position
+    * ([[sourced]]) — the LAST-resort tiebreak for degenerate binlogs
+    * whose events share both ts and event id.
     */
   private def parsedRecords(spark: SparkSession, batch: DataFrame): DataFrame = {
     import spark.implicits._
-    // envelope source position (file name + line within file) — the
-    // LAST-resort tiebreak for degenerate binlogs whose events share both
-    // ts and event id; see the DMS path for the line-order reasoning
-    val wLine = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("_src")).orderBy(monotonically_increasing_id())
-    batch
-      .select(col("value").cast("string").as("value"),
-        input_file_name().as("_src"))
-      .withColumn("_line", row_number().over(wLine))
-      .as[(String, String, Int)]
+    sourced(spark, batch)
+      .select(col("value").cast("string").as("value"), col("_src"),
+        col("_line"))
+      .as[(String, String, Long)]
       .flatMap { case (v, src, line) => CanalParser.parse(v).map(r =>
         (r.database, r.table, r.op, r.rows, r.ts, r.seq, src, line)) }
       .toDF("database", "table", "op", "rows", "ts", "seq", "_src", "_line")

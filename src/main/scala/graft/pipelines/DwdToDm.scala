@@ -63,17 +63,25 @@ object DwdToDm {
     val end = dwd.latestCommit.getOrElse(return begin)
     if (begin == end) return begin
     val inc = dwd.incremental(begin, end).drop("_record_key", "_commit_time")
-    if (inc.isEmpty) return end
     // precombine = the source watermark instant: monotone across
     // iterations and identical on replay of the same delta, so a crashed
-    // and re-run iteration converges instead of racing wall-clock.
+    // and re-run iteration converges instead of racing wall-clock. An
+    // empty increment commits nothing ([[upsertEach]], [[MultiMartHop]]).
     commit(marts.map { case (cfg, dm) =>
       val merged = merge(aggregate(inc, cfg), dm.snapshotUser(), cfg)
         .withColumn(cfg.precombineField, lit(end.toLong))
-      TxnGroup.TxnUpsert(dm, merged, extra = Map(WatermarkKey -> end))
+      TxnGroup.TxnUpsert(dm, merged, combine = !keyUnique(cfg, dm),
+        extra = Map(WatermarkKey -> end))
     })
     end
   }
+
+  /** A mart whose record key IS its grouping key gets exactly one row
+    * per key from the aggregation, so its upserts skip the within-batch
+    * combine — the `combine = false` contract [[CdcIngest]] uses.
+    */
+  private def keyUnique(cfg: PipelineConfig, dm: LakeTable): Boolean =
+    dm.meta.recordKeyFields.toSet == cfg.aggKeys.toSet
 
   /** Where the hop resumes: the marts' committed watermark (they commit
     * together, so the head's speaks for all), or on first start the init
@@ -94,15 +102,17 @@ object DwdToDm {
         commit(marts.map { case (cfg, dm) =>
           TxnGroup.TxnUpsert(dm, aggregate(snap, cfg)
             .withColumn(cfg.precombineField, lit(end.toLong)),
-            extra = Map(WatermarkKey -> end))
+            combine = !keyUnique(cfg, dm), extra = Map(WatermarkKey -> end))
         })
       }
       end
     }
 
-  /** A single mart's commit: its own upsert, no transaction. */
+  /** A single mart's commit: its own upsert, no transaction; a mart
+    * whose batch has no rows commits nothing.
+    */
   private val upsertEach: Seq[TxnGroup.TxnUpsert] => Unit =
-    _.foreach(u => u.table.upsert(u.data, extra = u.extra))
+    _.foreach(u => u.table.upsertNonEmpty(u.data, u.combine, u.extra))
 
   /** The hop as a stream: every new DWD commit resumes the marts from
     * their committed watermark and steps them to the head — the same

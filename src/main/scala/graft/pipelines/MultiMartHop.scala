@@ -15,7 +15,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * watermark, or the init aggregation on first start. The only
   * difference from [[DwdToDm.runStreaming]] is the commit: ALL mart
   * upserts commit through [[TxnGroup.commit]] with the shared source
-  * watermark riding every prepare's extra. Consequences:
+  * watermark riding every prepare's extra (an empty increment commits
+  * nothing, as a single mart's upsert does). Consequences:
   *
   *  - a crash anywhere inside the batch — including BETWEEN two marts'
   *    prepares, the reference's torn-write window (SURVEY hard part #5)
@@ -60,7 +61,9 @@ object MultiMartHop {
     val tables = marts.map(_.target(spark))
     tables.foreach(_.recoverTxns())
     DwdToDm.follow(spark, "multimart-hop", marts.head, marts.zip(tables)) {
-      ops =>
+      // every mart aggregates the same increment, so the first mart's
+      // batch speaks for all: an empty increment commits nothing
+      ops => if (!ops.head.data.isEmpty) {
         TxnGroup.commit(ops)
         // auto-maintenance OUTSIDE the transaction (services are
         // per-table housekeeping commits, never txn participants) and
@@ -78,6 +81,7 @@ object MultiMartHop {
             }
           }
         }
+      }
     }
   }
 

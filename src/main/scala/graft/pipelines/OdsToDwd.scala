@@ -47,7 +47,6 @@ object OdsToDwd {
     val end = ods.latestCommit.getOrElse(return begin)
     if (begin == end) return begin
     val inc = ods.incremental(begin, end).drop("_record_key")
-    if (inc.isEmpty) return end
     val dimDf =
       if (LakeTable.exists(spark, cfg.dimTablePath))
         LakeTable.load(spark, cfg.dimTablePath).snapshotUser()
@@ -67,7 +66,9 @@ object OdsToDwd {
       // ODS deletes are not propagated (reference ODS2DWD): the feed's
       // `_deleted` flag must not reach the DWD upsert as a delete row
       .drop(LakeTable.CommitTimeCol, LakeTable.DeletedCol)
-    dwd.upsert(joined, extra = Map(WatermarkKey -> end))
+    // an empty increment commits nothing (the upsert's bounds pass
+    // decides it — no separate emptiness probe re-running the increment)
+    dwd.upsertNonEmpty(joined, combine = true, extra = Map(WatermarkKey -> end))
     end
   }
 

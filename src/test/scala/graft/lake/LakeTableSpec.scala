@@ -186,15 +186,15 @@ class LakeTableSpec extends AnyFunSuite with BeforeAndAfterAll {
         .map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getDouble(3)))
         .sortBy(x => (x._1, x._2)).toSeq
     }
-    val saved = LakeTable.BroadcastMergeMaxRows
+    val saved = LakeTable.BloomProbeMaxKeys
     try {
-      LakeTable.BroadcastMergeMaxRows = Long.MaxValue // force broadcast plan
+      LakeTable.BloomProbeMaxKeys = Long.MaxValue // force broadcast plan
       val viaBroadcast = build()
-      LakeTable.BroadcastMergeMaxRows = 0L // force sort-merge full outer
+      LakeTable.BloomProbeMaxKeys = 0L // force sort-merge full outer
       val viaSortMerge = build()
       assert(viaBroadcast == viaSortMerge)
       assert(viaBroadcast.size == 250)
-    } finally LakeTable.BroadcastMergeMaxRows = saved
+    } finally LakeTable.BloomProbeMaxKeys = saved
   }
 
   test("delete: broadcast and shuffled anti-join paths produce identical tables") {
@@ -206,18 +206,52 @@ class LakeTableSpec extends AnyFunSuite with BeforeAndAfterAll {
       t.delete(df(delRows: _*))
       t.snapshot().select("id").collect().map(_.getInt(0)).sorted.toSeq
     }
-    val saved = LakeTable.BroadcastMergeMaxRows
+    val saved = LakeTable.BloomProbeMaxKeys
     try {
-      LakeTable.BroadcastMergeMaxRows = Long.MaxValue // small-batch: broadcast
+      LakeTable.BloomProbeMaxKeys = Long.MaxValue // small-batch: broadcast
       val viaBroadcast = build()
-      // bulk-purge path: key set above the broadcast gate → shuffled
+      // bulk-purge path: key set above the point threshold → shuffled
       // left_anti (the 100 TB GDPR-sweep plan; an unconditional broadcast
       // would OOM the driver there)
-      LakeTable.BroadcastMergeMaxRows = 0L
+      LakeTable.BloomProbeMaxKeys = 0L
       val viaShuffle = build()
       assert(viaBroadcast == viaShuffle)
       assert(viaBroadcast == (201 to 300).toSeq)
-    } finally LakeTable.BroadcastMergeMaxRows = saved
+    } finally LakeTable.BloomProbeMaxKeys = saved
+  }
+
+  test("point rewrite: one file per touched partition dir with AQE on, the range split with AQE off") {
+    // a 600-row table over p0..p2, then a point upsert of 20 keys that
+    // moves some of them between p0/p1 and opens the new dir p9
+    def rewrite(aqe: Boolean): (Seq[FileStat], Seq[(Int, String, Double)]) = {
+      val t = mkTable(tmp())
+      val spWas = spark.conf.get("spark.sql.shuffle.partitions")
+      spark.conf.set("spark.sql.shuffle.partitions", "16")
+      try {
+        t.upsert(df((1 to 600).map(i => (i, "s", 10L, s"p${i % 3}", i * 1.0)): _*))
+        spark.conf.set("spark.sql.adaptive.enabled", aqe.toString)
+        val c = t.upsert(df(((1 to 20).map(i => (i, "s", 20L, s"p${i % 2}", -1.0)) :+
+          ((1000, "s", 20L, "p9", 0.0))): _*))
+        val out = t.snapshot().select("id", "part", "v").collect()
+          .map(r => (r.getInt(0), r.getString(1), r.getDouble(2))).sortBy(_._1).toSeq
+        (t.timeline.read(c).added, out)
+      } finally {
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+        spark.conf.set("spark.sql.shuffle.partitions", spWas)
+      }
+    }
+    val (perDir, perDirOut) = rewrite(aqe = true)
+    val (ranged, rangedOut) = rewrite(aqe = false)
+    assert(perDirOut == rangedOut) // the layout never changes the answer
+    assert(perDirOut.size == 601 && perDirOut.count(_._3 == -1.0) == 20)
+    val touched = Set("part=p0", "part=p1", "part=p2", "part=p9")
+    assert(perDir.map(_.partition).toSet == touched)
+    assert(perDir.size == touched.size, "one file per touched dir: " +
+      perDir.map(_.path).mkString(", "))
+    // AQE off: the range shuffle keeps its 16 partitions, so the rewrite
+    // still splits each dir into narrow key ranges
+    assert(ranged.map(_.partition).toSet == touched)
+    assert(ranged.size > touched.size, s"range split: ${ranged.size} files")
   }
 
   /** Parquet data files physically on disk (excludes `_lake` metadata). */

@@ -195,6 +195,76 @@ class UpsertPropertiesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(staleDeletes > 0, "no mixed batch deleted a stored key")
   }
 
+  test("model-based: point and bulk plans agree on moved keys, new dirs and absent deletes") {
+    // the same random sequences under both COW keyed-write plans, split by
+    // BloomProbeMaxKeys (point: driver-held keys, hit-set merge, per-dir
+    // write; bulk: semi-join tagging, sort-merge merge, range write).
+    // Batches are key-unique, so the model can track each key's partition
+    // too: a later row of a key in another partition MOVES it, a row in a
+    // dir no file has yet opens that dir, and deletes (both `delete` and
+    // `_deleted` rows) name absent keys as well as stored ones.
+    case class Op(rows: List[R], dels: List[Int], viaDelete: Boolean)
+    val parts = (1 to 6).map(i => s"p$i")
+    val opGen: Gen[Op] = for {
+      rows <- Gen.nonEmptyListOf(for {
+        id <- Gen.choose(0, 30)
+        ts <- Gen.choose(0L, 50L)
+        part <- Gen.oneOf(parts)
+      } yield R(id, ts, part, ts.toDouble))
+      dels <- Gen.listOf(Gen.choose(0, 40))
+      viaDelete <- Gen.oneOf(true, false)
+    } yield {
+      val unique = rows.groupBy(_.id).map(_._2.head).toList
+      Op(unique, dels.distinct.filterNot(unique.map(_.id).toSet), viaDelete)
+    }
+    type Model = Map[Int, (Long, String)]
+    def applied(m: Model, op: Op): Model =
+      op.rows.foldLeft(m)((acc, r) =>
+        if (acc.get(r.id).exists(_._1 > r.ts)) acc
+        else acc.updated(r.id, (r.ts, r.part))) -- op.dels
+    var (moved, newDirs, absentDeletes) = (0, 0, 0)
+    // every sequence ends in a fixed op: a stored key moved to a new dir,
+    // a fresh key in another new dir, and a delete of a key never written
+    val seqGen = Gen.listOfN(6, opGen)
+    forAllSeeded(seqGen, n = 3) { ops0 =>
+      val results = for (maxKeys <- Seq(Long.MaxValue, 0L)) yield {
+        val saved = LakeTable.BloomProbeMaxKeys
+        LakeTable.BloomProbeMaxKeys = maxKeys
+        try {
+          val t = mkTable()
+          val first = ops0.head.rows.head
+          val ops = ops0 :+ Op(List(R(first.id, 99L, "moved", 1.0),
+            R(500, 1L, "fresh", 2.0)), List(999), viaDelete = false)
+          val model = ops.foldLeft(Map.empty: Model) { (m, op) =>
+            if (maxKeys > 0) {
+              val dirs = m.values.map(_._2).toSet
+              moved += op.rows.count(r =>
+                m.get(r.id).exists(s => s._2 != r.part && s._1 <= r.ts))
+              newDirs += op.rows.map(_.part).distinct.count(!dirs(_))
+              absentDeletes += op.dels.count(!m.contains(_))
+            }
+            if (op.viaDelete) {
+              t.upsert(toDf(op.rows))
+              if (op.dels.nonEmpty)
+                t.delete(toDf(op.dels.map(i => R(i, 0L, "p1", 0.0))))
+            } else
+              t.upsert(toDf(op.rows).withColumn(LakeTable.DeletedCol, lit(false))
+                .unionByName(toDf(op.dels.map(i => R(i, -1L, "p1", 0.0)))
+                  .withColumn(LakeTable.DeletedCol, lit(true))))
+            applied(m, op)
+          }
+          val got = t.snapshot().select("id", "ts", "part").collect()
+            .map(r => r.getInt(0) -> ((r.getLong(1), r.getString(2)))).toMap
+          assert(got == model, s"BloomProbeMaxKeys=$maxKeys")
+          got
+        } finally LakeTable.BloomProbeMaxKeys = saved
+      }
+      assert(results.distinct.size == 1)
+    }
+    assert(moved > 0 && newDirs > 0 && absentDeletes > 0,
+      s"moved=$moved newDirs=$newDirs absentDeletes=$absentDeletes")
+  }
+
   test("incremental algebra: snapshot(t2) == snapshot(t1) ⊕ incremental(t1,t2)") {
     forAllSeeded(Gen.zip(batchGen, batchGen), n = 3) { case (b1, b2) =>
       val t = mkTable()

@@ -532,6 +532,51 @@ class PipelinesSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("canal and dms: degenerate events of one file resolve by line, across file splits") {
+    // every event of the inbox file shares the binlog ts AND event id
+    // (Canal) or the commit timestamp (DMS), so only the line orders them:
+    // per key the LAST line wins. Each key's events are spread over the
+    // file (round by round) — a delete in round 2, a re-insert after —
+    // and the file is cut into several splits, so the answer must not
+    // depend on how Spark split or spread the file.
+    def canal(typ: String, id: Int, name: String) =
+      s"""{"data":[{"id":"$id","name":"$name","ts":"100"}],"database":"db1","es":1,"id":7,"isDdl":false,"pkNames":["id"],"table":"users","ts":100,"type":"$typ"}"""
+    def dms(op: String, id: Int, name: String) =
+      s"""{"data":{"id":$id,"name":"$name","ts":100},"metadata":{"operation":"$op","record-type":"data","table-name":"users","timestamp":"2026-01-01T00:00:01"}}"""
+    val keys = 1 to 12
+    // round 0 inserts, round 2 deletes, rounds 1/3 update, round 4
+    // updates — or deletes, for every third key
+    def lines(up: (Int, Int, String) => String, del: (Int, String) => String) =
+      for (round <- 0 to 4; k <- keys) yield
+        if (round == 2 || (round == 4 && k % 3 == 0)) del(k, s"v$round")
+        else up(round, k, s"v$round")
+    val expected = keys.filter(_ % 3 != 0).map(k => k.toLong -> "v4").toMap
+    val formats = Seq(
+      "canal" -> lines((r, k, v) => canal(if (r == 0) "INSERT" else "UPDATE", k, v),
+        (k, v) => canal("DELETE", k, v)),
+      "dms" -> lines((r, k, v) => dms(if (r == 0) "insert" else "update", k, v),
+        (k, v) => dms("delete", k, v)))
+    val was = spark.conf.getOption("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "2048")
+    try formats.foreach { case (format, events) =>
+      val work = tmp()
+      Files.createDirectories(Paths.get(s"$work/in"))
+      Files.write(Paths.get(s"$work/in/batch.json"),
+        events.mkString("", "\n", "\n").getBytes)
+      val batch = spark.read.text(s"$work/in")
+      assert(batch.rdd.getNumPartitions > 2, s"$format: file not split")
+      val t = mkCdcTable(s"$work/t")
+      if (format == "dms") CdcIngest.applyDmsBatch(spark, batch, t)
+      else CdcIngest.applyBatch(spark, batch, PipelineConfig(), t)
+      val got = t.snapshot().select("id", "name").collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap
+      assert(got == expected, format)
+    } finally was match {
+      case Some(v) => spark.conf.set("spark.sql.files.maxPartitionBytes", v)
+      case None    => spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    }
+  }
+
   test("CdcIngest: one Canal batch and one DMS batch each add ONE commit") {
     // updates, deletes and inserts of one micro-batch land as a single
     // upsert commit (deletes as `_deleted` rows); the change feed over
