@@ -1,16 +1,65 @@
 package graft
 
 import graft.queries.{LakeQueries, Relational, Similarity}
+import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import scala.collection.mutable
 import scala.util.control.NonFatal
 
 /** Benchmark main — runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line with per-query seconds.
   * Results are fully materialized through the noop sink (exercises the
   * whole plan incl. projections that a bare count() would prune away).
+  *
+  * Each timed run is also profiled ([[RunProfile]]): the JSON's
+  * `profile` key gives, per query and run, the Spark jobs, stages and
+  * tasks, Σ task and GC seconds and shuffle read/write MB — where a
+  * query's time goes, without a profiler attached. With
+  * `GRAFT_PROF_STAGES` set, each run's 15 longest stages go to stderr.
+  *
+  * Usage: `runMain graft.Bench [--only q1,q2] [--conf key=value]...`
   */
 object Bench {
+
+  /** Execution counters of one timed run, aggregated from the listener
+    * bus while it is registered.
+    */
+  private final class RunProfile extends SparkListener {
+    @volatile var jobs = 0
+    @volatile var stages = 0
+    @volatile var tasks = 0
+    @volatile var taskTimeMs = 0L
+    @volatile var gcTimeMs = 0L
+    @volatile var shuffleReadB = 0L
+    @volatile var shuffleWriteB = 0L
+    val stageWall = mutable.ArrayBuffer.empty[(String, Long, Int)]
+    override def onJobStart(j: SparkListenerJobStart): Unit = jobs += 1
+    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
+      stages += 1
+      val si = sc.stageInfo
+      val wall = (for {
+        a <- si.completionTime; b <- si.submissionTime
+      } yield a - b).getOrElse(0L)
+      stageWall.synchronized(stageWall +=
+        ((s"s${si.stageId}:${si.name.takeWhile(_ != ' ')}", wall, si.numTasks)))
+    }
+    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
+      tasks += 1
+      val m = te.taskMetrics
+      if (m != null) {
+        taskTimeMs += m.executorRunTime
+        gcTimeMs += m.jvmGCTime
+        shuffleReadB += m.shuffleReadMetrics.totalBytesRead
+        shuffleWriteB += m.shuffleWriteMetrics.bytesWritten
+      }
+    }
+    def json: String =
+      f"""{"jobs":$jobs,"stages":$stages,"tasks":$tasks,""" +
+        f""""task_s":${taskTimeMs / 1e3}%.3f,"gc_s":${gcTimeMs / 1e3}%.3f,""" +
+        f""""shuffle_read_mb":${shuffleReadB / 1e6}%.3f,""" +
+        f""""shuffle_write_mb":${shuffleWriteB / 1e6}%.3f}"""
+  }
 
   /** The one-time builds the timed queries share, run before the first
     * timed query so that no query's number pays for them:
@@ -104,7 +153,9 @@ object Bench {
     // landing under a later query — BENCH_r04/r06's 4-5x text_curate
     // outliers) is absorbed by the two-run protocol below.
     def runOnce(name: String, fn: (SparkSession, String) =>
-        org.apache.spark.sql.DataFrame): Double = {
+        org.apache.spark.sql.DataFrame): (Double, RunProfile) = {
+      val prof = new RunProfile
+      spark.sparkContext.addSparkListener(prof)
       val t0 = System.nanoTime()
       val ok =
         try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
@@ -125,19 +176,30 @@ object Bench {
       System.gc()
       // the ContextCleaner drains its reference queue asynchronously even
       // after the GC returns — give it a beat so deletion I/O lands in
-      // this untimed gap, not under the next query
+      // this untimed gap, not under the next query — the gap also lets
+      // the run's last listener events drain into its profile
       Thread.sleep(250)
+      spark.sparkContext.removeSparkListener(prof)
+      if (sys.env.contains("GRAFT_PROF_STAGES"))
+        prof.stageWall.synchronized(prof.stageWall.sortBy(-_._2)).take(15)
+          .foreach { case (n, w, t) =>
+            System.err.println(f"[prof] $name $n%-60s ${w / 1e3}%6.2fs tasks=$t%4d")
+          }
       // a failed query must not masquerade as a fast one
-      if (ok) elapsed else -1.0
+      (if (ok) elapsed else -1.0, prof)
     }
     // Stall-proof protocol: each query runs TWICE back-to-back, the min
     // is reported. A harness stall (cleaner I/O from an earlier query
     // draining under this one's timed region) hits at most one of the two
     // runs — the other measures the plan. Disagreements are surfaced so
     // stall frequency stays observable.
-    val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val r1 = runOnce(name, fn)
-      val r2 = if (r1 < 0) r1 else runOnce(name, fn)
+    val runs = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val first = runOnce(name, fn)
+      name -> (if (first._1 < 0) Seq(first) else Seq(first, runOnce(name, fn)))
+    }
+    val results = runs.map { case (name, rs) =>
+      val r1 = rs.head._1
+      val r2 = rs.last._1
       if (r1 >= 0 && r2 >= 0 && math.max(r1, r2) > 1.5 * math.min(r1, r2))
         System.err.println(
           f"[bench] $name runs disagree: $r1%.1fs vs $r2%.1fs (reporting min)")
@@ -155,8 +217,11 @@ object Bench {
     // numbers (they run before any timed region)
     val fx = fixtureSecs.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
       .mkString("{", ",", "}")
+    val profile = runs.map { case (k, rs) =>
+      "\"" + k + "\":" + rs.map(_._2.json).mkString("[", ",", "]")
+    }.mkString("{", ",", "}")
     val json =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"fixture_build":$fx,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"fixture_build":$fx,"profile":$profile,"sf":"$sfDir"}"""
     println(json)
     // stdout goes through sbt's logger ([info] prefixes); also drop the
     // bare JSON line in the working directory so it is machine-readable

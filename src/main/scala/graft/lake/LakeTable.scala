@@ -305,27 +305,9 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     // the feed reads the CONTENT of in-range-removed files (COW delete
     // images live nowhere else); if a clean already physically deleted
     // one, fail up front with the retention contract instead of a
-    // mid-job FileNotFoundException. Probe existence with ONE listStatus
-    // per touched partition dir, not one fs.exists RPC per file — a wide
-    // range can name thousands of removed files in a handful of dirs
-    if (removedStats.nonEmpty) {
-      val qualified = removedStats.map(f =>
-        f.path -> fs.makeQualified(new Path(tablePath, f.path)).toString)
-      val present: Set[String] = qualified.map { case (_, q) =>
-        new Path(q).getParent
-      }.distinct.flatMap { dir =>
-        try fs.listStatus(dir).toSeq
-          .map(st => fs.makeQualified(st.getPath).toString)
-        catch { case _: java.io.FileNotFoundException => Seq.empty[String] }
-      }.toSet
-      qualified.collectFirst { case (p, q) if !present.contains(q) => p }
-        .foreach { p =>
-          throw new IllegalStateException(
-            s"change feed ($b, $e] needs file $p, already deleted by " +
-              "clean; CDC consumers must stay within the clean retention " +
-              "window (same contract as time travel)")
-        }
-    }
+    // mid-job FileNotFoundException
+    requireReadable(removedStats, s"change feed ($b, $e]",
+      "CDC consumers must stay within the clean retention window")
     val addedInRange = timeline.addedBetween(b, e)
       .filter(f => f.maxCommit == null || f.maxCommit > b)
 
@@ -482,8 +464,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
         spark.sparkContext.emptyRDD[Row], changesSchema)
       case Some((allAdded, removedAt)) =>
         import spark.implicits._
-        val keyed = withKeyOnly(data)
-        val keys = keyed.select(col(RecordKeyCol)).distinct()
+        val keys = withKeyCol(data).select(col(RecordKeyCol)).distinct()
           .as[String].collect().sorted
         require(keys.length <= BloomProbeMaxKeys,
           s"keyHistory is a point lookup (max $BloomProbeMaxKeys keys, " +
@@ -498,7 +479,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
         // cleaned-away historical file fails with the contract error,
         // not a footer read failure
         requireHistoricalReadable(ranged, removedAt)
-        val pruned = bloomPrune(ranged, keyed, keys.length.toLong)
+        val pruned = bloomPrune(ranged, keys)
         historyEventsOver(pruned, removedAt,
           keyFilter = Some(col(RecordKeyCol).isin(
             keys.toIndexedSeq.map(_.asInstanceOf[Any]): _*)))
@@ -529,13 +510,23 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     if (allAdded.isEmpty) None else Some((allAdded, removedAt))
   }
 
-  /** Retention probe (the changes() contract): every since-removed file
-    * in `stats` must still exist on disk — one listStatus per touched
-    * partition dir, not one exists() RPC per file.
+  /** The history feeds' retention probe: every since-removed file in
+    * `stats` must still exist on disk ([[requireReadable]]).
     */
   private def requireHistoricalReadable(stats: Seq[FileStat],
-      removedAt: Map[String, String]): Unit = {
-    val removedStats = stats.filter(f => removedAt.contains(f.path))
+      removedAt: Map[String, String]): Unit =
+    requireReadable(stats.filter(f => removedAt.contains(f.path)),
+      "full-history feed", "bootstrap within the clean retention window")
+
+  /** Retention probe of the feeds that read removed files: every file in
+    * `removedStats` must still exist on disk, else `feed` fails naming
+    * the first missing one and the retention contract (`advice`). One
+    * listStatus per touched partition dir, not one exists() RPC per file
+    * — a wide range can name thousands of removed files in a handful of
+    * dirs.
+    */
+  private def requireReadable(removedStats: Seq[FileStat], feed: String,
+      advice: String): Unit = {
     if (removedStats.isEmpty) return
     val qualified = removedStats.map(f =>
       f.path -> fs.makeQualified(new Path(tablePath, f.path)).toString)
@@ -549,9 +540,8 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     qualified.collectFirst { case (p, q) if !present.contains(q) => p }
       .foreach { p =>
         throw new IllegalStateException(
-          s"full-history feed needs file $p, already deleted by clean; " +
-            "bootstrap within the clean retention window (same contract " +
-            "as time travel)")
+          s"$feed needs file $p, already deleted by clean; $advice " +
+            "(same contract as time travel)")
       }
   }
 
@@ -834,15 +824,38 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * never write-write conflict (duplicate keys across inserts are
     * insert semantics even serially).
     */
-  def insert(data: DataFrame, extra: Map[String, String] = Map.empty): String = {
+  def insert(data: DataFrame, extra: Map[String, String] = Map.empty): String =
+    reserved()((instant, _) => insertReserved(data, extra, instant)).get
+
+  private def insertReserved(data: DataFrame, extra: Map[String, String],
+      instant: String): Option[String] = {
+    val incoming = withMeta(alignUser(data), instant)
+    publishOptimistic(instant, writeStaging(incoming, instant), "insert",
+      "base", Seq.empty, extra, visible = None)
+    Some(instant)
+  }
+
+  /** The frame of every reserved write ([[insert]], [[upsert]],
+    * [[delete]], [[txnPrepare]]): take the visible set, reserve the
+    * instant, run `body(instant, visible)` — it returns the published
+    * instant, or None when it published nothing — and release the
+    * reservation. `holdOnSuccess` keeps it after a body that returns
+    * normally (a txn prepare).
+    *
+    * The visible set is `visibleInstants`, not `instants`: an in-doubt
+    * txn commit's data is invisible to the plan, so if it decides
+    * committed it must be a conflict CANDIDATE at publish, not part of
+    * the baseline.
+    */
+  private def reserved(holdOnSuccess: Boolean = false)(
+      body: (String, Set[String]) => Option[String]): Option[String] = {
+    val visible = timeline.visibleInstants().toSet
     val instant = timeline.reserveInstant()
-    try {
-      val incoming = withMeta(alignUser(data), instant)
-      val staging = writeStaging(incoming, instant)
-      publishOptimistic(instant, staging, "insert", "base", Seq.empty,
-        extra, visible = None)
-      instant
-    } finally timeline.releaseReservation(instant)
+    val out =
+      try body(instant, visible)
+      catch { case e: Throwable => timeline.releaseReservation(instant); throw e }
+    if (!holdOnSuccess) timeline.releaseReservation(instant)
+    out
   }
 
   /** Atomically replace the whole table content (SQL `INSERT OVERWRITE`):
@@ -936,11 +949,11 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * Delete rows: a batch may carry a boolean [[LakeTable.DeletedCol]]
     * column (Hudi's `_hoodie_is_deleted`). A row whose flag is true
     * removes its key unconditionally, whatever the stored row's
-    * precombine value (the same contract as [[delete]]); a delete for a
-    * key that does not exist writes nothing. A CDC batch therefore
+    * precombine value ([[delete]] is an upsert of such rows); a delete
+    * for a key that does not exist writes nothing. A CDC batch therefore
     * lands as ONE commit: COW tags and rewrites the matched files once,
     * MOR appends one delta whose delete rows are tombstones (in files
-    * of their own, the shape [[delete]] writes). Inside the batch a
+    * of their own: a tombstone file holds no live row). Inside the batch a
     * delete row resolves by precombine like any other row (a null
     * precombine sorts lowest). A batch without the column runs the
     * plain upsert plan.
@@ -990,19 +1003,30 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     upsertOrSkip(data, extra, combine, commitEmpty = false)
 
   private def upsertOrSkip(data: DataFrame, extra: Map[String, String],
-      combine: Boolean, commitEmpty: Boolean): Option[String] = {
-    // visibleInstants, not instants: an in-doubt txn commit's data was
-    // invisible to this plan, so if it decides committed it must be a
-    // conflict CANDIDATE at publish, not part of the baseline
-    val visible = timeline.visibleInstants().toSet
-    val instant = timeline.reserveInstant()
-    try upsertReserved(data, extra, combine, instant, visible, commitEmpty)
-    finally timeline.releaseReservation(instant)
+      combine: Boolean, commitEmpty: Boolean): Option[String] =
+    reserved()(upsertReserved(data, extra, combine, _, _, commitEmpty))
+
+  /** Commit nothing at `instant` under `op` — the empty commit of a batch
+    * without rows, of a delete whose keys are all absent, and of a delete
+    * on a table that has never been written.
+    */
+  private def commitNothing(instant: String, op: String,
+      extra: Map[String, String]): Option[String] = {
+    timeline.withLock() {
+      timeline.commit(CommitMeta(instant, op, Seq.empty, Seq.empty, extra))
+    }
+    Some(instant)
   }
 
-  private[graft] def upsertReserved(data: DataFrame, extra: Map[String, String],
-      combine: Boolean, instant: String, visible: Set[String],
-      commitEmpty: Boolean = true): Option[String] = {
+  /** The one keyed write, at an instant the caller reserved against the
+    * `visible` set ([[reserved]]): [[upsert]]'s plan, also run by
+    * [[delete]] (`op = "delete"`, a batch of delete rows). `op` names the
+    * commit; a MOR upsert publishes as `deltacommit`.
+    */
+  private[graft] def upsertReserved(data: DataFrame,
+      extra: Map[String, String], combine: Boolean, instant: String,
+      visible: Set[String], commitEmpty: Boolean = true,
+      op: String = "upsert"): Option[String] = {
     // delete rows (see [[upsert]]): the flag rides through alignment as
     // the meta column; without it the plan below is the plain upsert
     val marked = data.columns.contains(DeletedCol)
@@ -1022,16 +1046,10 @@ class LakeTable private (val spark: SparkSession, val path: String) {
         .agg(max_by(struct(fieldOrder.map(col): _*), struct(col(pc))).as("_s"))
         .select(col(RecordKeyCol) +: fieldOrder.map(c => col(s"_s.`$c`").as(c)): _*))
       .persist(StorageLevel.MEMORY_AND_DISK) // reference Y2, package.scala:66
-    def commitNothing(): Unit = timeline.withLock() {
-      timeline.commit(CommitMeta(instant, "upsert", Seq.empty, Seq.empty, extra))
-    }
     try {
       val (nRows, mnKey, mxKey, nDel) = batchBounds(incoming, marked)
-      if (nRows == 0) {
-        if (!commitEmpty) return None
-        commitNothing()
-        return Some(instant)
-      }
+      if (nRows == 0)
+        return (if (commitEmpty) commitNothing(instant, op, extra) else None)
       val isDel = col(DeletedCol)
       def live(df: DataFrame) = if (marked) df.filter(!isDel) else df
       if (_meta.tableType == "mor") {
@@ -1050,7 +1068,8 @@ class LakeTable private (val spark: SparkSession, val path: String) {
           else if (nDel == nRows) writeStaging(tombs, instant)
           else writeStaging(tombs, instant,
             into = Some(writeStaging(live(incoming), instant)))
-        publishOptimistic(instant, staging, "deltacommit", "delta",
+        publishOptimistic(instant, staging,
+          if (op == "upsert") "deltacommit" else op, "delta",
           Seq.empty, extra, visible = None, () => maybeCompactInline())
         return Some(instant)
       }
@@ -1063,11 +1082,9 @@ class LakeTable private (val spark: SparkSession, val path: String) {
           (RecordKeyCol +: _meta.recordKeyFields).distinct.map(col): _*),
         mnKey, mxKey, held)
       val matched = tagged.files
-      if (matched.isEmpty && nDel == nRows) {
-        // only deletes, and none of their keys exists: nothing to write
-        commitNothing()
-        return Some(instant)
-      }
+      // only deletes, and none of their keys exists: nothing to write
+      if (matched.isEmpty && nDel == nRows)
+        return commitNothing(instant, op, extra)
       val out =
         if (matched.isEmpty) live(incoming)
         else {
@@ -1105,98 +1122,46 @@ class LakeTable private (val spark: SparkSession, val path: String) {
           (if (marked) mergedKeyed.filter(col("r").isNotNull) else mergedKeyed)
             .select(col(RecordKeyCol) +: fieldOrder.map(c => col(s"r.`$c`").as(c)): _*)
         }
-      val staging = writeStaging(out, instant,
-        dirs = held.fold(Seq.empty[Seq[String]])(h => pointDirs(matched, nRows, h.dirs)))
-      publishOptimistic(instant, staging, "upsert", "base", matched, extra,
+      val staging = writeStaging(out, instant, dirs = held.fold(
+        Seq.empty[Seq[String]])(h => pointDirs(matched, nRows - nDel, h.dirs)))
+      publishOptimistic(instant, staging, op, "base", matched, extra,
         Some(visible))
       Some(instant)
     } finally incoming.unpersist()
   }
 
-  /** Delete by key: rows of `data` name the keys to remove (Hudi `delete`,
-    * reference HudiOP.scala:6). Under `indexScope = "partition"` the
-    * batch must also carry the partition columns — they are part of the
-    * record's identity there (missing columns fail analysis loudly).
+  /** Delete by key (Hudi `delete`, reference HudiOP.scala:6): rows of
+    * `data` name the keys to remove; a key that does not exist is a
+    * no-op. The batch needs the record-key columns, plus the partition
+    * columns under `indexScope = "partition"` (part of the record's
+    * identity there; a batch without them fails loudly). Its other
+    * columns are ignored, and it never changes the schema.
     *
-    * COW: only files containing matched keys are rewritten; survivors
-    * keep their original `_commit_time`. Tagging and the plan split are
-    * [[upsert]]'s: a point key set (at most
-    * [[LakeTable.BloomProbeMaxKeys]]) is held on the driver — bloom
-    * probe, one exact scan, survivors filtered by the held keys, the
-    * per-dir write ([[writeStaging]]) — a bulk one stays distributed
-    * (semi-join tagging, shuffled anti-join, range write).
-    *
-    * MOR: appends a small tombstone delta file (`_deleted = true` rows) —
-    * no file lookup, no rewrite, the same cheap-append write path as a
-    * MOR upsert (Hudi's delete blocks in log files). Readers drop every
-    * row version at or before the tombstone; a later upsert of the key
-    * revives it; compaction physically removes tombstoned rows.
-    *
-    * A batch that mixes changes and deletes (a CDC micro-batch) should
-    * not call this after an [[upsert]]: upsert `_deleted` rows apply
-    * both in one commit, with one tagging pass and one rewrite.
+    * A delete is an [[upsert]] of `_deleted` rows, committed as `delete`:
+    * COW rewrites only the files holding a matched key (survivors keep
+    * their `_commit_time`), MOR appends a tombstone delta. A table never
+    * written, or a batch none of whose keys exists, gets an empty
+    * `delete` commit.
     */
-  def delete(data: DataFrame, extra: Map[String, String] = Map.empty): String = {
-    val visible = timeline.visibleInstants().toSet
-    val instant = timeline.reserveInstant()
-    try deleteReserved(data, extra, instant, visible)
-    finally timeline.releaseReservation(instant)
-  }
+  def delete(data: DataFrame, extra: Map[String, String] = Map.empty): String =
+    reserved()(deleteAsUpsert(data, extra, _, _)).get
 
-  private def deleteReserved(data: DataFrame, extra: Map[String, String],
-      instant: String, visible: Set[String]): String = {
-    if (_meta.tableType == "mor") {
-      if (userSchema.isEmpty) {
-        // nothing ever written ⇒ nothing to delete (same no-op contract
-        // as the COW path on an empty table)
-        timeline.withLock() {
-          timeline.commit(
-            CommitMeta(instant, "delete", Seq.empty, Seq.empty, extra))
-        }
-        return instant
-      }
-      val keyed =
-        if (data.columns.contains(RecordKeyCol)) data.select(col(RecordKeyCol))
-        else withKeyCol(data).select(col(RecordKeyCol))
-      val tomb = tombstoneRows(keyed.distinct(), instant)
-      // tombstone append: conflict-free like any MOR delta (a concurrent
-      // upsert of the same key lands before or after the barrier — both
-      // are valid serializations of concurrent ops)
-      val staging = writeStaging(tomb, instant)
-      publishOptimistic(instant, staging, "delete", "delta", Seq.empty,
-        extra, visible = None, () => maybeCompactInline())
-      return instant
+  /** [[delete]]'s body: its keys as delete rows — identity columns kept,
+    * every other user column a typed null, `_deleted = true` — through
+    * the upsert's write.
+    */
+  private def deleteAsUpsert(data: DataFrame, extra: Map[String, String],
+      instant: String, visible: Set[String]): Option[String] =
+    userSchema match {
+      case None => commitNothing(instant, "delete", extra)
+      case Some(s) =>
+        val identity = identityFields
+        val rows = data.select(s.fields.toIndexedSeq.map(f =>
+          (if (identity.contains(f.name)) col(f.name) else lit(null))
+            .cast(f.dataType).as(f.name)) :+ lit(true).as(DeletedCol): _*)
+        upsertReserved(rows, extra, combine = true, instant, visible,
+          op = "delete")
     }
-    val keys = withKeyOnly(data).persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val (nKeys, mnKey, mxKey, _) = batchBounds(keys)
-      val held = hold(keys, nKeys)
-      val matched =
-        if (nKeys == 0) Seq.empty
-        else tagFiles(keys, mnKey, mxKey, held).files
-      if (matched.isEmpty) {
-        timeline.withLock() {
-          timeline.commit(
-            CommitMeta(instant, "delete", Seq.empty, Seq.empty, extra))
-        }
-        return instant
-      }
-      // rewrite matched files without the deleted keys. A point delete
-      // filters by the driver-held key set (map-side, no shuffle of the
-      // survivors) and writes one task per touched dir; a bulk purge
-      // (GDPR sweep) is past the point threshold, so its keys stay
-      // distributed in a shuffled left_anti — the upsert's plan split.
-      val survivors = held match {
-        case Some(h) => readFiles(matched).filter(!keyIn(h.keys.toSet))
-        case None    => readFiles(matched).join(keys, Seq(RecordKeyCol), "left_anti")
-      }
-      val staging = writeStaging(survivors, instant,
-        dirs = if (held.isEmpty) Nil else pointDirs(matched, 0L, Nil))
-      publishOptimistic(instant, staging, "delete", "base", matched, extra,
-        Some(visible))
-      instant
-    } finally keys.unpersist()
-  }
 
   /** MOR delete markers for the keys of `keys` (a frame carrying the
     * record key): user columns null, `_deleted = true` — the rows
@@ -1631,27 +1596,14 @@ class LakeTable private (val spark: SparkSession, val path: String) {
       userExtra: Map[String, String] = Map.empty): String = {
     val extra = userExtra ++ Map(Timeline.TxnIdKey -> txnId,
       Timeline.TxnCoordKey -> coord, Timeline.TxnPendingKey -> "true")
-    val visible = timeline.visibleInstants().toSet
-    val instant = timeline.reserveInstant()
-    try {
-      op match {
-        case "insert" =>
-          val incoming = withMeta(alignUser(data), instant)
-          val staging = writeStaging(incoming, instant)
-          publishOptimistic(instant, staging, "insert", "base", Seq.empty,
-            extra, visible = None)
-        case "upsert" =>
-          upsertReserved(data, extra, combine, instant, visible)
-        case "delete" =>
-          deleteReserved(data, extra, instant, visible)
-        case other =>
-          throw new IllegalArgumentException(
-            s"unsupported transactional operation: $other")
-      }
-      instant
-    } catch { case e: Throwable =>
-      timeline.releaseReservation(instant); throw e
-    }
+    reserved(holdOnSuccess = true)(op match {
+      case "insert" => (instant, _) => insertReserved(data, extra, instant)
+      case "upsert" => upsertReserved(data, extra, combine, _, _)
+      case "delete" => deleteAsUpsert(data, extra, _, _)
+      case other =>
+        throw new IllegalArgumentException(
+          s"unsupported transactional operation: $other")
+    }).get
   }
 
   /** Roll back an in-doubt or aborted txn prepare: drop its commit file
@@ -2560,15 +2512,6 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * incoming row schema and evaluate it per row; see LakeRowLevel).
     */
   private[graft] def keyColumnFor(batchSchema: StructType): Column = {
-    // partition index scope: identity = (partition values, key values) —
-    // prefixing the partition components makes every keyed code path
-    // (matching, merge, delete, file pruning) partition-local with no
-    // further special-casing, because keys from different partitions can
-    // never collide and sort into disjoint ranges per partition dir.
-    val keyCols =
-      if (_meta.indexScope == "partition")
-        _meta.partitionFields ++ _meta.recordKeyFields
-      else _meta.recordKeyFields
     def component(c: String): org.apache.spark.sql.Column = {
       import org.apache.spark.sql.types._
       // the TABLE schema decides the key component's type (a delete batch
@@ -2594,8 +2537,20 @@ class LakeTable private (val spark: SparkSession, val path: String) {
         coalesce(enc, lit("__HIVE_DEFAULT_PARTITION__"))
       else enc
     }
-    concat_ws(KeySep, keyCols.map(component): _*)
+    concat_ws(KeySep, identityFields.map(component): _*)
   }
+
+  /** The user columns a record key encodes ([[keyColumnFor]]). Under the
+    * partition index scope identity = (partition values, key values):
+    * prefixing the partition components makes every keyed code path
+    * (matching, merge, delete, file pruning) partition-local with no
+    * further special-casing, because keys from different partitions can
+    * never collide and sort into disjoint ranges per partition dir.
+    */
+  private def identityFields: Seq[String] =
+    if (_meta.indexScope == "partition")
+      _meta.partitionFields ++ _meta.recordKeyFields
+    else _meta.recordKeyFields
 
   /** Source columns referenced by hidden-partition derivations — they
     * cannot be renamed or dropped while a derivation reads them.
@@ -2632,17 +2587,6 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     df.filter(_meta.recordKeyFields.map(col(_).isNotNull).reduce(_ && _))
       .withColumn(RecordKeyCol, keyColumnFor(df.schema))
 
-  private def withKeyOnly(df: DataFrame): DataFrame = {
-    // keep the user key columns alongside when present — the record key
-    // determines them (injective encoding), so the distinct is still
-    // per-key, and their presence lets bucketPrune hash the batch
-    val base =
-      if (df.columns.contains(RecordKeyCol)) df else withKeyCol(df)
-    val keep = RecordKeyCol +:
-      _meta.recordKeyFields.filter(base.columns.contains)
-    base.select(keep.distinct.map(col): _*).distinct()
-  }
-
   /** One pass over the batch: (row count, min key, max key, delete rows
     * — counted only with `deletes`, else 0). Replaces an isEmpty probe +
     * a separate bounds aggregation — one Spark job that also
@@ -2672,7 +2616,8 @@ class LakeTable private (val spark: SparkSession, val path: String) {
   /** A point batch held on the driver ([[hold]]): its distinct record
     * keys and, when asked for, the distinct partition dirs its rows
     * write to — each a tuple of the partition fields' values (derived
-    * ones included) cast to string, the form the dir names carry.
+    * ones included) cast to string, the form the dir names carry. Delete
+    * rows write nothing, so their (possibly all-null) values name no dir.
     */
   private case class Held(keys: Array[String], dirs: Seq[Seq[String]])
 
@@ -2689,11 +2634,14 @@ class LakeTable private (val spark: SparkSession, val path: String) {
       None
     else {
       val parts = if (dirs) _meta.partitionFields else Nil
+      val flag = if (dirs) Seq(col(DeletedCol)) else Nil
       val got = (if (dirs) withDerivedPartitions(df) else df)
-        .select(col(RecordKeyCol) +: parts.map(col(_).cast(StringType)): _*)
+        .select((col(RecordKeyCol) +: flag) ++
+          parts.map(col(_).cast(StringType)): _*)
         .collect()
       Some(Held(got.map(_.getString(0)).distinct,
-        if (dirs) got.map(r => parts.indices.map(i => r.getString(i + 1))).distinct.toSeq
+        if (dirs) got.filterNot(_.getBoolean(1))
+          .map(r => parts.indices.map(i => r.getString(i + 2))).distinct.toSeq
         else Nil))
     }
 
@@ -2816,7 +2764,8 @@ class LakeTable private (val spark: SparkSession, val path: String) {
 
   /** The partition dirs a point rewrite writes to (as [[Held]] tuples,
     * a stored dir read back from its path) — the dirs of the `rewritten`
-    * files plus `batchDirs`, those of the batch's `batchRows` rows — when
+    * files plus `batchDirs`, those of the `batchRows` rows the batch
+    * itself writes (its delete rows write none) — when
     * its range-clustered write would run as ONE coalesced task anyway
     * and the dirs fit one task per core; else Nil (keep the range plan).
     *
@@ -2916,7 +2865,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     val selected = withDerived.select(
       (fullSchema.fieldNames.toIndexedSeq ++ derivedNames).map(col): _*)
     // range partitioning SAMPLES its input before shuffling — without a
-    // cache that re-executes the (expensive) merge/anti-join plan twice
+    // cache that re-executes the (expensive) merge plan twice
     val ordered0 =
       if (perDir) selected else selected.persist(StorageLevel.MEMORY_AND_DISK)
     // File clustering: range-partition by (partition dirs, record key) and
@@ -3486,12 +3435,12 @@ object LakeTable {
   private[graft] var FooterReadFanoutThreshold = 64
 
   /** Row-count ceiling of a POINT batch — the one threshold between the
-    * two keyed-write plans of [[LakeTable.upsert]] and
-    * [[LakeTable.delete]]. A batch at or below it is held on the driver:
-    * bloom-probed tagging, one exact scan returning the hit keys, a
-    * broadcast merge split by that hit set, the per-dir write. A larger
-    * (bulk) batch stays distributed: semi-join tagging, sort-merge (or
-    * shuffled anti-join) merge, range-clustered write. Sized so the
+    * two plans of the keyed write ([[LakeTable.upsert]], which
+    * [[LakeTable.delete]] runs too). A batch at or below it is held on
+    * the driver: bloom-probed tagging, one exact scan returning the hit
+    * keys, a broadcast merge split by that hit set, the per-dir write. A
+    * larger (bulk) batch stays distributed: semi-join tagging,
+    * sort-merge merge, range-clustered write. Sized so the
     * driver copy stays tens of MB at typical key widths. Mutable so tests
     * can force either plan; production leaves the default.
     */

@@ -1,29 +1,23 @@
 package graft.pipelines
 
-import graft.cdc.{CanalParser, CdcOp, CdcRecord}
+import graft.cdc.{CanalParser, CdcOp}
 import graft.lake.LakeTable
 import graft.util.Sessions
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{MapType, StringType}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** CDC stream (Canal binlog envelopes) → lake table with per-op routing
   * (reference KDS2Hudi.scala:83-147 + cdc/CanalParser.scala:11-32).
   *
   * Unlike the reference — which parses Canal driver-side — the parse runs
-  * as a typed `Dataset[String] → Dataset[CdcRecord]` flatMap on executors
-  * (SURVEY §2.8), so a 100 TB backlog parses in parallel. Row payloads are
-  * string-typed maps (Canal emits all values as strings); they are cast
-  * column-wise to the target table schema.
+  * as a typed flatMap on executors ([[parsedRecords]], SURVEY §2.8), so a
+  * 100 TB backlog parses in parallel. Row payloads are string-typed maps
+  * (Canal emits all values as strings); they are cast column-wise to the
+  * target table schema.
   */
 object CdcIngest {
-
-  /** Distributed parse of raw Canal JSON lines. */
-  def parse(lines: Dataset[String]): Dataset[CdcRecord] = {
-    import lines.sparkSession.implicits._
-    lines.flatMap(CanalParser.parse _)
-  }
 
   /** Cast the string-map payloads of parsed envelopes to the table
     * schema, keeping per-row op/ordering columns. `records` carries one
@@ -231,7 +225,7 @@ object CdcIngest {
       .option("checkpointLocation", cfg.checkpointDir)
       .trigger(Trigger.ProcessingTime(s"${cfg.triggerSeconds} seconds"))
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) table match {
+        table match {
           case None    => applyMultiTableBatch(spark, batch, cfg)
           case Some(t) =>
             if (cfg.cdcFormat == "dms") applyDmsBatch(spark, batch, t)

@@ -107,4 +107,17 @@ class IndexScopeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(snap.length == 3)
     assert(snap.map(_.getAs[Double]("v")).toSeq == Seq(2.0, 11.0, 3.0))
   }
+
+  test("partition scope: a keys-only delete without the partition column fails") {
+    val s = spark
+    import s.implicits._
+    for (tableType <- Seq("cow", "mor")) {
+      val t = mk(tableType)
+      t.upsert(df((1, 10L, "p1", 1.0), (1, 10L, "p2", 2.0)))
+      // the partition value is part of the identity: without it the
+      // delete cannot name a record, so it must fail, not delete nothing
+      intercept[Exception](t.delete(Seq(1).toDF("id")))
+      assert(t.snapshot().count() == 2, tableType)
+    }
+  }
 }

@@ -558,4 +558,18 @@ class LakeTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(t.snapshot().select("v").head().getDouble(0) == 3.0)
     assert(t.snapshotAsOf(c3).select("v").head().getDouble(0) == 3.0)
   }
+
+  test("delete: a batch carrying a column the table lacks leaves the schema unchanged") {
+    for (tableType <- Seq("cow", "mor")) {
+      val t = LakeTable.create(spark, tmp(),
+        TableMeta("t", Seq("id", "sub"), "ts", Seq("part"), tableType))
+      t.upsert(df((1, "a", 10L, "p1", 1.0), (2, "b", 10L, "p1", 2.0)))
+      val before = t.userSchema
+      t.delete(df((1, "a", 0L, "p1", 0.0)).withColumn("note", lit("gone")))
+      assert(t.userSchema == before, tableType)
+      assert(!t.snapshot().columns.contains("note"), tableType)
+      assert(t.snapshot().select("id").collect().map(_.getInt(0)).toSeq ==
+        Seq(2), tableType)
+    }
+  }
 }

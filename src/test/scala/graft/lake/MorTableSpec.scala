@@ -340,4 +340,14 @@ class MorTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(t.readOptimized().filter(col("id") === 2)
       .head().getAs[Double]("v") == 2.0)
   }
+
+  test("MOR delete on a table with no schema writes one empty delete commit") {
+    val t = mkTable()
+    val c = t.delete(df((1, 0L, "p1", 0.0)))
+    assert(t.timeline.instants() == Seq(c))
+    val meta = t.timeline.read(c)
+    assert(meta.operation == "delete")
+    assert(meta.added.isEmpty && meta.removed.isEmpty)
+    assert(t.userSchema.isEmpty)
+  }
 }

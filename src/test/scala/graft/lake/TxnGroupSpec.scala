@@ -429,6 +429,22 @@ class TxnGroupSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(done.contains("txn-rolledback" -> i), s"got $done")
     assert(a.snapshot().count() == 2)
   }
+
+  test("a TxnDelete removes its key on COW and MOR") {
+    val work = Files.createTempDirectory("txndel").toString
+    val tables = Seq("cow", "mor").map { tt =>
+      val t = LakeTable.create(spark, s"$work/$tt",
+        TableMeta(s"txn_del_$tt", Seq("id"), "ts", Seq.empty, tt))
+      t.upsert(df((1, 1L, 10.0), (2, 1L, 20.0)))
+      t
+    }
+    TxnGroup.commit(tables.map(t => TxnGroup.TxnDelete(t, df((1, 9L, 0.0)))))
+    tables.foreach { t =>
+      assert(t.snapshot().select("id").collect().map(_.getInt(0)).toSeq ==
+        Seq(2), t.meta.tableType)
+      assert(t.timeline.read(t.latestCommit.get).operation == "delete")
+    }
+  }
 }
 
 /** Cross-prepare concurrency gauge for the parallel-prepares test:
