@@ -804,16 +804,6 @@ class LakeTable private (val spark: SparkSession, val path: String) {
       }: _*)
   }
 
-  private def readFiles(relPaths: Seq[String]): DataFrame = {
-    val byPath = timeline.liveFiles().map(f => f.path -> f).toMap
-    readStats(relPaths.map(p => byPath.getOrElse(p,
-      FileStat(p, partitionOf(p), 0L, "", ""))))
-  }
-
-  /** Partition dir string of a relative file path. */
-  private def partitionOf(rel: String): String =
-    if (rel.contains("/")) rel.substring(0, rel.lastIndexOf("/")) else ""
-
   // --------------------------------------------------------------- writes
 
   /** Append without key matching (Hudi `insert` op, reference
@@ -864,84 +854,70 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * time travel to pre-overwrite instants keeps working until `clean`.
     */
   def overwrite(data: DataFrame, extra: Map[String, String] = Map.empty): String = timeline.withLock() {
-    val instant = timeline.nextInstant()
-    val incoming = withMeta(alignUser(data), instant)
-    val previous = timeline.liveFiles().map(_.path)
-    val stats = stageWrite(incoming, instant)
-    timeline.commit(CommitMeta(instant, "overwrite", stats, previous, extra))
-    instant
+    rewriteLocked("overwrite", Some(data), extra = extra) { _ =>
+      val live = timeline.liveFiles()
+      Target(live, dropDirs = live.map(_.partition).toSet)
+    }
   }
 
   /** Replace-where (Delta's replaceWhere / SQL `INSERT INTO ... REPLACE
     * WHERE` / static-partition `INSERT OVERWRITE ... PARTITION (...)`):
     * atomically delete every row matching `cond` and insert `data` — one
-    * commit. Only files CONTAINING a matching row are rewritten; victim
-    * discovery is a distributed filter over the live files, so a
-    * partition-aligned predicate prunes to those partitions via the
-    * metadata index before any I/O. NULL-evaluating rows are kept (only
-    * rows where `cond` is definitely true are replaced). Tombstone delta
-    * files are never victims — they mask keys globally and removing one
-    * could resurrect rows outside the predicate — but they ARE applied
-    * as a read barrier, so masked rows don't survive into the rewrite.
+    * commit rewriting the files CONTAINING a matching row, found by a
+    * distributed filter that a partition-aligned predicate prunes via the
+    * metadata index. NULL-evaluating rows are kept. On MOR the rewrite
+    * takes every live version of those files' keys ([[rewriteLocked]]),
+    * so `cond` is decided on each key's latest version. Tombstone files
+    * are never removed, but mask rows as a read barrier.
     */
   def replaceWhere(cond: Column, data: DataFrame,
       extra: Map[String, String] = Map.empty): String = timeline.withLock() {
-    val instant = timeline.nextInstant()
-    val incoming = withMeta(alignUser(data), instant)
     val matchCond = coalesce(cond, lit(false))
-    val live = timeline.liveFiles()
-    val candidates = live.filterNot(_.tombstones > 0)
-    val victims: Seq[String] =
-      if (candidates.isEmpty) Seq.empty
-      else {
-        import spark.implicits._
-        val hit = readStats(candidates)
-          .filter(matchCond)
-          .select(input_file_name().as("_f")).distinct()
-          .as[String].collect()
-        candidates.map(_.path).filter(rel => hit.exists(uriMatches(_, rel)))
-      }
-    val out =
-      if (victims.isEmpty) incoming
-      else {
-        val vstats = candidates.filter(f => victims.contains(f.path))
-        // MOR victims resolve against the GLOBAL tombstone barrier (same
-        // partial-rewrite argument as compactPartitions: an outside
-        // delta still wins resolution because it stays live)
-        val resolved =
-          if (vstats.exists(_.isDelta))
-            resolveLatest(readStats(vstats), tombstoneBarrier(live))
-          else readStats(vstats)
-        incoming.unionByName(resolved.filter(!matchCond))
-      }
-    val stats = stageWrite(out, instant)
-    timeline.commit(CommitMeta(instant, "replacewhere", stats, victims, extra))
-    instant
+    rewriteLocked("replacewhere", Some(data), extra = extra) { _ =>
+      val candidates = timeline.liveFiles().filterNot(_.tombstones > 0)
+      val victims =
+        if (candidates.isEmpty) Seq.empty
+        else {
+          import spark.implicits._
+          val hit = readStats(candidates)
+            .filter(matchCond)
+            .select(input_file_name().as("_f")).distinct()
+            .as[String].collect()
+          candidates.filter(f => hit.exists(uriMatches(_, f.path)))
+        }
+      Target(victims, drop = Some(matchCond))
+    }
   }
 
   /** Hive/Spark dynamic-partition-overwrite semantics (SQL `INSERT
     * OVERWRITE` under partitionOverwriteMode=dynamic, `writeTo(...)
     * .overwritePartitions()`): atomically replace exactly the partitions
     * the incoming batch touches, leaving every other partition alone.
-    * Tombstone files are kept even when the default partition is
-    * replaced — they mask keys globally, not per-partition.
+    * Tombstone files are kept — they mask keys globally. On MOR a key
+    * whose latest version lies in a replaced partition goes with all its
+    * versions ([[rewriteLocked]]).
     */
   def overwritePartitions(data: DataFrame,
       extra: Map[String, String] = Map.empty): String = timeline.withLock() {
+    requirePartitioned()
+    rewriteLocked("overwritepartitions", Some(data), extra = extra)(
+      overwrittenPartitions)
+  }
+
+  private def requirePartitioned(): Unit =
     require(_meta.partitionFields.nonEmpty,
       "dynamic partition overwrite requires a partitioned table " +
         "(unpartitioned tables: use overwrite())")
-    val instant = timeline.nextInstant()
-    val incoming = withMeta(alignUser(data), instant)
-    val stats = stageWrite(incoming, instant)
-    val parts = stats.map(_.partition).toSet
-    val removed = timeline.liveFiles()
-      .filter(f => parts.contains(f.partition) && f.tombstones == 0)
-      .map(_.path)
-    timeline.commit(
-      CommitMeta(instant, "overwritepartitions", stats, removed, extra))
-    instant
-  }
+
+  /** The partition overwrite's target: the batch's dirs, every row gone. */
+  private def overwrittenPartitions(dirs: Set[String]): Target =
+    Target(scopedFiles(dirs), dropDirs = dirs)
+
+  /** The live non-tombstone files of `dirs` — a partition-scoped
+    * rewrite's target (tombstones mask keys globally: never removed).
+    */
+  private def scopedFiles(dirs: Set[String]): Seq[FileStat] =
+    timeline.liveFiles().filter(f => dirs(f.partition) && f.tombstones == 0)
 
   /** Keyed upsert with precombine resolution (Hudi `upsert`, reference
     * package.scala:23 + HudiConfig.scala:45-48).
@@ -1088,7 +1064,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
       val out =
         if (matched.isEmpty) live(incoming)
         else {
-          val eS = readFiles(matched)
+          val eS = readStats(matched)
             .select(col(RecordKeyCol), struct(fieldOrder.map(col): _*).as("e"))
           val iS = incoming
             .select(col(RecordKeyCol), struct(fieldOrder.map(col): _*).as("i"))
@@ -1124,8 +1100,8 @@ class LakeTable private (val spark: SparkSession, val path: String) {
         }
       val staging = writeStaging(out, instant, dirs = held.fold(
         Seq.empty[Seq[String]])(h => pointDirs(matched, nRows - nDel, h.dirs)))
-      publishOptimistic(instant, staging, op, "base", matched, extra,
-        Some(visible))
+      publishOptimistic(instant, staging, op, "base", matched.map(_.path),
+        extra, Some(visible))
       Some(instant)
     } finally incoming.unpersist()
   }
@@ -1173,64 +1149,169 @@ class LakeTable private (val spark: SparkSession, val path: String) {
       Seq(col(RecordKeyCol), lit(instant).as(CommitTimeCol),
         lit(true).as(DeletedCol)): _*)
 
+  // ---------------------------------------------------- file-set rewrites
+
+  /** A rewrite's pick: the live `files` it replaces, and the rows of them
+    * that go — those matching `drop` and those in the dirs `dropDirs`.
+    */
+  private case class Target(files: Seq[FileStat], drop: Option[Column] = None,
+      dropDirs: Set[String] = Set.empty) {
+    def dropsRows: Boolean = drop.isDefined || dropDirs.nonEmpty
+  }
+
+  /** A rewrite's row order within each dir (default: the record key) and
+    * the keys it adds to its commit's `extra`.
+    */
+  private case class Layout(clusterExprs: Seq[Column] = Nil,
+      extra: Map[String, String] = Map.empty)
+
+  /** A batch its own tasks staged at the reserved `instant` (the SQL
+    * dynamic partition overwrite): published unrouted, behind a
+    * partition-level conflict check against the plan-time `visible` set.
+    */
+  private case class TaskStaged(instant: String, staging: Path,
+      visible: Set[String])
+
+  /** The one file-set rewrite, run by every commit that replaces live
+    * files under the writer lock (caller holds it):
+    *  1. stage the batch (`data` at a fresh instant, or `staged`) and
+    *     `pick` the target given the partition dirs the batch staged;
+    *  2. close the target over record keys ([[closeOverKeys]]);
+    *  3. read the closed set — resolved under the live tombstone barrier
+    *     when it holds a delta, as [[snapshotOfFiles]] does — and stage
+    *     the surviving rows with `layout` into the batch's staging dir,
+    *     so the publish numbers every file once (not read when every row
+    *     goes);
+    *  4. publish one commit `op` removing the closed set. Rows keep their
+    *     `_commit_time`. Crash specs halt at `<op>.staged` / `<op>.renamed`:
+    *     the residue is a staging dir or never-committed files, invisible
+    *     to readers and swept by CALL system.cleanup_orphans.
+    */
+  private def rewriteLocked(op: String, data: Option[DataFrame] = None,
+      staged: Option[TaskStaged] = None, extra: Map[String, String] = Map.empty,
+      layout: DataFrame => Layout = _ => Layout())(
+      pick: Set[String] => Target): String = {
+    val instant = staged.fold(timeline.nextInstant())(_.instant)
+    val batch = staged.map(_.staging).filter(fs.exists(_)).orElse(data.map(d =>
+      writeStaging(withMeta(alignUser(d), instant), instant)))
+    val target = pick(batch.fold(Set.empty[String])(stagedDirs))
+    val live = timeline.liveFiles()
+    val closed = closeOverKeys(target, live)
+    val (staging, layoutExtra) =
+      if (closed.forall(f => target.dropDirs(f.partition))) (batch, Map.empty)
+      else {
+        val resolved = if (!closed.exists(_.isDelta)) readStats(closed)
+          else resolveLatest(readStats(closed), tombstoneBarrier(live))
+        val kept = target.drop.fold(resolved)(c => resolved.filter(!c))
+        val rows = (if (target.dropDirs.isEmpty) kept
+          else withDerivedPartitions(kept).filter(!inDirs(target.dropDirs)))
+          .persist(StorageLevel.MEMORY_AND_DISK) // layout + write passes
+        try {
+          val l = layout(rows)
+          (Some(writeStaging(rows, instant, l.clusterExprs, into = batch,
+            cached = true)), l.extra)
+        } finally { rows.unpersist(); () }
+      }
+    FaultInjection.point(s"$op.staged")
+    val stats = staging.fold(Seq.empty[FileStat]) { s =>
+      val parts = collectStagedStats(s)
+      staged.foreach(t => checkStagedConflict(instant, op, s, parts,
+        t.visible, partitionLevel = true))
+      renameStaged(s, instant, "base", parts, routed = staged.isEmpty)
+    }
+    FaultInjection.point(s"$op.renamed")
+    timeline.commit(CommitMeta(instant, op, stats, closed.map(_.path),
+      extra ++ layoutExtra))
+    instant
+  }
+
+  /** Close a rewrite's target over record keys: a rewrite that resolves
+    * or drops rows must take every live version of the keys it touches,
+    * or an older version outlives a dropped row, or sits as a second
+    * base next to the resolved one once no delta is left. It applies
+    * when the table has a live delta and the target holds a delta or
+    * drops rows; COW plans are unchanged. [[tagFiles]] adds the live
+    * non-tombstone files holding a key of the target's deltas (of every
+    * target file when rows are dropped), then of each added delta, until
+    * none is added. A base key needs no probe otherwise: keyed writes
+    * and rewrites leave no second base version of a key, so its other
+    * versions are deltas outside, which stay live and win on read.
+    */
+  private def closeOverKeys(target: Target, live: Seq[FileStat]): Seq[FileStat] = {
+    @scala.annotation.tailrec
+    def grow(closed: Seq[FileStat], probe: Seq[FileStat]): Seq[FileStat] = {
+      val in = closed.map(_.path).toSet
+      val rest = live.filter(f => f.tombstones == 0 && !in(f.path))
+      if (probe.isEmpty || rest.isEmpty) closed
+      else {
+        val keys = readStats(probe).select(
+          (RecordKeyCol +: _meta.recordKeyFields).distinct.map(col): _*)
+        val added = tagFiles(keys, probe.map(_.minKey).min,
+          probe.map(_.maxKey).max, hold(keys, probe.map(_.numRecords).sum),
+          rest).files
+        grow(closed ++ added, added.filter(_.isDelta))
+      }
+    }
+    val t = target.files
+    if (!live.exists(_.isDelta) || !(target.dropsRows || t.exists(_.isDelta))) t
+    else grow(t, if (target.dropsRows) t else t.filter(_.isDelta))
+  }
+
+  /** The partition dirs a staging dir holds parquet files in (a root
+    * file is Spark's empty output, not a dir).
+    */
+  private def stagedDirs(staging: Path): Set[String] = {
+    val dirs = scala.collection.mutable.Set[String]()
+    val it = fs.listFiles(staging, true)
+    while (it.hasNext) {
+      val p = it.next().getPath
+      if (p.getName.endsWith(".parquet")) dirs += partitionOfRel(relIn(staging, p))
+    }
+    dirs.toSet - ""
+  }
+
+  /** `true` on a row whose partition values (derived ones present) name
+    * one of the stored `dirs` — compared as the strings Spark writes.
+    */
+  private def inDirs(dirs: Set[String]): Column =
+    concat_ws("/", _meta.partitionFields.map { f =>
+      val v = col(f).cast(StringType)
+      concat(lit(s"$f="),
+        when(v.isNull || v === "", lit("__HIVE_DEFAULT_PARTITION__")).otherwise(v))
+    }: _*).isin(dirs.toSeq.map(_.split("/")
+      .map(LakeFileIndex.unescapePathName).mkString("/")): _*)
+
   /** MOR table service: merge base + delta into fresh base files
     * (Hudi compaction; inline cadence per `inlineCompactMax`, reference
     * HudiConfig.scala:22-23). Rows keep their original `_commit_time`, so
-    * incremental reads spanning a compaction stay correct.
+    * incremental reads spanning a compaction stay correct. Tombstoned
+    * keys are dropped by the barrier join, so a full compaction
+    * physically removes deleted rows AND their tombstones.
     */
-  def compact(): Option[String] = timeline.withLock() { compactLocked() }
+  def compact(): Option[String] =
+    timeline.withLock() { compactLocked(timeline.liveFiles()) }
 
-  /** Compaction body — caller must hold the writer lock. */
-  private def compactLocked(): Option[String] = {
-    val live = timeline.liveFiles()
-    if (!live.exists(_.isDelta)) return None
-    val instant = timeline.nextInstant()
-    // tombstoned keys are dropped by the barrier join, so compaction
-    // physically removes deleted rows AND their tombstones
-    val resolved = resolveLatest(readFiles(live.map(_.path)),
-      tombstoneBarrier(live))
-    val stats = stageWrite(resolved, instant, kind = "base")
-    timeline.commit(CommitMeta(instant, "compact", stats, live.map(_.path)))
-    Some(instant)
-  }
+  /** Compact `target` when it holds a delta — caller holds the lock. */
+  private def compactLocked(target: Seq[FileStat]): Option[String] =
+    if (!target.exists(_.isDelta)) None
+    else Some(rewriteLocked("compact")(_ => Target(target)))
 
-  /** Partition-scoped compaction: merge base + deltas of ONLY the given
+  /** Partition-scoped compaction: merge base + deltas of the given
     * partition dirs into fresh base files — the per-file-group compaction
     * policy of log-structured table formats, so one hot partition's delta
     * debt does not force a whole-table rewrite.
     *
-    * Safe under the global index: resolution inside the subset can elect
-    * a version that a live delta OUTSIDE the subset supersedes — the
-    * read-side (precombine, commit-time) resolution still picks the
-    * newer version, because that delta stays live. Tombstone files are
-    * never removed by a scoped compaction (they mask keys globally, and
-    * a masked row may live outside the subset); they are still applied
-    * as a read barrier so masked rows are dropped from the rewritten
-    * base. Only a FULL [[compact]] physically purges tombstones.
+    * The rewrite takes every live version of the keys of the
+    * partitions' deltas ([[rewriteLocked]]): a key that moved partition
+    * under the global index, or whose delta here is stale, has its other
+    * versions rewritten with it, so no key is left twice. Tombstone files
+    * are never removed by a scoped compaction (they mask keys globally);
+    * they are still applied as a read barrier, so masked rows are dropped
+    * from the rewritten base. Only a FULL [[compact]] physically purges
+    * tombstones.
     */
   def compactPartitions(parts: Set[String]): Option[String] =
-    timeline.withLock() { compactPartitionsLocked(parts) }
-
-  private def compactPartitionsLocked(parts: Set[String]): Option[String] = {
-    val live = timeline.liveFiles()
-    val target = live.filter(f =>
-      parts.contains(f.partition) && f.tombstones == 0)
-    if (!target.exists(_.isDelta)) return None
-    val instant = timeline.nextInstant()
-    val resolved = resolveLatest(readFiles(target.map(_.path)),
-      tombstoneBarrier(live)) // global barrier: masks from ANY partition
-    // stage → rename → commit, decomposed so crash-recovery specs can
-    // kill the JVM at either boundary: residue before the rename is a
-    // staging dir, after it a set of never-committed final-named files —
-    // both invisible to readers (only commit-listed paths are live) and
-    // both swept by CALL system.cleanup_orphans.
-    val staging = writeStaging(resolved, instant)
-    FaultInjection.point("compact.staged")
-    val stats = publishStaged(staging, instant, "base")
-    FaultInjection.point("compact.renamed")
-    timeline.commit(CommitMeta(instant, "compact", stats, target.map(_.path)))
-    Some(instant)
-  }
+    timeline.withLock() { compactLocked(scopedFiles(parts)) }
 
   private def maybeCompactInline(): Unit = {
     if (_meta.inlineCompactMax <= 0 && _meta.inlineCompactMaxBytes <= 0L)
@@ -1278,8 +1359,8 @@ class LakeTable private (val spark: SparkSession, val path: String) {
       (maxB > 0L && fs.map(_.sizeBytes).sum >= maxB)
     }.keySet
     if (hot.nonEmpty) {
-      if (deltas.exists(_.tombstones > 0)) compactLocked()
-      else compactPartitionsLocked(hot)
+      compactLocked(if (deltas.exists(_.tombstones > 0)) live
+        else scopedFiles(hot))
       ()
     }
   }
@@ -1326,12 +1407,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
       .groupBy(_.partition).filter(_._2.size >= minFiles)
       .values.flatten.toSeq
     if (picked.isEmpty) None
-    else {
-      val instant = timeline.nextInstant()
-      val stats = stageWrite(readStats(picked), instant, kind = "base")
-      timeline.commit(CommitMeta(instant, "pack", stats, picked.map(_.path)))
-      Some(instant)
-    }
+    else Some(rewriteLocked("pack")(_ => Target(picked)))
   }
 
   /** Table service: rewrite the live file set clustered (range-
@@ -1354,16 +1430,9 @@ class LakeTable private (val spark: SparkSession, val path: String) {
         "index: files must stay hash-routed by key " +
         "(zorder/hilbert compose — they sort WITHIN each bucket)")
     val live = timeline.liveFiles()
-    if (live.isEmpty) return None
-    val instant = timeline.nextInstant()
-    val resolved =
-      if (live.exists(_.isDelta))
-        resolveLatest(readFiles(live.map(_.path)), tombstoneBarrier(live))
-      else readStats(live)
-    val stats = stageWrite(resolved, instant, kind = "base",
-      clusterBy = sortCols)
-    timeline.commit(CommitMeta(instant, "cluster", stats, live.map(_.path)))
-    Some(instant)
+    if (live.isEmpty) None
+    else Some(rewriteLocked("cluster",
+      layout = _ => Layout(sortCols.map(col)))(_ => Target(live)))
   }
 
   /** Z-ORDER clustering rewrite: lays files along a space-filling curve
@@ -1454,18 +1523,13 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     val live = timeline.liveFiles()
     if (live.isEmpty) return None
     // prior bounds for THIS curve/cols/bits, if any (newest wins)
-    val prior: Option[(String, Seq[Seq[Double]])] =
-      timeline.between(Timeline.Earliest, MaxInstant).reverseIterator
-        .flatMap { c =>
-          for {
-            b <- c.extra.get("cluster.bounds")
-            if c.extra.get("cluster.curve").contains(curveKind)
-            if c.extra.get("cluster.cols").contains(cols.mkString(","))
-            if c.extra.get("cluster.bits").contains(bitsPerCol.toString)
-          } yield (c.instant,
-            graft.util.Json.mapper.readValue(b,
-              classOf[Array[Array[Double]]]).map(_.toSeq).toSeq)
-        }.nextOption()
+    val seed = Map("cluster.curve" -> curveKind,
+      "cluster.cols" -> cols.mkString(","), "cluster.bits" -> bitsPerCol.toString)
+    val prior: Option[(String, Seq[Seq[Double]])] = curveCommits()
+      .find(c => seed.forall { case (k, v) => c.extra.get(k).contains(v) })
+      .map(c => (c.instant, graft.util.Json.mapper.readValue(
+        c.extra("cluster.bounds"), classOf[Array[Array[Double]]])
+        .map(_.toSeq).toSeq))
     val (target, reused) = (incremental, prior) match {
       case (true, Some((since, bs))) =>
         val addedAt = timeline.between(Timeline.Earliest, MaxInstant)
@@ -1475,19 +1539,11 @@ class LakeTable private (val spark: SparkSession, val path: String) {
       case _ => (live, None) // full rewrite (seeds the bounds)
     }
     if (target.isEmpty) return None
-    val instant = timeline.nextInstant()
-    val resolved =
-      (if (target.exists(_.isDelta))
-        resolveLatest(readFiles(target.map(_.path)), tombstoneBarrier(live))
-      else readStats(target))
-        // two passes below (quantiles, then the staged write)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    Some(rewriteLocked("cluster", layout = { rows =>
       val nb = 1 << bitsPerCol
       val bounds: Seq[Seq[Double]] = reused.getOrElse {
         val probs = (1 until nb).map(_.toDouble / nb).toArray
-        val doubled = resolved.select(
-          cols.map(c => curveProxy(c).as(c)): _*)
+        val doubled = rows.select(cols.map(c => curveProxy(c).as(c)): _*)
         doubled.stat.approxQuantile(cols.toArray, probs, 0.01)
           .map(_.toSeq).toSeq
       }
@@ -1501,31 +1557,22 @@ class LakeTable private (val spark: SparkSession, val path: String) {
             curveProxy(c), bs.distinct.sorted.toArray),
           lit(0))
       }
-      val stats = stageWrite(resolved, instant, kind = "base",
-        clusterExprs = Seq(curve(buckets)))
-      timeline.commit(
-        CommitMeta(instant, "cluster", stats, target.map(_.path),
-          extra = Map(
-            "cluster.bounds" -> graft.util.Json.write(bounds),
-            "cluster.curve" -> curveKind,
-            "cluster.cols" -> cols.mkString(","),
-            "cluster.bits" -> bitsPerCol.toString)))
-      Some(instant)
-    } finally { resolved.unpersist(); () }
+      Layout(Seq(curve(buckets)),
+        seed + ("cluster.bounds" -> graft.util.Json.write(bounds)))
+    })(_ => Target(target)))
   }
 
   /** The most recent curve-clustering commit's parameters, if any —
     * the seed an incremental maintenance run continues from.
     */
   private def lastCurveSeed(): Option[(String, Seq[String], Int)] =
+    curveCommits().nextOption().map(c => (c.extra("cluster.curve"),
+      c.extra("cluster.cols").split(",").toSeq, c.extra("cluster.bits").toInt))
+
+  /** Curve-clustering commits (their `cluster.*` extra keys), newest first. */
+  private def curveCommits(): Iterator[CommitMeta] =
     timeline.between(Timeline.Earliest, MaxInstant).reverseIterator
-      .flatMap { c =>
-        for {
-          k <- c.extra.get("cluster.curve")
-          cols <- c.extra.get("cluster.cols")
-          bits <- c.extra.get("cluster.bits")
-        } yield (k, cols.split(",").toSeq, bits.toInt)
-      }.nextOption()
+      .filter(_.extra.contains("cluster.bounds"))
 
   /** One-call maintenance policy (the table-services scheduler): run,
     * in order, exactly the services this table currently needs —
@@ -2656,15 +2703,16 @@ class LakeTable private (val spark: SparkSession, val path: String) {
       udf((k: String) => b.value.contains(k)).apply(col(RecordKeyCol))
     }
 
-  /** Tagging's result: the live files holding at least one batch key
-    * (stored paths) and, on the point path, the batch keys found there.
+  /** Tagging's result: the files holding at least one batch key and, on
+    * the point path, the batch keys found there.
     */
-  private case class Tagged(files: Seq[String], hits: Option[Set[String]])
+  private case class Tagged(files: Seq[FileStat], hits: Option[Set[String]])
 
-  /** Tag the live files a keyed write must rewrite. `batchKeys` carries
-    * the record key (plus the user key columns, when present, for the
-    * bucket step); `mn`/`mx` are its bounds from [[batchBounds]]. The
-    * prune runs bucket → key range → bloom → exact scan:
+  /** Tag the files of `live` (default: the live set) that hold a key of
+    * `batchKeys` — the files a keyed write must rewrite, or a rewrite's
+    * key closure must add. `batchKeys` carries the record key (plus the
+    * user key columns, when present, for the bucket step); `mn`/`mx` are
+    * its bounds. The prune runs bucket → key range → bloom → exact scan:
     *  1. [[bucketPrune]] and the key-range overlap use commit-metadata
     *     stats only (no data read);
     *  2. a point batch (`held`, its keys on the driver) probes each
@@ -2678,8 +2726,8 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     *     against the candidates, returning files only.
     */
   private def tagFiles(batchKeys: DataFrame, mn: String, mx: String,
-      held: Option[Held]): Tagged = {
-    val live = timeline.liveFiles()
+      held: Option[Held],
+      live: Seq[FileStat] = timeline.liveFiles()): Tagged = {
     val none = Tagged(Seq.empty, held.map(_ => Set.empty[String]))
     if (live.isEmpty || mn == null) return none
     // bucket prune first: under the bucket index files are hash-
@@ -2692,7 +2740,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     val candidates = held.fold(ranged)(h => bloomPrune(ranged, h.keys))
     if (candidates.isEmpty) return none
     import spark.implicits._
-    val scan = readFiles(candidates.map(_.path))
+    val scan = readStats(candidates)
       .select(col(RecordKeyCol), input_file_name().as("_f"))
     val (hitFiles, hits) = held match {
       case Some(h) =>
@@ -2705,8 +2753,8 @@ class LakeTable private (val spark: SparkSession, val path: String) {
           None)
     }
     // map absolute URIs back to stored paths by unique suffix
-    Tagged(candidates.map(_.path)
-      .filter(rel => hitFiles.exists(uriMatches(_, rel))), hits)
+    Tagged(candidates.filter(f => hitFiles.exists(uriMatches(_, f.path))),
+      hits)
   }
 
   /** Bucket step of [[tagFiles]]: when the table is bucketed and
@@ -2728,21 +2776,12 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     candidates.filter(f => f.bucket.forall(hit.contains))
   }
 
-  /** Bloom step of [[tagFiles]] for a batch given as a frame of record
-    * keys: at most [[LakeTable.BloomProbeMaxKeys]] keys (`keyCount`)
-    * collect and probe; a bulk batch keeps every candidate.
-    */
-  private[lake] def bloomPrune(candidates: Seq[FileStat],
-      incomingKeys: DataFrame, keyCount: Long): Seq[FileStat] =
-    hold(incomingKeys, keyCount)
-      .fold(candidates)(h => bloomPrune(candidates, h.keys))
-
   /** Keep only candidates whose record-key bloom could contain one of
     * the driver-held `keys` — the point-batch bloom step of
     * [[tagFiles]]. Small candidate sets probe on the driver; large ones
     * fan out one task per file slice, shipping the keys by broadcast.
     */
-  private def bloomPrune(candidates: Seq[FileStat],
+  private[lake] def bloomPrune(candidates: Seq[FileStat],
       keys: Array[String]): Seq[FileStat] =
     if (candidates.size <= FooterReadFanoutThreshold) {
       val conf = spark.sessionState.newHadoopConf()
@@ -2780,7 +2819,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * stats yet, AQE or its coalescing off, or a bucketed layout: the
     * range plan (or bucket routing) stays.
     */
-  private def pointDirs(rewritten: Seq[String], batchRows: Long,
+  private def pointDirs(rewritten: Seq[FileStat], batchRows: Long,
       batchDirs: Seq[Seq[String]]): Seq[Seq[String]] = {
     import org.apache.spark.sql.internal.SQLConf
     val c = spark.sessionState.conf
@@ -2792,12 +2831,12 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     val target =
       if (c.getConf(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST)) minSize
       else math.max(minSize, c.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
-    val rw = rewritten.toSet
+    val rw = rewritten.map(_.path).toSet
     val bytesPerRow = sized.map(_.sizeBytes).sum / sized.map(_.numRecords).sum
     val estimate = sized.filter(f => rw(f.path)).map(_.sizeBytes).sum +
       batchRows * bytesPerRow
     if (estimate > target) return Nil
-    val stored = rewritten.map(partitionOf).distinct.map(p =>
+    val stored = rewritten.map(_.partition).distinct.map(p =>
       p.split("/").toSeq.filter(_.nonEmpty).map { kv =>
         val v = LakeFileIndex.unescapePathName(kv.substring(kv.indexOf('=') + 1))
         if (v == "__HIVE_DEFAULT_PARTITION__") null else v
@@ -2828,19 +2867,12 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     }
   }
 
-  /** Write `out` (user cols + meta cols) into hive-style partition dirs,
-    * collect per-file key stats, and move files to their final
-    * `<instant>_<n>.parquet` names. Returns the added-file stats.
-    */
-  private def stageWrite(out: DataFrame, instant: String,
-      kind: String = "base", clusterBy: Seq[String] = Seq.empty,
-      clusterExprs: Seq[Column] = Seq.empty): Seq[FileStat] =
-    publishStaged(writeStaging(out, instant, clusterBy, clusterExprs),
-      instant, kind)
-
-  /** The heavy half of [[stageWrite]]: cluster + write the batch into a
-    * fresh staging dir, NO lock required — optimistic writers run this
-    * before taking the lock for the (cheap) publish.
+  /** Cluster + write `out` (user cols + meta cols) into hive-style
+    * partition dirs of a fresh staging dir, NO lock required — optimistic
+    * writers run this before taking the lock for the (cheap) publish.
+    * `into` adds the files to an earlier staging of the same commit;
+    * `cached` says the caller already cached `out`, so the range sample
+    * needs no cache of its own.
     *
     * `dirs` non-empty marks a point rewrite that [[pointDirs]] admitted
     * (its range-clustered write would coalesce into one task): it skips
@@ -2849,10 +2881,9 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     * same one key-sorted file per touched dir, written in parallel.
     */
   private def writeStaging(out: DataFrame, instant: String,
-      clusterBy: Seq[String] = Seq.empty,
       clusterExprs: Seq[Column] = Seq.empty,
       into: Option[Path] = None,
-      dirs: Seq[Seq[String]] = Nil): Path = {
+      dirs: Seq[Seq[String]] = Nil, cached: Boolean = false): Path = {
     // hidden partitioning: derived partition columns live OUTSIDE the
     // user schema, so every staged write re-derives them here — the one
     // choke point all writers (user batches, COW rewrites, compaction,
@@ -2867,7 +2898,8 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     // range partitioning SAMPLES its input before shuffling — without a
     // cache that re-executes the (expensive) merge plan twice
     val ordered0 =
-      if (perDir) selected else selected.persist(StorageLevel.MEMORY_AND_DISK)
+      if (perDir || cached) selected
+      else selected.persist(StorageLevel.MEMORY_AND_DISK)
     // File clustering: range-partition by (partition dirs, record key) and
     // sort within tasks, so (a) a small batch lands in few well-filled
     // files (AQE coalesces the sampled shuffle — without this every write
@@ -2879,9 +2911,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     // every hash-scattered file — and sorted keys give parquet row-group
     // stats that skip at scan (Hudi's sort-mode/clustering analog).
     val clusterCols = _meta.partitionFields.map(col) ++
-      (if (clusterExprs.nonEmpty) clusterExprs
-      else if (clusterBy.nonEmpty) clusterBy.map(col)
-      else Seq(col(RecordKeyCol)))
+      (if (clusterExprs.nonEmpty) clusterExprs else Seq(col(RecordKeyCol)))
     // Bucket index: route rows with Spark's own bucket function —
     // `repartition(n, keyCols)` IS `HashPartitioning(keyCols, n)`, whose
     // partition-id expression `pmod(murmur3(keyCols), n)` is exactly what
@@ -2900,10 +2930,6 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     // row-group stats within the one file per bucket.
     val ordered =
       if (_meta.bucketCount > 0) {
-        require(clusterBy.isEmpty,
-          "cluster(col) layout rewrites are incompatible with the " +
-            "bucket index: files must stay hash-routed by key " +
-            "(zorder/hilbert compose — they sort WITHIN each bucket)")
         val intra = _meta.partitionFields.map(col) ++
           (if (clusterExprs.nonEmpty) clusterExprs :+ col(RecordKeyCol)
           else Seq(col(RecordKeyCol)))
@@ -2953,7 +2979,7 @@ class LakeTable private (val spark: SparkSession, val path: String) {
         else w
       w2.parquet(staging.toString)
       staging
-    } finally { if (!perDir) ordered0.unpersist(); () }
+    } finally { if (!perDir && !cached) ordered0.unpersist(); () }
   }
 
   /** Publish a driver-staged optimistic write under the lock: stats,
@@ -3013,17 +3039,6 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     followUp()
     stats
   }
-
-  /** Publish a staging directory laid out like the table (hive partition
-    * dirs, physical schema = fullSchema minus partition columns): collect
-    * per-file stats, move the files to their final `<instant>_<n>.parquet`
-    * names, and delete the staging dir. Shared by [[stageWrite]] and the
-    * row-level-operation write path (whose executors stage files
-    * directly).
-    */
-  private[graft] def publishStaged(staging: Path, instant: String,
-      kind: String): Seq[FileStat] =
-    renameStaged(staging, instant, kind, collectStagedStats(staging))
 
   /** Spark's staged output name is `part-<shufflePartitionId>-<uuid>…`;
     * under bucket routing the shuffle partition id IS the bucket id.
@@ -3195,14 +3210,6 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     new Path(tablePath,
       s"_lake/staging/${instant}_rl_${java.util.UUID.randomUUID().toString.take(8)}")
 
-  /** Publish a row-level operation: optimistic-concurrency check, orphan
-    * sweep (only files named by committed task messages publish — a
-    * retried task's first attempt may have left partials), publish +
-    * commit, then the table-type follow-up: COW tables compact the
-    * affected file groups inline so the no-deltas contract holds
-    * (read-optimized == snapshot), MOR tables fall under the normal
-    * inline-compaction debt policy.
-    */
   /** Commit operations that change no logical row content (table
     * services): never a write-write conflict with an optimistic commit.
     */
@@ -3292,13 +3299,12 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     }
   }
 
-  /** OCC gate + task-retry orphan sweep + publish, shared by the staged
-    * distributed-writer commits (row-level ops, dynamic overwrite).
-    * Caller must hold the writer lock.
+  /** Task-retry orphan sweep of a task-staged write (row-level ops,
+    * dynamic overwrite): only files named by committed task messages
+    * (`files`) publish — a retried task's first attempt may have left
+    * partials.
     */
-  private def publishTaskStaged(instant: String, staging: Path,
-      files: Seq[Path], op: String, kind: String,
-      visible: Set[String], partitionLevel: Boolean): Seq[FileStat] = {
+  private def sweepTaskOrphans(staging: Path, files: Seq[Path]): Unit = {
     val keep = files.map(p => fs.makeQualified(p).toString).toSet
     if (fs.exists(staging)) {
       val it = fs.listFiles(staging, true)
@@ -3309,56 +3315,54 @@ class LakeTable private (val spark: SparkSession, val path: String) {
           fs.delete(st.getPath, false)
       }
     }
-    if (files.isEmpty) { fs.delete(staging, true); Seq.empty }
-    else {
-      val parts = collectStagedStats(staging)
-      val ours = parts.collect { case (src, p) if p.rows > 0L =>
-        (partitionOfRel(relIn(staging, src)), p.minKey, p.maxKey)
-      }
-      try checkWriteConflict(instant, op, visible, ours,
-        partitionLevel = partitionLevel)
-      catch { case e: java.util.ConcurrentModificationException =>
-        fs.delete(staging, true); throw e
-      }
-      renameStaged(staging, instant, kind, parts, routed = false)
+  }
+
+  /** OCC gate of a task-staged publish over its statted files `parts`:
+    * on conflict the staging dir is dropped and the error rethrown.
+    * Caller must hold the writer lock.
+    */
+  private def checkStagedConflict(instant: String, op: String,
+      staging: Path, parts: Seq[(Path, FooterStats.Parts)],
+      visible: Set[String], partitionLevel: Boolean): Unit = {
+    val ours = parts.collect { case (src, p) if p.rows > 0L =>
+      (partitionOfRel(relIn(staging, src)), p.minKey, p.maxKey)
+    }
+    try checkWriteConflict(instant, op, visible, ours,
+      partitionLevel = partitionLevel)
+    catch { case e: java.util.ConcurrentModificationException =>
+      fs.delete(staging, true); throw e
     }
   }
 
+  /** Publish a row-level operation: orphan sweep, optimistic-concurrency
+    * check, publish + commit, then the table-type follow-up. COW keeps
+    * its no-deltas contract (read-optimized == snapshot): data deltas
+    * compact their partitions — the key closure takes the old base of a
+    * key an update moved — and a tombstone, which masks keys globally,
+    * compacts the table. MOR falls under the inline-compaction debt
+    * policy.
+    */
   private[graft] def rowLevelCommit(instant: String, staging: Path,
       files: Seq[Path], op: String, visible: Set[String],
       extra: Map[String, String] = Map.empty): Unit = timeline.withLock() {
     val stats = try {
       requireReservationLive(instant, s"row-level $op", staging)
-      publishTaskStaged(instant, staging, files,
-        s"row-level $op", kind = "delta", visible, partitionLevel = false)
+      sweepTaskOrphans(staging, files)
+      if (files.isEmpty) { fs.delete(staging, true); Seq.empty }
+      else {
+        val parts = collectStagedStats(staging)
+        checkStagedConflict(instant, s"row-level $op", staging, parts,
+          visible, partitionLevel = false)
+        renameStaged(staging, instant, "delta", parts, routed = false)
+      }
     } catch { case e: Throwable => timeline.releaseReservation(instant); throw e }
     timeline.commit(CommitMeta(instant, op, stats, Seq.empty, extra))
     timeline.releaseReservation(instant)
     if (stats.nonEmpty) {
-      if (_meta.tableType == "cow") {
-        // the COW contract: no outstanding deltas after any write. A
-        // tombstone masks keys globally, so deletes escalate to a full
-        // compaction. Pure data deltas compact their own partitions PLUS
-        // the partitions of base files containing the merged keys: under
-        // the global index an update may have moved a key's partition
-        // value, and once the delta is compacted away nothing would
-        // resolve the stale version still sitting in the old partition's
-        // base file. tagFiles' prune (commit-metadata key ranges and
-        // blooms, then one exact scan of the candidates) keeps this
-        // O(affected files), not O(table).
-        if (stats.exists(_.tombstones > 0)) { compactLocked(); () }
-        else {
-          val deltaKeys = readStats(stats).select(
-            (RecordKeyCol +: _meta.recordKeyFields).distinct.map(col): _*)
-          val mn = stats.map(_.minKey).min
-          val mx = stats.map(_.maxKey).max
-          val hit = tagFiles(deltaKeys, mn, mx,
-            hold(deltaKeys, stats.map(_.numRecords).sum)).files
-            .filterNot(stats.map(_.path).contains(_))
-          val parts = (stats.map(_.partition) ++ hit.map(partitionOf)).toSet
-          compactPartitionsLocked(parts); ()
-        }
-      } else maybeCompactInline()
+      if (_meta.tableType == "cow")
+        compactLocked(if (stats.exists(_.tombstones > 0)) timeline.liveFiles()
+          else scopedFiles(stats.map(_.partition).toSet))
+      else maybeCompactInline()
     }
   }
 
@@ -3380,21 +3384,14 @@ class LakeTable private (val spark: SparkSession, val path: String) {
     */
   private[graft] def dynamicOverwriteCommit(instant: String, staging: Path,
       files: Seq[Path], visible: Set[String]): Unit = timeline.withLock() {
-    require(_meta.partitionFields.nonEmpty,
-      "dynamic partition overwrite requires a partitioned table " +
-        "(unpartitioned tables: use overwrite())")
-    val stats = try {
+    requirePartitioned()
+    try {
       requireReservationLive(instant, "dynamic-partition-overwrite", staging)
-      publishTaskStaged(instant, staging, files,
-        "dynamic-partition-overwrite", kind = "base", visible,
-        partitionLevel = true)
+      sweepTaskOrphans(staging, files)
+      rewriteLocked("overwritepartitions",
+        staged = Some(TaskStaged(instant, staging, visible)))(
+        overwrittenPartitions)
     } catch { case e: Throwable => timeline.releaseReservation(instant); throw e }
-    val parts = stats.map(_.partition).toSet
-    val removed = timeline.liveFiles()
-      .filter(f => parts.contains(f.partition) && f.tombstones == 0)
-      .map(_.path)
-    timeline.commit(
-      CommitMeta(instant, "overwritepartitions", stats, removed))
     timeline.releaseReservation(instant)
   }
 }

@@ -3,7 +3,6 @@ package graft.lake
 import graft.util.Sessions
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -62,15 +61,11 @@ class KeyBloomSpec extends AnyFunSuite with BeforeAndAfterAll {
     // every file's range spans k000..k089 — range pruning is useless here
     assert(live.forall(f => f.minKey <= "k002" && f.maxKey >= "k087"))
     // keys 3 and 6 are both ≡ 0 (mod 3): only commit 1's file holds them
-    val keys = df(Seq(("k003", 2L, 0.0), ("k006", 2L, 0.0)))
-      .select(concat(col("id")).as(LakeTable.RecordKeyCol))
-    val kept = t.bloomPrune(live, keys, 2L)
+    val kept = t.bloomPrune(live, Array("k003", "k006"))
     assert(kept.size == 1)
     val conf = spark.sessionState.newHadoopConf()
     assert(KeyBloom.mayContain(conf, new Path(t.path, kept.head.path),
       Array("k003")))
-    // above the key-count gate the probe is skipped (bulk path)
-    assert(t.bloomPrune(live, keys, LakeTable.BloomProbeMaxKeys + 1) == live)
   }
 
   test("upsert across interleaved commits stays correct with bloom tagging") {

@@ -542,6 +542,28 @@ class LakeCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(t.snapshotAsOf(t.timeline.instants().head).count() == 3)
   }
 
+  // a key that an upsert moved into the overwritten partition goes with
+  // it: MOR must not bring back its older version from the partition it
+  // left (COW already rewrote that file on the upsert)
+  Seq("mor", "cow").foreach { tt =>
+    test(s"$tt: dynamic INSERT OVERWRITE drops a key that moved into the partition") {
+      spark.sql("CREATE NAMESPACE IF NOT EXISTS lake.mv")
+      spark.sql(
+        s"""CREATE TABLE lake.mv.$tt (id INT, ts BIGINT, part STRING, v DOUBLE)
+           |PARTITIONED BY (part)
+           |OPTIONS ('recordkey.field' 'id', 'precombine.field' 'ts',
+           |         'table.type' '$tt')""".stripMargin)
+      spark.sql(s"INSERT INTO lake.mv.$tt VALUES (1, 10, 'a', 1.0), (2, 10, 'a', 2.0)")
+      spark.sql(s"INSERT INTO lake.mv.$tt VALUES (1, 20, 'b', 11.0)")
+      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+      try spark.sql(s"INSERT OVERWRITE lake.mv.$tt VALUES (5, 90, 'b', 5.0)")
+      finally spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+      assert(spark.sql(s"SELECT id, part FROM lake.mv.$tt ORDER BY id").collect()
+        .map(r => (r.getInt(0), r.getString(1))).toSeq ==
+        Seq((2, "a"), (5, "b")))
+    }
+  }
+
   test("catalog and library APIs see one table state") {
     spark.sql("CREATE NAMESPACE IF NOT EXISTS lake.x")
     spark.sql(
